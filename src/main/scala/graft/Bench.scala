@@ -26,6 +26,14 @@ object Bench {
     * the choice is stamped into the artifact either way. */
   def shmLocalDir(): Option[String] = graft.core.ScratchDir.shm("graft-shuffle")
 
+  /** `v` as a JSON number with `decimals` places. Locale.ROOT because the
+    * bench lines are parsed as JSON, and a comma-decimal default locale
+    * would print "0,1234"; JSON has no NaN or Infinity, so a non-finite
+    * value is written as null. */
+  private[graft] def jsonNum(v: Double, decimals: Int): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -107,11 +115,10 @@ object Bench {
         reps += once()
       }
       val effPart = if (eff >= 0)
-        "," + "\"eff\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(eff))
+        "," + "\"eff\":" + jsonNum(eff, 2)
       else ""
       qdetail(q.name) =
-        "{\"reps\":" + reps.map(r => String.format(java.util.Locale.ROOT, "%.3f",
-          Double.box(r._1))).mkString("[", ",", "]") +
+        "{\"reps\":" + reps.map(r => jsonNum(r._1, 3)).mkString("[", ",", "]") +
         ",\"gc_ms\":" + reps.map(_._2).mkString("[", ",", "]") + effPart + "}"
       q.name -> reps.map(_._1).min
     }
@@ -650,17 +657,9 @@ object Bench {
 
     effCoresPost = effectiveCores(cpus.toInt)._1
 
-    // Locale.ROOT formatting: the line is parsed as JSON by the driver, and
-    // f"%.4f" under a comma-decimal default locale would emit "0,1234"
-    def fmt4(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    def fmt0(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.0f", Double.box(v))
     def j(d: Iterable[(String, Double)]) =
-      d.map { case (k, v) => "\"" + k + "\":" + fmt4(v) }.mkString("{", ",", "}")
+      d.map { case (k, v) => "\"" + k + "\":" + jsonNum(v, 4) }.mkString("{", ",", "}")
     val qs = j(results)
-    def fmt3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // compact per-op record (r8 verdict item 3: the artifact of record
     // must distinguish a slow op from a slow mode) — but the final stdout
     // line must stay inside the driver's 2000-char tail window (ADVICE r9:
@@ -672,19 +671,18 @@ object Bench {
     val opsJson = ops.map { case (k, rec) =>
       val spread = rec.reps.max / math.max(rec.reps.min, 1e-9)
       val repsPart = if (spread > 1.5)
-        ",\"reps\":" + rec.reps.map(v =>
-          String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))).mkString("[", ",", "]")
+        ",\"reps\":" + rec.reps.map(jsonNum(_, 2)).mkString("[", ",", "]")
       else ""
       val attPart = if (rec.attempts > 1) s""",\"att\":${rec.attempts}""" else ""
-      "\"" + k + "\":{\"sec\":" + fmt4(rec.sec) + ",\"cells_per_s\":" + fmt0(rec.thr) +
+      "\"" + k + "\":{\"sec\":" + jsonNum(rec.sec, 4) + ",\"cells_per_s\":" + jsonNum(rec.thr, 0) +
         repsPart + attPart + "}"
     }.mkString("{", ",", "}")
     val opsJsonFull = ops.map { case (k, rec) =>
       val routePart = if (rec.route.nonEmpty) ",\"route\":\"" + rec.route + "\"" else ""
-      "\"" + k + "\":{\"sec\":" + fmt4(rec.sec) + ",\"cells_per_s\":" + fmt0(rec.thr) +
-        ",\"reps\":" + rec.reps.map(fmt4).mkString("[", ",", "]") +
+      "\"" + k + "\":{\"sec\":" + jsonNum(rec.sec, 4) + ",\"cells_per_s\":" + jsonNum(rec.thr, 0) +
+        ",\"reps\":" + rec.reps.map(jsonNum(_, 4)).mkString("[", ",", "]") +
         ",\"gc_ms_reps\":" + rec.gcReps.mkString("[", ",", "]") +
-        ",\"eff_pre\":" + fmt3(rec.effPre) + ",\"eff_post\":" + fmt3(rec.effPost) +
+        ",\"eff_pre\":" + jsonNum(rec.effPre, 3) + ",\"eff_post\":" + jsonNum(rec.effPost, 3) +
         ",\"attempts\":" + rec.attempts + routePart + "}"
     }.mkString("{", ",", "}")
     // G1 region size honesty (r8 verdict item 2): the build.sbt fork flag
@@ -697,12 +695,12 @@ object Bench {
         .find(_.startsWith("-XX:G1HeapRegionSize="))
         .map(_.stripPrefix("-XX:G1HeapRegionSize=")).getOrElse("default")
     }
-    val total = fmt4(results.map(_._2).sum)
+    val total = jsonNum(results.map(_._2).sum, 4)
     // agg_rate in iters/µs: the frequency-honest all-core throughput probe
-    val eff = s""""eff_cores":${fmt4(effCores)},"eff_cores_post":${fmt4(effCoresPost)},""" +
+    val eff = s""""eff_cores":${jsonNum(effCores, 4)},"eff_cores_post":${jsonNum(effCoresPost, 4)},""" +
       s""""conf_cores":$cpus,"quiet_waits":$waits,"g1_region":"$g1Region",""" +
       s""""local_dir":"${localDir.fold("default")(_ => "shm")}",""" +
-      s""""agg_rate":${fmt4(aggRate * 1000)},"single_rate":${fmt4(singleRate * 1000)}"""
+      s""""agg_rate":${jsonNum(aggRate * 1000, 4)},"single_rate":${jsonNum(singleRate * 1000, 4)}"""
     // the scale-soak record (graft.ScaleSoak: 1×/10×/30× wall + shuffle
     // bytes for the LSH/pack/halo pipelines) rides along in the full
     // artifact when present — it is run per-round by hand, not per-bench
@@ -729,7 +727,7 @@ object Bench {
     // final line carries queries + compact ops and the soak/query_reps
     // diagnostics stay in the earlier full line and bench_full.json.
     val qsCompact = results.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+      "\"" + k + "\":" + jsonNum(v, 2)
     }.mkString("{", ",", "}")
     try {
       // stamped per core count (r11 verdict item 3: the 8-core scaling run

@@ -87,7 +87,11 @@ object Graft {
     * row (/root/reference/imops/measure.py:33-137). `connectivity` 1..3
     * maps to cc3d 6/18/26 like the reference; cross-tile merge shuffles
     * O(surface), never O(volume). Returns (global flat index, label) with
-    * the kernel's scan-order label numbering. */
+    * the kernel's scan-order label numbering.
+    *
+    * The result materializes eagerly: it is computed before this returns
+    * and persisted `MEMORY_AND_DISK`. The caller owns that cache and must
+    * `unpersist()` the returned frame when done with it. */
   def labelVolume(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile3],
                   tileSize: Int, grid: Array[Int], connectivity: Int = 1)
                  : org.apache.spark.sql.DataFrame =
@@ -98,7 +102,10 @@ object Graft {
     * over tiled boolean masks. `connectivity` 1 (cross, skimage conn-1) or
     * 2 (8-adjacency); conn-1 merges tiles with the cheaper face-key
     * equi-join, conn-2 with the shell-probe exchange (corner cells of four
-    * tiles can meet diagonally). Shuffle O(perimeter), never O(area). */
+    * tiles can meet diagonally). Shuffle O(perimeter), never O(area).
+    *
+    * Like [[labelVolume]], the result materializes eagerly, persisted
+    * `MEMORY_AND_DISK`; the caller must `unpersist()` the returned frame. */
   def labelImage(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile],
                  tileSize: Int, gridRows: Int, gridCols: Int, connectivity: Int = 1)
                 : org.apache.spark.sql.DataFrame =

@@ -139,21 +139,9 @@ object GraphCC {
           .persist(StorageLevel.MEMORY_AND_DISK)
         if (contracted.count() <= LocalFinishEdges) {
           val merge = {
-            val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-            def find(x: Long): Long = {
-              var r = x
-              while (parent(r) != r) r = parent(r)
-              var c = x
-              while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-              r
-            }
-            contracted.collect().foreach { case (a, b) =>
-              if (!parent.contains(a)) parent(a) = a
-              if (!parent.contains(b)) parent(b) = b
-              val ra = find(a); val rb = find(b)
-              if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-            }
-            parent.keysIterator.map(l => (l, find(l))).toMap
+            val uf = new MinUnionFind
+            contracted.collect().foreach { case (a, b) => uf.union(a, b) }
+            uf.roots.toMap
           }
           contracted.unpersist(blocking = false)
           val bc = spark.sparkContext.broadcast(merge)
@@ -186,26 +174,39 @@ object GraphCC {
     // collapse upstream vertex/edge GENERATION into the single task;
     // the bounded input (≤1M vertices + ≤5M edges) is cheap to exchange
     combined.coalesce(1, shuffle = true).mapPartitions { it =>
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
-      def union(a: Long, b: Long): Unit = {
-        add(a); add(b)
-        val ra = find(a); val rb = find(b)
-        // union by min id so the root IS the component minimum
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
+      val uf = new MinUnionFind
       it.foreach {
-        case Left(v) => add(v)
-        case Right((a, b)) => union(a, b)
+        case Left(v) => uf.add(v)
+        case Right((a, b)) => uf.union(a, b)
       }
-      parent.keysIterator.map(v => (v, find(v))).toSeq.iterator
+      uf.roots.toSeq.iterator
     }
   }
+}
+
+/** Union-find over long ids with path compression, united by minimum id so
+  * every root IS its component's minimum member. Shared by GraphCC's
+  * single-task and contraction finishes and DistributedLabel's driver
+  * route. */
+private[operators] final class MinUnionFind {
+  private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+  def add(x: Long): Unit = if (!parent.contains(x)) parent(x) = x
+
+  private def find(x: Long): Long = {
+    var r = x
+    while (parent(r) != r) r = parent(r)
+    var c = x
+    while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+    r
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    add(a); add(b)
+    val ra = find(a); val rb = find(b)
+    if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+  }
+
+  /** (member, component minimum) for every id added so far. */
+  def roots: Iterator[(Long, Long)] = parent.keysIterator.map(v => (v, find(v)))
 }

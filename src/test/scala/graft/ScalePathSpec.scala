@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.{HullKernel, Interp2dKernel, LabelKernel, StencilKernel}
-import graft.operators.{DistributedLabel, TiledStencil}
+import graft.operators.{DistributedLabel, GraphCC, TiledStencil}
 import graft.operators.TiledStencil.Tile
 
 class HullKernelSpec extends AnyFunSuite {
@@ -156,84 +156,94 @@ class DistributedLabelSpec extends AnyFunSuite {
   private implicit val spark: org.apache.spark.sql.SparkSession = SharedSpark.spark
   import spark.implicits._
 
-  test("tiled labeling matches the single-node kernel exactly") {
-    val rng = new scala.util.Random(33)
-    val (rows, cols, ts) = (32, 32, 16)
-    val mask = Array.fill(rows * cols)(rng.nextInt(3) > 0) // dense-ish, cross-tile comps
-    val tiles = TiledStencil.tile(mask, rows, cols, ts).toDS()
-    val got = DistributedLabel(tiles, ts, rows / ts, cols / ts)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  /** A boolean mask of shape `dims` cut into `ts`-sided tiles, labeled at
+    * `conn`; 2-D and 3-D masks take the matching DistributedLabel form. */
+  private final class LabelCase(val name: String, val mask: Array[Boolean], val dims: Array[Int],
+                                val ts: Int, val conn: Int) {
+    def grid: Array[Int] = dims.map(_ / ts)
 
-    val ref = LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0),
-      Array(rows, cols), connectivity = 1)
-    val expected = ref.labels.zipWithIndex.collect {
-      case (lb, i) if lb != 0 => i.toLong -> lb
-    }.toMap
+    /** (global flat index -> label) through DistributedLabel with the
+      * driver route's component cutoff `localCutoff` (0 forces the
+      * distributed route); the result is unpersisted after collecting. */
+    def labels(localCutoff: Long = GraphCC.LocalVertexCutoff): Map[Long, Long] = {
+      val df =
+        if (dims.length == 2)
+          DistributedLabel.label2(TiledStencil.tile(mask, dims(0), dims(1), ts).toDS(), ts,
+            grid(0), grid(1), conn, localCutoff)
+        else
+          DistributedLabel.label3(TiledStencil.tile3(mask, dims, ts).toDS(), ts, grid, conn,
+            localCutoff)
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      df.unpersist(blocking = true)
+      got
+    }
+
+    def kernel: Map[Long, Long] =
+      LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0), dims, connectivity = conn)
+        .labels.zipWithIndex.collect { case (lb, i) if lb != 0 => i.toLong -> lb }.toMap
+  }
+
+  private def randomCase(name: String, seed: Int, dims: Array[Int], ts: Int, conn: Int)
+                        (keep: scala.util.Random => Boolean): LabelCase = {
+    val rng = new scala.util.Random(seed)
+    new LabelCase(name, Array.fill(dims.product)(keep(rng)), dims, ts, conn)
+  }
+
+  // dense-ish, cross-tile comps
+  private val dense2 = randomCase("2-D conn 1", 33, Array(32, 32), 16, 1)(_.nextInt(3) > 0)
+  private val dense3 = randomCase("3-D conn 1", 91, Array(16, 16, 16), 8, 1)(_.nextInt(3) > 0)
+  // sparse mask: diagonal tile-corner merges must actually decide
+  // components for this to discriminate
+  private val sparse2 = randomCase("2-D conn 2", 17, Array(32, 32), 16, 2)(_.nextInt(4) == 0)
+  // sparse mask so edge/corner adjacency actually decides components —
+  // a dense mask converges to one blob under 18/26-adjacency and would
+  // pass even with a broken shell-probe exchange
+  private val sparse3 = Seq(2, 3).map(conn =>
+    randomCase(s"3-D conn $conn", 7, Array(16, 16, 16), 8, conn)(_.nextInt(5) == 0))
+  private val lines = {
+    val (rows, cols) = (32, 32)
+    val mask = new Array[Boolean](rows * cols)
+    for (j <- 0 until cols) mask(15 * cols + j) = true   // horizontal line row 15
+    for (i <- 0 until rows) mask(i * cols + 20) = true   // vertical line col 20
+    new LabelCase("spanning lines", mask, Array(rows, cols), 16, 1)
+  }
+
+  test("tiled labeling matches the single-node kernel exactly") {
+    val got = dense2.labels()
+    val expected = dense2.kernel
     assert(got.size == expected.size)
     assert(got == expected)
   }
 
   test("3-D tiled labeling matches the single-node kernel exactly") {
-    val rng = new scala.util.Random(91)
-    val dims = Array(16, 16, 16)
-    val ts = 8
-    val mask = Array.fill(dims.product)(rng.nextInt(3) > 0)
-    val tiles = TiledStencil.tile3(mask, dims, ts).toDS()
-    val got = DistributedLabel.apply3(tiles, ts, dims.map(_ / ts))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ref = LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0), dims, connectivity = 1)
-    val expected = ref.labels.zipWithIndex.collect {
-      case (lb, i) if lb != 0 => i.toLong -> lb
-    }.toMap
-    assert(got == expected)
+    assert(dense3.labels() == dense3.kernel)
   }
 
   test("2-D tiled labeling at connectivity 2 (8-adjacency) matches the kernel") {
-    // sparse mask: diagonal tile-corner merges must actually decide
-    // components for this to discriminate
-    val rng = new scala.util.Random(17)
-    val (rows, cols, ts) = (32, 32, 16)
-    val mask = Array.fill(rows * cols)(rng.nextInt(4) == 0)
-    val tiles = TiledStencil.tile(mask, rows, cols, ts).toDS()
-    val got = DistributedLabel(tiles, ts, rows / ts, cols / ts, connectivity = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ref = LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0),
-      Array(rows, cols), connectivity = 2)
-    val expected = ref.labels.zipWithIndex.collect {
-      case (lb, i) if lb != 0 => i.toLong -> lb
-    }.toMap
-    assert(got == expected)
+    assert(sparse2.labels() == sparse2.kernel)
   }
 
   test("3-D tiled labeling at connectivity 2 and 3 matches the kernel") {
-    // sparse mask so edge/corner adjacency actually decides components —
-    // a dense mask converges to one blob under 18/26-adjacency and would
-    // pass even with a broken shell-probe exchange
-    val rng = new scala.util.Random(7)
-    val dims = Array(16, 16, 16)
-    val ts = 8
-    val mask = Array.fill(dims.product)(rng.nextInt(5) == 0)
-    val tiles = TiledStencil.tile3(mask, dims, ts).toDS()
-    for (conn <- Seq(2, 3)) {
-      val got = DistributedLabel.apply3(tiles, ts, dims.map(_ / ts), connectivity = conn)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ref = LabelKernel.label(mask.map(b => if (b) 1.0 else 0.0), dims, connectivity = conn)
-      val expected = ref.labels.zipWithIndex.collect {
-        case (lb, i) if lb != 0 => i.toLong -> lb
-      }.toMap
-      assert(got == expected, s"connectivity $conn mismatch")
-    }
+    for (c <- sparse3) assert(c.labels() == c.kernel, s"${c.name} mismatch")
   }
 
   test("components spanning many tiles merge to one label") {
-    val (rows, cols, ts) = (32, 32, 16)
-    val mask = new Array[Boolean](rows * cols)
-    for (j <- 0 until cols) mask(15 * cols + j) = true   // horizontal line row 15
-    for (i <- 0 until rows) mask(i * cols + 20) = true   // vertical line col 20
-    val tiles = TiledStencil.tile(mask, rows, cols, ts).toDS()
-    val labels = DistributedLabel(tiles, ts, rows / ts, cols / ts)
-      .select("label").distinct().collect().map(_.getLong(0))
-    assert(labels.length == 1 && labels(0) == 1L)
+    val labels = lines.labels().values.toSet
+    assert(labels == Set(1L))
+  }
+
+  test("driver and distributed merge routes give identical labels on every mask") {
+    // every mask above resolves on the driver route by default;
+    // localCutoff 0 sends it through the GraphCC fixpoint and the
+    // distributed densify instead
+    val empty = new LabelCase("all-false 3-D", new Array[Boolean](16 * 16 * 16),
+      Array(16, 16, 16), 8, 1)
+    for (c <- Seq(dense2, sparse2, dense3) ++ sparse3 ++ Seq(lines, empty)) {
+      val driver = c.labels()
+      val distributed = c.labels(localCutoff = 0L)
+      assert(driver == distributed, s"${c.name}: routes disagree")
+      assert(driver == c.kernel, s"${c.name}: driver route != kernel")
+    }
   }
 
   test("intermediate caches are released; only the result frame stays persisted") {
@@ -241,23 +251,31 @@ class DistributedLabelSpec extends AnyFunSuite {
     // RDDs for the session lifetime (the r11 shape leaked the pixel frame
     // and, at conn >= 2, the shell frame per call). The result itself is
     // persisted by contract (it materializes eagerly) — so after N calls
-    // exactly N result-backing entries may remain, which callers release
+    // at most N result-backing entries may remain, which callers release
     // by unpersisting the returned frame.
+    def persistedCount = spark.sparkContext.getPersistentRDDs.size
+    def check(what: String)(call: () => org.apache.spark.sql.DataFrame): Unit = {
+      val n = 3
+      val before = persistedCount
+      val results = Seq.fill(n)(call())
+      results.foreach(_.count())
+      val after = persistedCount
+      assert(after - before <= n,
+        s"$what: expected at most the $n result frames to stay cached, " +
+          s"but $before -> $after persisted RDDs")
+      results.foreach(_.unpersist(blocking = true))
+    }
     val rng = new scala.util.Random(3)
     val (rows, cols, ts) = (32, 32, 16)
     val mask = Array.fill(rows * cols)(rng.nextInt(3) > 0)
     val tiles = TiledStencil.tile(mask, rows, cols, ts).toDS()
-    def persistedCount = spark.sparkContext.getPersistentRDDs.size
-    val before = persistedCount
-    val res1 = DistributedLabel(tiles, ts, rows / ts, cols / ts, connectivity = 2)
-    val res2 = DistributedLabel(tiles, ts, rows / ts, cols / ts, connectivity = 2)
-    res1.count(); res2.count()
-    val after = persistedCount
-    assert(after - before <= 2,
-      s"expected at most the two result frames to stay cached, " +
-        s"but $before -> $after persisted RDDs")
-    res1.unpersist(blocking = true)
-    res2.unpersist(blocking = true)
+    check("2-D conn 2")(() => DistributedLabel(tiles, ts, rows / ts, cols / ts, connectivity = 2))
+    // the benchmark's shape: apply3 at connectivity 1, on both routes
+    val tiles3 = TiledStencil.tile3(dense3.mask, dense3.dims, dense3.ts).toDS()
+    check("3-D conn 1, driver route")(() =>
+      DistributedLabel.apply3(tiles3, dense3.ts, dense3.grid))
+    check("3-D conn 1, distributed route")(() =>
+      DistributedLabel.label3(tiles3, dense3.ts, dense3.grid, 1, localCutoff = 0L))
   }
 }
 
