@@ -76,11 +76,14 @@ object Graft {
   /** Slice-distributed 3-D zoom — the cluster path for the reference's
     * headline trilinear volume zoom (/root/reference/README.md:25) when
     * the volume is stored as axis-0 slice rows rather than one array.
-    * Bit-identical to the in-row kernel (VolumeZoomSpec). */
+    * Bit-identical to the in-row kernel (VolumeZoomSpec). Returns the
+    * serialized (id, sid, data) frame: VolumeZoom reuses one output buffer
+    * per stripe group, which only a serialization boundary makes safe for
+    * every consumer (`.rdd`, `collect`, typed operators alike). */
   def zoomVolume(slices: org.apache.spark.sql.Dataset[graft.operators.VolumeZoom.ZSlice],
                  dims: Array[Int], scale: Array[Double], order: Int = 1)
-                : org.apache.spark.sql.Dataset[graft.operators.VolumeZoom.ZSlice] =
-    graft.operators.VolumeZoom(slices, dims, scale, order)(slices.sparkSession)
+                : org.apache.spark.sql.DataFrame =
+    graft.operators.VolumeZoom(slices, dims, scale, order)(slices.sparkSession).toDF()
 
   /** Distributed 3-D connected-components over tiled boolean volumes — the
     * cluster path for the reference's `label` on volumes too large for one
@@ -89,9 +92,9 @@ object Graft {
     * O(surface), never O(volume). Returns (global flat index, label) with
     * the kernel's scan-order label numbering.
     *
-    * The result materializes eagerly: it is computed before this returns
-    * and persisted `MEMORY_AND_DISK`. The caller owns that cache and must
-    * `unpersist()` the returned frame when done with it. */
+    * The result is materialized before this returns (a local checkpoint
+    * that Spark frees once the frame is unreachable); there is nothing to
+    * unpersist. */
   def labelVolume(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile3],
                   tileSize: Int, grid: Array[Int], connectivity: Int = 1)
                  : org.apache.spark.sql.DataFrame =
@@ -104,8 +107,8 @@ object Graft {
     * equi-join, conn-2 with the shell-probe exchange (corner cells of four
     * tiles can meet diagonally). Shuffle O(perimeter), never O(area).
     *
-    * Like [[labelVolume]], the result materializes eagerly, persisted
-    * `MEMORY_AND_DISK`; the caller must `unpersist()` the returned frame. */
+    * Like [[labelVolume]], the result is materialized before this returns;
+    * there is nothing to unpersist. */
   def labelImage(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile],
                  tileSize: Int, gridRows: Int, gridCols: Int, connectivity: Int = 1)
                 : org.apache.spark.sql.DataFrame =
@@ -557,14 +560,18 @@ object Graft {
   /** Per-vertex triangle counts over an undirected edge list — community /
     * spam-density signal for graph-shaped curation (link graphs, citation
     * graphs, the co-activity graph the PageRank facade consumes). See
-    * operators.TriangleCount for the degree-ordered O(m^1.5) bound. */
+    * operators.TriangleCount for the degree-ordered O(m^1.5) bound. The
+    * result is materialized before this returns; there is nothing to
+    * unpersist. */
   def triangleCounts(edges: org.apache.spark.sql.DataFrame, srcCol: String,
                      dstCol: String): org.apache.spark.sql.DataFrame =
     graft.operators.TriangleCount(edges, srcCol, dstCol)
 
   /** k-core of an undirected edge list: iterative peel to the maximal
     * subgraph of min-degree k (density filter — see operators.KCore for
-    * the per-round shuffle shape and the maxRounds cap semantics). */
+    * the per-round shuffle shape and the maxRounds cap semantics). The
+    * result is materialized before this returns; there is nothing to
+    * unpersist. */
   def kCore(edges: org.apache.spark.sql.DataFrame, srcCol: String,
             dstCol: String, k: Int): org.apache.spark.sql.DataFrame =
     graft.operators.KCore(edges, srcCol, dstCol, k)
@@ -1042,8 +1049,8 @@ object Graft {
         TextFunctions.bpeMergeUdf(col("syms"), lit(top._1), lit(top._2)))
     }
     // the returned frame is built from the collected rules, not the vocab
-    // plan — safe to release the iteration cache here (bpeEncodeCounts
-    // cannot: its output still references the segmented vocab)
+    // plan — safe to release the iteration cache here (bpeEncodeCounts'
+    // output still reads its vocab, which it checkpoints instead)
     vocab0.unpersist()
     out.toSeq.toDF("round", "pair_a", "pair_b", "pair_count")
   }
@@ -1061,11 +1068,14 @@ object Graft {
     import s.implicits._
     val occurrences = docs.select(col(idCol),
       explode(filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")).as("term"))
+    // the returned plan still reads the vocab, so it is checkpointed (its
+    // first merge round materializes it), not cached: Spark frees it with
+    // the returned frame
     var vocab = occurrences
       .groupBy("term").agg(count(lit(1)).as("wc"))
       .withColumn("syms",
         expr("transform(sequence(0, length(term)-1), i -> substr(term, i+1, 1))"))
-      .persist()
+      .localCheckpoint(eager = false)
     for (_ <- 1 to merges) {
       val top = vocab.where(size(col("syms")) >= 2)
         .select(col("wc"), explode(expr(

@@ -114,7 +114,7 @@ object ZoomExpr {
       UnsafeArrayData.fromPrimitiveArray(d), UnsafeArrayData.fromPrimitiveArray(s)))
   }
 
-  /** Column form mirroring `zoomUdf`: struct(_1 = data, _2 = shape). */
+  /** Column form of [[ZoomExpr]]: struct(_1 = data, _2 = shape). */
   def zoomCol(data: Column, shape: Column, scale: Column,
               order: Column, cval: Column): Column =
     GraftColumnBridge.column(ZoomExpr(

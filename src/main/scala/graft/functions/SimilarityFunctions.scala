@@ -305,14 +305,16 @@ object SimilarityFunctions {
       .select(col(idCol).cast("long"), col(embCol).cast("array<double>"))
       .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
     // the assignment feeds BOTH self-join sides, the component vertex set,
-    // and the final label join — cache it or the row-local fold
+    // and the final label join — checkpoint it or the row-local fold
     // re-executes four times (an 8× shuffle tail in the scale soak before
-    // this). Assignment itself is assignBest's map-only fold: no N·k row
-    // expansion, no sort, no spill (see assignBest's scaladoc for the two
-    // argmax shapes this replaced and their measured spill).
+    // this); lazily, so its first reader materializes it, and locally, so
+    // Spark frees it with the returned frame. Assignment itself is
+    // assignBest's map-only fold: no N·k row expansion, no sort, no spill
+    // (see assignBest's scaladoc for the two argmax shapes this replaced
+    // and their measured spill).
     val cells = assignBest(
       corpus.select(col(idCol).as("vec_id"), col(embCol).as("ce")), cenArr)
-      .cache()
+      .localCheckpoint(eager = false)
     semDedupFinish(cells, tau, cellCap)
   }
 
@@ -343,7 +345,7 @@ object SimilarityFunctions {
         graft.exprs.NearestCentroidByCell.best(col("ce"), col("cid"), idx.fineByCell))
       .select(col("vec_id"), col("ce"),
         col("fb.fid").as("cid"), col("fb.fcos").as("ccos"))
-      .cache()
+      .localCheckpoint(eager = false)
     semDedupFinish(cells, tau, cellCap)
   }
 

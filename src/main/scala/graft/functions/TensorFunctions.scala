@@ -12,9 +12,11 @@ import graft.kernels._
   *    higher-order functions (codegen'd, stays inside WholeStageCodegen) for
   *    everything expressible: pointwise math, pad/crop/slice, fill/full.
   *  - "kernel" — Scala UDFs over the pure kernels in `graft.kernels` for the
-  *    ops Spark genuinely can't express (zoom, stencil morphology, label,
-  *    EDT, radon). These are the analog of the reference's Cython backend;
-  *    parallelism is the DataFrame row axis.
+  *    ops Spark genuinely can't express (zoom-to-shape, stencil morphology,
+  *    label, EDT, convex hull). These are the analog of the reference's
+  *    Cython backend; parallelism is the DataFrame row axis. Zoom, interp1d,
+  *    center-of-mass partials and radon run as codegen'd expressions in
+  *    `graft.exprs` instead.
   */
 object TensorFunctions {
 
@@ -94,22 +96,8 @@ object TensorFunctions {
 
   // ---------- kernel path: UDFs over graft.kernels ----------
 
-  /** zoom on an n-d tensor row; returns struct(data, shape).
-    * Semantics: /root/reference/imops/src/_zoom.pyx via ZoomKernel. */
-  val zoomUdf = udf { (data: Array[Double], shape: Array[Int], scale: Array[Double], order: Int, cval: Double) =>
-    ZoomKernel.zoom(data, shape, scale, order, cval)
-  }
-
   val zoomToShapeUdf = udf { (data: Array[Double], shape: Array[Int], target: Array[Int], order: Int) =>
     ZoomKernel.zoomToShape(data, shape, target, order, 0.0)
-  }
-
-  /** interp1d over per-row (xs, ys, xq) arrays — the whole-array form;
-    * the distributed/tabular form is graft.operators.Interp1dJoin. */
-  val interp1dUdf = udf { (xs: Array[Double], ys: Array[Double], xq: Array[Double],
-                           extrapolate: Boolean, fillValue: Double) =>
-    Interp1dKernel(xs, ys, xq,
-      Interp1dKernel.Opts(extrapolate = extrapolate, fillValue = fillValue))
   }
 
   val erodeUdf = udf { (data: Array[Boolean], shape: Array[Int]) =>
@@ -157,49 +145,8 @@ object TensorFunctions {
     EdtKernel.edtFeature(mask, shape, sampling)._2
   }
 
-  /** Per-row center-of-mass partials for a 2-D slice at batch index
-    * `sliceIdx` of a stacked volume: (Σw, Σw·slice, Σw·row, Σw·col).
-    * The reference's prange partial-sum reduction
-    * (/root/reference/imops/src/_measure.pyx:73-91) maps to per-row partials
-    * + a final hash-agg merge — map-side combine comes for free. */
-  val comPartialsUdf = udf { (data: Array[Double], rows: Int, cols: Int, sliceIdx: Long) =>
-    var sw = 0.0; var swi = 0.0; var swj = 0.0; var swk = 0.0
-    var i = 0
-    while (i < rows) {
-      var rowW = 0.0; var rowWj = 0.0
-      var j = 0
-      val base = i * cols
-      while (j < cols) {
-        val w = data(base + j)
-        rowW += w; rowWj += w * j
-        j += 1
-      }
-      sw += rowW; swi += rowW * i; swj += rowWj
-      i += 1
-    }
-    swk = sw * sliceIdx
-    (sw, swk, swi, swj) // (Σw, Σw·slice, Σw·row, Σw·col)
-  }
-
   /** convex_hull_image of one 2-D mask row (morphology.py:524-591). */
   val hullUdf = udf { (mask: Array[Boolean], shape: Array[Int]) =>
     HullKernel.convexHullImage(mask, shape)
-  }
-
-  /** forward radon of one square slice (row-major size*size data);
-    * returns row-major (size x nAngles) sinogram. */
-  val radonUdf = udf { (data: Array[Double], sizeN: Int, thetaDeg: Array[Double]) =>
-    RadonKernel.radonSlice(data, sizeN, thetaDeg)
-  }
-
-  /** radon with `return_fill=True` (radon.py:99-101): also returns the
-    * constant value found outside the inscribed circle. */
-  val radonWithFillUdf = udf { (data: Array[Double], sizeN: Int, thetaDeg: Array[Double]) =>
-    val (_, fill) = RadonKernel.validateCircle(data, sizeN)
-    (RadonKernel.radonSlice(data, sizeN, thetaDeg), fill)
-  }
-
-  val inverseRadonUdf = udf { (sino: Array[Double], sizeN: Int, thetaDeg: Array[Double], fillValue: Double) =>
-    RadonKernel.inverseRadonSlice(sino, sizeN, thetaDeg, fillValue)
   }
 }

@@ -37,9 +37,10 @@ import graft.operators.TiledStencil.Tile
   * and border/shell rows emit from a single kernel pass into one cached
   * tagged frame (the r11 shape ran the union-find kernel and the tile
   * source scan twice per query, once for pixels and once for borders).
-  * The result materializes eagerly, persisted MEMORY_AND_DISK, and every
-  * intermediate cache is released before returning (the TriangleCount/
-  * GraphCC release policy); the caller unpersists the result.
+  * The result is an eager `localCheckpoint`: it is materialized before the
+  * call returns, reads none of the intermediates (each is released before
+  * returning), and Spark frees its blocks once the frame is unreachable —
+  * there is nothing for the caller to unpersist.
   */
 object DistributedLabel {
 
@@ -55,7 +56,8 @@ object DistributedLabel {
   /** Runs the two-level scheme over a single-pass tagged emission frame:
     * caches it, counts its component and border rows, resolves the merge
     * graph that `edgesOf` builds from the border rows on the route those
-    * counts pick, relabels the pixel rows and releases every intermediate.
+    * counts pick, checkpoints the relabeled pixel rows and releases every
+    * intermediate.
     * `edgesPerRow` bounds the edges one border row can yield, so
     * `border rows × edgesPerRow` bounds the edge count without running
     * the join. */
@@ -94,8 +96,7 @@ object DistributedLabel {
     val res = tagged.where(col("kind") === 0)
       .join(repLabel, Seq("rep"))
       .select(col("a").as("g"), col("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    res.count()
+      .localCheckpoint()
     labels.foreach(_.unpersist(blocking = false))
     tagged.unpersist(blocking = false)
     res

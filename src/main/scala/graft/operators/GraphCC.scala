@@ -15,7 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * labels over edges AND follows the relaxed label one extra hop
   * (label(label(v))), collapsing chain-shaped components in
   * O(log diameter) rounds. Rounds are localCheckpoint'ed (O(1) lineage)
-  * and superseded backing RDDs unpersisted eagerly.
+  * and superseded label RDDs unpersisted eagerly; the returned RDD is
+  * itself persisted, so one `unpersist` releases it on every route.
   */
 object GraphCC {
 
@@ -99,31 +100,30 @@ object GraphCC {
     val churnTrigger = math.max(50000L, n / 20)
     var lastProbe = Long.MaxValue
     var finished = false
-    // `labels` becomes a mapValues VIEW of each iteration's persisted
-    // `updated` RDD; cleanup must unpersist the live backing RDD itself
-    var backing: RDD[_] = labels
+    // `labels` is always the persisted RDD itself (never a view of one), so
+    // the caller's unpersist reaches it whichever way the loop ends
     while (changed > 0 && !finished) {
       val nbrMin = edges.join(labels)
         .map { case (_, (dst, lbl)) => (dst, lbl) }
         .reduceByKey(part, math.min(_: Long, _: Long))
       val relaxed = labels.leftOuterJoin(nbrMin, part)
-        .mapValues { case (old, nm) => (old, math.min(old, nm.getOrElse(old))) }
+        .mapValues { case (old, nm) => math.min(old, nm.getOrElse(old)) }
         .persist(StorageLevel.MEMORY_AND_DISK)
       // pointer doubling: valid because label values are always existing
       // vertex ids with label(x) <= x (identity init, monotone min updates)
-      val cur = relaxed.mapValues(_._2)
-      val hopped = cur.map { case (r, l) => (l, r) }
-        .join(cur, part)
+      val hopped = relaxed.map { case (r, l) => (l, r) }
+        .join(relaxed, part)
         .map { case (_, (r, l2)) => (r, l2) }
       val updated = relaxed.join(hopped, part)
-        .mapValues { case ((old, _), l2) => (old, l2) }
+        .mapValues(_._2)
         .persist(StorageLevel.MEMORY_AND_DISK)
       updated.localCheckpoint()
-      changed = updated.filter { case (_, (old, nl)) => old != nl }.count()
-      labels = updated.mapValues(_._2)
+      // both sides share `part`, so this join is narrow: the count job
+      // materializes `updated` and compares it with last round's labels
+      changed = labels.join(updated, part).filter { case (_, (old, nl)) => old != nl }.count()
       relaxed.unpersist(blocking = false)
-      backing.unpersist(blocking = false)
-      backing = updated
+      labels.unpersist(blocking = false)
+      labels = updated
       // shrink-then-finish: hand the contracted residual graph to a
       // driver-local union-find once churn is low AND the residual is
       // provably small — one edge pass + one broadcast map replaces the
@@ -149,8 +149,7 @@ object GraphCC {
             .persist(StorageLevel.MEMORY_AND_DISK)
           fin.localCheckpoint()
           fin.count()
-          backing.unpersist(blocking = false)
-          backing = fin
+          labels.unpersist(blocking = false)
           labels = fin
           finished = true
         } else contracted.unpersist(blocking = false)

@@ -82,14 +82,13 @@ object KCore {
         spark.sparkContext.parallelize(deg.toSeq.map { case (u, d) => Row(u, d) }, 1),
         outSchema)
     } else {
-      // converged distributedly (or hit the round cap): materialize the
-      // (vertex-sized) result so the edge set can unpersist NOW — keeping
-      // the final edge set cached leaked an edge-scale block per
-      // invocation for the JVM's lifetime
+      // converged distributedly (or hit the round cap): checkpoint the
+      // (vertex-sized) result eagerly so the edge-scale edge set can be
+      // released before returning; Spark frees the checkpoint's own blocks
+      // once the frame is unreachable
       val res = und.select(explode(array(col("a"), col("b"))).as("u"))
         .groupBy("u").agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      res.count()
+        .localCheckpoint()
       und.unpersist()
       res
     }

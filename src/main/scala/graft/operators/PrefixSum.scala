@@ -32,21 +32,22 @@ object PrefixSum {
       .repartitionByRange(numParts, col(keyCol))
       .sortWithinPartitions(keyCol)
       .as[(Long, Long)]
-      .persist() // two passes over the same sorted layout
-    try {
-      val partials = sorted.rdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          var s = 0L; it.foreach(s += _._2); Iterator((pid, s))
-        }
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = partials.scanLeft(0L)(_ + _) // offsets(p) = sum of parts < p
-      val bc = spark.sparkContext.broadcast(offsets)
-      sorted.rdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          var run = bc.value(pid)
-          it.map { case (k, v) => val c = run; run += v; (k, v, c) }
-        }
-        .toDF(keyCol, valueCol, "cum")
-    } finally sorted.unpersist()
+      // two passes over the same sorted layout, the second one in the
+      // returned plan: checkpointed (by the partials job), so the offsets
+      // and the running sums read the same partitions
+      .localCheckpoint(eager = false)
+    val partials = sorted.rdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        var s = 0L; it.foreach(s += _._2); Iterator((pid, s))
+      }
+      .collect().sortBy(_._1).map(_._2)
+    val offsets = partials.scanLeft(0L)(_ + _) // offsets(p) = sum of parts < p
+    val bc = spark.sparkContext.broadcast(offsets)
+    sorted.rdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        var run = bc.value(pid)
+        it.map { case (k, v) => val c = run; run += v; (k, v, c) }
+      }
+      .toDF(keyCol, valueCol, "cum")
   }
 }

@@ -69,15 +69,13 @@ object TriangleCount {
       .select(col("x.u").as("p"), col("x.v").as("v"), col("y.v").as("w"))
     val tri = wedges.join(o.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
       .select(col("p"), col("v"), col("w"))
-    // materialize the (small, O(triangle-vertices)) result so the two
-    // edge-scale persists can be released HERE instead of leaking for the
-    // session lifetime (r11 verdict item 4 — GraphCC's explicit-release
-    // policy): repeated triangleCount calls no longer accumulate cached
-    // edge lists; only the result frame stays cached while referenced.
+    // checkpoint the (small, O(triangle-vertices)) result eagerly so the
+    // two edge-scale persists can be released HERE: the checkpoint cuts
+    // the lineage to them, and Spark frees its own blocks once the frame
+    // is unreachable — the caller has nothing to unpersist.
     val res = tri.select(explode(array(col("p"), col("v"), col("w"))).as("u"))
       .groupBy("u").agg(count(lit(1)).as("n_tri"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.count()
+      .localCheckpoint()
     und.unpersist(blocking = false)
     o.unpersist(blocking = false)
     res

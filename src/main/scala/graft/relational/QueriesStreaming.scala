@@ -68,8 +68,8 @@ object QueriesStreaming {
           .select(col("a_user").as("user_id"), col("a_id"), col("b_id"))
         // inner join: every match emits in the data batch itself; the
         // trailing no-data micro-batch would only evict join state this
-        // throwaway drain never reuses (~1 s of the gate, measured via
-        // SPARK_GRAFT_STREAM_DEBUG) — skip it. An OUTER stream-stream
+        // throwaway drain never reuses (~1 s of the gate, measured from the
+        // query's per-batch progress) — skip it. An OUTER stream-stream
         // join MUST keep it (null-side rows emit on watermark advance).
         StreamingOps.runAvailableNow(joined, "q_stream_join",
           outputMode = "append", noDataBatch = false)

@@ -161,6 +161,13 @@ object StreamingOps {
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   private val jvmToken = java.util.UUID.randomUUID().toString.take(8)
 
+  /** Serializes [[runAvailableNow]]'s scoped session-conf overrides. A
+    * query clones its session (and with it the confs it runs on) inside
+    * `start()`, so only set → start → restore needs the lock; the drains
+    * themselves still run concurrently. Without it two concurrent drains
+    * could restore each other's override and leave it behind. */
+  private val confLock = new Object
+
   /** Drains a streaming DataFrame with `Trigger.AvailableNow` into a memory
     * sink and returns the result as a batch DataFrame. This is the
     * verification harness for the streaming surface: AvailableNow processes
@@ -180,25 +187,6 @@ object StreamingOps {
                       noDataBatch: Boolean = true): DataFrame = {
     val spark = stream.sparkSession
     val table = s"${name}_${runSeq.incrementAndGet()}"
-    // Stateful operators allocate one state-store instance per shuffle
-    // partition per micro-batch; the verification streams carry small
-    // state, so 4 partitions cuts fixed store setup 8x vs the session's
-    // batch setting. Production sizing is data-dependent — this scoped
-    // override applies only while the drain runs (the partition count is
-    // pinned into the query's checkpoint at first batch).
-    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // complete/update drains emit their full/touched result in the data
-    // batch itself; the trailing no-data micro-batch exists to advance the
-    // watermark so APPEND-mode aggregations can finalize — skip it for the
-    // modes that don't need it (one full state round saved per drain).
-    // `noDataBatch = false` lets an APPEND-mode caller opt out too when
-    // its rows provably don't depend on the final watermark advance (the
-    // inner stream-stream join: matches emit in the data batch; the
-    // trailing batch only evicts state the drain is about to discard).
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    if (outputMode != "append" || !noDataBatch)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // memory-sink drains are a verification harness: their checkpoint is
     // throwaway, so keep the per-batch offset/commit/state-delta writes
     // on RAM-backed scratch when available (each micro-batch fsyncs
@@ -216,19 +204,41 @@ object StreamingOps {
         .queryName(table)
         .outputMode(outputMode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val q = ckpt.fold(w0)(c => w0.option("checkpointLocation", c)).start()
-      q.awaitTermination()
-      // drain-floor instrument (r11, opt-in): per-micro-batch duration
-      // breakdown from StreamingQueryProgress, so "where does the ~1 s
-      // per drain go" is answerable from a log instead of argued —
-      // addBatch vs triggerExecution vs state-store commit etc.
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[drain] $table batch=${p.batchId} " +
-            s"durationMs=${p.durationMs} rows=${p.numInputRows} " +
-            s"stateOps=${p.stateOperators.length}")
+      val writer = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
+      val q = confLock.synchronized {
+        // Stateful operators allocate one state-store instance per shuffle
+        // partition per micro-batch; the verification streams carry small
+        // state, so 4 partitions cuts fixed store setup 8x vs the session's
+        // batch setting. Production sizing is data-dependent — this scoped
+        // override applies only to this drain's query (the partition count
+        // is pinned into the query's checkpoint at first batch).
+        val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        // complete/update drains emit their full/touched result in the data
+        // batch itself; the trailing no-data micro-batch exists to advance
+        // the watermark so APPEND-mode aggregations can finalize — skip it
+        // for the modes that don't need it (one full state round saved per
+        // drain). `noDataBatch = false` lets an APPEND-mode caller opt out
+        // too when its rows provably don't depend on the final watermark
+        // advance (the inner stream-stream join: matches emit in the data
+        // batch; the trailing batch only evicts state the drain is about
+        // to discard).
+        val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
+        if (outputMode != "append" || !noDataBatch)
+          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        try writer.start()
+        finally {
+          prev match {
+            case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
+            case None => spark.conf.unset("spark.sql.shuffle.partitions")
+          }
+          prevNoData match {
+            case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
+            case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+          }
         }
       }
+      q.awaitTermination()
     } finally {
       ckpt.foreach { c =>
         try {
@@ -240,14 +250,6 @@ object StreamingOps {
               .forEach(p => java.nio.file.Files.deleteIfExists(p))
           }
         } catch { case _: Throwable => () }
-      }
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-        case None => spark.conf.unset("spark.sql.shuffle.partitions")
-      }
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       }
     }
     spark.table(table)

@@ -112,6 +112,46 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("concurrent AvailableNow drains restore the session conf and keep their rows") {
+    // a complete-mode drain switches the trailing no-data batch off for its
+    // own query; an append-mode session-window drain needs that batch to
+    // close its sessions. Running both kinds at once must neither leak the
+    // override into the session nor into the other drain.
+    val dir = java.nio.file.Files.createTempDirectory("graft_drains").toString
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    // 7 users, one event each 70 minutes: every event is its own session
+    (0 until 140).map(i => (i % 7L, new java.sql.Timestamp(t0 + i * 600000L)))
+      .toDF("user_id", "ts").write.mode("overwrite").parquet(dir)
+    val schema = spark.read.parquet(dir).schema
+    def src = spark.readStream.schema(schema).parquet(dir)
+    def sessions(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
+      src.withWatermark("ts", "0 seconds")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id")).count()
+        .select(col("session_window.start"), col("user_id"), col("count")),
+      "drain_sessions", outputMode = "append").collect().toSet
+    def windows(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
+      src.groupBy(window(col("ts"), "1 hour"), col("user_id")).count()
+        .select(col("window.start"), col("user_id"), col("count")),
+      "drain_windows").collect().toSet
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    val conf0 = keys.map(spark.conf.getOption)
+    val (soloSessions, soloWindows) = (sessions(), windows())
+    assert(soloSessions.nonEmpty && soloWindows.nonEmpty)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try {
+      val runs = (0 until 8).map { i =>
+        scala.concurrent.Future(if (i % 2 == 0) ("sessions", sessions() == soloSessions)
+          else ("windows", windows() == soloWindows))
+      }
+      val results = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
+        scala.concurrent.duration.Duration(5, "min"))
+      results.foreach { case (what, same) => assert(same, s"a concurrent $what drain differs") }
+    } finally pool.shutdown()
+    assert(keys.map(spark.conf.getOption) == conf0)
+  }
+
   test("mapGroupsWithState profile survives a user split across micro-batches") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, String, Double)]
@@ -400,6 +440,21 @@ class GraphCCSpec extends AnyFunSuite {
     got.foreach { case (v, l) =>
       assert(l == (v / len) * len, s"vertex $v labeled $l, expected ${(v / len) * len}")
     }
+  }
+
+  test("one unpersist releases the labels of a fixpoint that ends without the finish") {
+    // an edgeless graph converges in its first distributed round, so the
+    // contraction finish never runs; the returned RDD must be the persisted
+    // one itself, not a view whose unpersist misses its backing RDD
+    implicit val s: org.apache.spark.sql.SparkSession = SharedSpark.spark
+    def persistedCount = s.sparkContext.getPersistentRDDs.size
+    val before = persistedCount
+    val labels = graft.operators.GraphCC.minLabels(
+      s.sparkContext.parallelize(0L to 9L), s.sparkContext.emptyRDD[(Long, Long)],
+      localCutoff = 0L)
+    assert(labels.collect().toMap == (0L to 9L).map(v => v -> v).toMap)
+    labels.unpersist(blocking = true)
+    assert(persistedCount == before, s"$before -> $persistedCount persisted RDDs")
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.storage.StorageLevel
 import graft.kernels.{HullKernel, Interp2dKernel, LabelKernel, StencilKernel}
 import graft.operators.{DistributedLabel, GraphCC, TiledStencil}
 import graft.operators.TiledStencil.Tile
@@ -164,7 +165,7 @@ class DistributedLabelSpec extends AnyFunSuite {
 
     /** (global flat index -> label) through DistributedLabel with the
       * driver route's component cutoff `localCutoff` (0 forces the
-      * distributed route); the result is unpersisted after collecting. */
+      * distributed route). */
     def labels(localCutoff: Long = GraphCC.LocalVertexCutoff): Map[Long, Long] = {
       val df =
         if (dims.length == 2)
@@ -173,9 +174,7 @@ class DistributedLabelSpec extends AnyFunSuite {
         else
           DistributedLabel.label3(TiledStencil.tile3(mask, dims, ts).toDS(), ts, grid, conn,
             localCutoff)
-      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      df.unpersist(blocking = true)
-      got
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
 
     def kernel: Map[Long, Long] =
@@ -249,10 +248,10 @@ class DistributedLabelSpec extends AnyFunSuite {
   test("intermediate caches are released; only the result frame stays persisted") {
     // r12 release policy: repeated labeling must not accumulate cached
     // RDDs for the session lifetime (the r11 shape leaked the pixel frame
-    // and, at conn >= 2, the shell frame per call). The result itself is
-    // persisted by contract (it materializes eagerly) — so after N calls
-    // at most N result-backing entries may remain, which callers release
-    // by unpersisting the returned frame.
+    // and, at conn >= 2, the shell frame per call). The result itself is a
+    // local checkpoint (it materializes eagerly) — so after N calls at most
+    // N result-backing RDDs may remain, none of them in the CacheManager:
+    // Spark frees them once the frames are unreachable.
     def persistedCount = spark.sparkContext.getPersistentRDDs.size
     def check(what: String)(call: () => org.apache.spark.sql.DataFrame): Unit = {
       val n = 3
@@ -261,9 +260,10 @@ class DistributedLabelSpec extends AnyFunSuite {
       results.foreach(_.count())
       val after = persistedCount
       assert(after - before <= n,
-        s"$what: expected at most the $n result frames to stay cached, " +
+        s"$what: expected at most the $n result frames to stay materialized, " +
           s"but $before -> $after persisted RDDs")
-      results.foreach(_.unpersist(blocking = true))
+      results.foreach(r => assert(r.storageLevel == StorageLevel.NONE,
+        s"$what: the result frame is held by the CacheManager"))
     }
     val rng = new scala.util.Random(3)
     val (rows, cols, ts) = (32, 32, 16)

@@ -43,6 +43,23 @@ class VolumeZoomSpec extends AnyFunSuite {
     runBoth(Array(9, 4, 5), Array(0.6, 2.5, 1.0), order = 0, seed = 31)
   }
 
+  test("Graft.zoomVolume rows read back intact through .rdd.collect") {
+    // VolumeZoom reuses one output buffer per stripe group; at 8 output
+    // slices per core each group emits several slices, which a typed
+    // result collected through .rdd would alias to the last one written
+    val dims = Array(8 * spark.sparkContext.defaultParallelism, 5, 6)
+    val scale = Array(1.0, 1.4, 0.7)
+    val data = volume(dims, 13)
+    val slices = (0 until dims(0)).map { s =>
+      ZSlice(7L, s, data.slice(s * dims(1) * dims(2), (s + 1) * dims(1) * dims(2)))
+    }.toDS()
+    val (expData, expShape) = ZoomKernel.zoom(data, dims, scale, 1, 0.0)
+    val got = graft.api.Graft.zoomVolume(slices, dims, scale).rdd.collect()
+      .map(r => r.getInt(1) -> r.getSeq[Double](2)).sortBy(_._1)
+    assert(got.map(_._1).toSeq == (0 until expShape(0)))
+    assert(got.flatMap(_._2).toSeq == expData.toSeq)
+  }
+
   test("downscale to a single output slice gathers the right sources") {
     runBoth(Array(8, 6, 6), Array(0.125, 1.0, 1.0), order = 1, seed = 41)
   }
