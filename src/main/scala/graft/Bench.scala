@@ -372,21 +372,16 @@ object Bench {
         .agg(sum(when(get(col("e"), lit(0)), 1).otherwise(0))).collect()
     }
     // closing/opening at the same 512^3 matched-work shape
-    // (/root/reference/README.md:31-32: 469/522 ms): the two-pass
-    // composition (dilate-erode / erode-dilate) fused into one projection
-    // so the intermediate mask never leaves the codegen stage
+    // (imops README.md:31-32: 469/522 ms) through the facade: one
+    // MorphExpr per row runs both passes in a single kernel call
     bench("binary_closing", v512.toDouble, Some(masks512)) {
       masks512
-        .select(graft.exprs.MorphExpr.erode(
-          graft.exprs.MorphExpr.dilate(col("mask"), array(lit(512), lit(512))),
-          array(lit(512), lit(512))).as("e"))
+        .select(graft.api.Graft.binaryClosing(col("mask"), array(lit(512), lit(512))).as("e"))
         .agg(sum(when(get(col("e"), lit(0)), 1).otherwise(0))).collect()
     }
     bench("binary_opening", v512.toDouble, Some(masks512)) {
       masks512
-        .select(graft.exprs.MorphExpr.dilate(
-          graft.exprs.MorphExpr.erode(col("mask"), array(lit(512), lit(512))),
-          array(lit(512), lit(512))).as("e"))
+        .select(graft.api.Graft.binaryOpening(col("mask"), array(lit(512), lit(512))).as("e"))
         .agg(sum(when(get(col("e"), lit(0)), 1).otherwise(0))).collect()
     }
     // center_of_mass is pure memory bandwidth (one read + 3 FMAs per cell):
@@ -428,7 +423,7 @@ object Bench {
     graft.api.Graft.releaseVolumeMirrors()
     bench("pointwise_add", c24, Some(slices256)) {
       slices256
-        .select(transform(col("data"), x => x + lit(1.0)).as("d"))
+        .select(graft.api.Graft.pointwiseAdd(col("data"), 1.0).as("d"))
         .agg(sum(get(col("d"), lit(0)))).collect()
     }
     // pointwise through the object-storage path (the center_of_mass

@@ -50,8 +50,8 @@ object Graft {
 
   def binaryErosion(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.erode(mask, shape)
   def binaryDilation(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.dilate(mask, shape)
-  def binaryClosing(mask: Column, shape: Column): Column = TensorFunctions.closeUdf(mask, shape)
-  def binaryOpening(mask: Column, shape: Column): Column = TensorFunctions.openUdf(mask, shape)
+  def binaryClosing(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.close(mask, shape)
+  def binaryOpening(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.open(mask, shape)
   def distanceTransformEdt(mask: Column, shape: Column, sampling: Seq[Double]): Column =
     TensorFunctions.edtUdf(mask, shape, array(sampling.map(lit): _*))
   def convexHullImage(mask: Column, shape: Column): Column = TensorFunctions.hullUdf(mask, shape)

@@ -1,9 +1,11 @@
 package graft.exprs
 
+import org.apache.spark.sql.catalyst.expressions.codegen.ExprCode
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType}
 
-/** Shared input guards for the kernel-bridge expressions. */
+/** Shared input guards and codegen glue for the kernel-bridge expressions. */
 object ExprGuards {
   /** Fails fast on null array elements instead of leaving the outcome to
     * the physical representation (the bulk converters NPE on
@@ -40,5 +42,34 @@ object ExprGuards {
   def elemNullable(dt: DataType): Boolean = dt match {
     case ArrayType(_, cn) => cn
     case _ => false
+  }
+
+  /** Generated code for a null-intolerant bridge call: evaluates the
+    * children, yields null if any of them is null, else `call` (a Java
+    * expression over the children's values) typed as `javaType`.
+    */
+  def genCall(ev: ExprCode, gs: Seq[ExprCode], nullable: Boolean,
+              javaType: String, call: String): ExprCode = {
+    val childCode = gs.map(_.code).reduce((a, b) => code"$a\n$b")
+    // when no child is nullable, ev.isNull is the FalseLiteral "false" and
+    // must not be redeclared as a boolean variable
+    if (nullable) {
+      val nullCheck = gs.map(_.isNull).mkString(" || ")
+      ev.copy(code =
+        code"""
+          $childCode
+          boolean ${ev.isNull} = $nullCheck;
+          $javaType ${ev.value} = null;
+          if (!${ev.isNull}) {
+            ${ev.value} = $call;
+          }
+        """)
+    } else {
+      ev.copy(code =
+        code"""
+          $childCode
+          $javaType ${ev.value} = $call;
+        """)
+    }
   }
 }

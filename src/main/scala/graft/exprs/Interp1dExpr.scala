@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -70,27 +69,7 @@ case class Interp1dExpr(xs: Expression, ys: Expression, xq: Expression,
               ${ExprGuards.genGuard(gs(1).value.toString, ysElemNullable, "interp1d ys")}.toDoubleArray(),
               ${ExprGuards.genGuard(gs(2).value.toString, xqElemNullable, "interp1d xq")}.toDoubleArray(),
               ${gs(3).value}, ${gs(4).value}))"""
-    val childCode = code"${gs(0).code}\n${gs(1).code}\n${gs(2).code}\n${gs(3).code}\n${gs(4).code}"
-    // when no child is nullable, ev.isNull is the FalseLiteral "false" and
-    // must not be redeclared as a boolean variable
-    if (nullable) {
-      val nullCheck = gs.map(_.isNull).mkString(" || ")
-      ev.copy(code =
-        code"""
-          $childCode
-          boolean ${ev.isNull} = $nullCheck;
-          org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $call;
-          }
-        """)
-    } else {
-      ev.copy(code =
-        code"""
-          $childCode
-          org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $call;
-        """)
-    }
+    ExprGuards.genCall(ev, gs, nullable, "org.apache.spark.sql.catalyst.util.ArrayData", call)
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =

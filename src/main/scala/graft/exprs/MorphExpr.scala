@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import graft.kernels.StencilKernel
 
 /** Default-footprint binary morphology as a native Expression over
   * [[graft.kernels.StencilKernel]]: bulk `toBooleanArray`/`toIntArray`
@@ -18,8 +18,15 @@ import org.apache.spark.sql.types._
   * the erosion/dilation hot path
   * (/root/reference/imops/src/_morphology.pyx:313-329). `morphUdf` remains
   * the arbitrary-footprint entry point.
+  *
+  * `dilation` picks the first pass. With `thenDual` the dual pass follows
+  * in the same kernel call: dilation first is closing, erosion first is
+  * opening (imops/morphology.py:262-369). It is a plan-time constant, so it
+  * rides on the case class; `graft_morph(mask, shape, dilation)` is the
+  * single-pass form.
   */
-case class MorphExpr(data: Expression, shape: Expression, dilation: Expression)
+case class MorphExpr(data: Expression, shape: Expression, dilation: Expression,
+                     thenDual: Boolean = false)
   extends Expression {
 
   override def children: Seq[Expression] = Seq(data, shape, dilation)
@@ -51,36 +58,16 @@ case class MorphExpr(data: Expression, shape: Expression, dilation: Expression)
     else MorphExpr.call(
       ExprGuards.evalGuard(d.asInstanceOf[ArrayData], dataElemNullable, "morph data"),
       ExprGuards.evalGuard(sh.asInstanceOf[ArrayData], shapeElemNullable, "morph shape"),
-      dil.asInstanceOf[Boolean])
+      dil.asInstanceOf[Boolean], thenDual)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val gs = children.map(_.genCode(ctx))
-    val call = s"""graft.exprs.MorphExpr.call(
+    ExprGuards.genCall(ev, gs, nullable, "org.apache.spark.sql.catalyst.util.ArrayData",
+      s"""graft.exprs.MorphExpr.call(
             ${ExprGuards.genGuard(gs(0).value.toString, dataElemNullable, "morph data")},
             ${ExprGuards.genGuard(gs(1).value.toString, shapeElemNullable, "morph shape")},
-            ${gs(2).value})"""
-    val childCode = code"${gs(0).code}\n${gs(1).code}\n${gs(2).code}"
-    // when no child is nullable, ev.isNull is the FalseLiteral "false" and
-    // must not be redeclared as a boolean variable
-    if (nullable) {
-      val nullCheck = gs.map(_.isNull).mkString(" || ")
-      ev.copy(code =
-        code"""
-          $childCode
-          boolean ${ev.isNull} = $nullCheck;
-          org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $call;
-          }
-        """)
-    } else {
-      ev.copy(code =
-        code"""
-          $childCode
-          org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $call;
-        """)
-    }
+            ${gs(2).value}, $thenDual)""")
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
@@ -88,23 +75,29 @@ case class MorphExpr(data: Expression, shape: Expression, dilation: Expression)
 }
 
 object MorphExpr {
-  /** Plain-JVM bridge for generated code. */
-  def call(data: ArrayData, shape: ArrayData, dilation: Boolean): ArrayData = {
+  /** Plain-JVM bridge for generated code: one kernel call per row. */
+  def call(data: ArrayData, shape: ArrayData, dilation: Boolean, thenDual: Boolean): ArrayData = {
     val d = data.toBooleanArray()
     val sh = shape.toIntArray()
+    val (fp, fs) = StencilKernel.crossFootprint(sh.length)
     val out =
-      if (dilation) graft.kernels.StencilKernel.dilateDefault(d, sh)
-      else graft.kernels.StencilKernel.erodeDefault(d, sh)
+      if (thenDual) {
+        if (dilation) StencilKernel.close(d, sh, fp, fs) else StencilKernel.open(d, sh, fp, fs)
+      } else {
+        if (dilation) StencilKernel.dilate(d, sh, fp, fs) else StencilKernel.erode(d, sh, fp, fs)
+      }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def erode(data: Column, shape: Column): Column =
+  private def column(data: Column, shape: Column, dilation: Boolean, thenDual: Boolean): Column =
     GraftColumnBridge.column(MorphExpr(GraftColumnBridge.expression(data),
-      GraftColumnBridge.expression(shape), GraftColumnBridge.expression(
-        org.apache.spark.sql.functions.lit(false))))
+      GraftColumnBridge.expression(shape),
+      GraftColumnBridge.expression(org.apache.spark.sql.functions.lit(dilation)), thenDual))
 
-  def dilate(data: Column, shape: Column): Column =
-    GraftColumnBridge.column(MorphExpr(GraftColumnBridge.expression(data),
-      GraftColumnBridge.expression(shape), GraftColumnBridge.expression(
-        org.apache.spark.sql.functions.lit(true))))
+  def erode(data: Column, shape: Column): Column = column(data, shape, dilation = false, thenDual = false)
+  def dilate(data: Column, shape: Column): Column = column(data, shape, dilation = true, thenDual = false)
+  /** closing = dilation then erosion, one kernel call per row. */
+  def close(data: Column, shape: Column): Column = column(data, shape, dilation = true, thenDual = true)
+  /** opening = erosion then dilation, one kernel call per row. */
+  def open(data: Column, shape: Column): Column = column(data, shape, dilation = false, thenDual = true)
 }

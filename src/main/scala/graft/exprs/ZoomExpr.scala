@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -74,27 +73,7 @@ case class ZoomExpr(data: Expression, shape: Expression, scale: Expression,
             ${ExprGuards.genGuard(gs(1).value.toString, shapeElemNullable, "zoom shape")},
             ${ExprGuards.genGuard(gs(2).value.toString, scaleElemNullable, "zoom scale")},
             ${gs(3).value}, ${gs(4).value})"""
-    val childCode = code"${gs(0).code}\n${gs(1).code}\n${gs(2).code}\n${gs(3).code}\n${gs(4).code}"
-    // when no child is nullable, ev.isNull is the FalseLiteral "false" and
-    // must not be redeclared as a boolean variable
-    if (nullable) {
-      val nullCheck = gs.map(_.isNull).mkString(" || ")
-      ev.copy(code =
-        code"""
-          $childCode
-          boolean ${ev.isNull} = $nullCheck;
-          InternalRow ${ev.value} = null;
-          if (!${ev.isNull}) {
-            ${ev.value} = $call;
-          }
-        """)
-    } else {
-      ev.copy(code =
-        code"""
-          $childCode
-          InternalRow ${ev.value} = $call;
-        """)
-    }
+    ExprGuards.genCall(ev, gs, nullable, "InternalRow", call)
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =

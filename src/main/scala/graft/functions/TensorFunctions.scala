@@ -8,28 +8,31 @@ import graft.kernels._
   *
   * Two execution paths, mirroring the reference's Backend dispatch
   * (/root/reference/imops/backend.py:29-64):
-  *  - "builtin" — compositions of `org.apache.spark.sql.functions` array
-  *    higher-order functions (codegen'd, stays inside WholeStageCodegen) for
-  *    everything expressible: pointwise math, pad/crop/slice, fill/full.
-  *  - "kernel" — Scala UDFs over the pure kernels in `graft.kernels` for the
-  *    ops Spark genuinely can't express (zoom-to-shape, stencil morphology,
-  *    label, EDT, convex hull). These are the analog of the reference's
-  *    Cython backend; parallelism is the DataFrame row axis. Zoom, interp1d,
+  *  - "builtin" — compositions of `org.apache.spark.sql.functions` for
+  *    pad/crop/slice and full. `fillArray` and `isinArray` are `transform`
+  *    lambdas, which Spark 4.1 evaluates interpreted (`CodegenFallback`,
+  *    one boxed value per cell); they stay there because no benchmarked
+  *    path runs them.
+  *  - "kernel" — the pure kernels in `graft.kernels`, the analog of the
+  *    reference's Cython backend; parallelism is the DataFrame row axis.
+  *    Pointwise add, zoom, interp1d, default-cross morphology,
   *    center-of-mass partials and radon run as codegen'd expressions in
-  *    `graft.exprs` instead.
+  *    `graft.exprs`; the rest (zoom-to-shape, footprint morphology, label,
+  *    EDT, convex hull) are Scala UDFs here.
   */
 object TensorFunctions {
 
-  // ---------- builtin path: pointwise numerics (/root/reference/imops/numeric.py) ----------
+  // ---------- pointwise numerics (imops/numeric.py) ----------
 
   /** pointwise_add with a scalar summand (numeric.py:99-192). */
   def pointwiseAdd(data: Column, summand: Double): Column =
-    transform(data, x => x + lit(summand))
+    graft.exprs.PointwiseAddExpr.add(data, lit(summand))
 
   /** pointwise_add with a same-shape array (strict same-length in the
-    * reference, numeric.py:150-151). */
+    * reference, numeric.py:150-151; unequal lengths give null past the
+    * shorter end, as `zip_with` does). */
   def pointwiseAddArray(a: Column, b: Column): Column =
-    zip_with(a, b, (x, y) => x + y)
+    graft.exprs.PointwiseAddExpr.add(a, b)
 
   /** fill_ — immutable analog: replace every element (numeric.py:195-253). */
   def fillArray(data: Column, value: Double): Column =
@@ -100,9 +103,6 @@ object TensorFunctions {
     ZoomKernel.zoomToShape(data, shape, target, order, 0.0)
   }
 
-  val erodeUdf = udf { (data: Array[Boolean], shape: Array[Int]) =>
-    StencilKernel.erodeDefault(data, shape)
-  }
   /** morphology with an explicit footprint (incl. even shapes with the
     * origin-shift rule, _morphology.pyx:62-64). */
   val morphUdf = udf { (data: Array[Boolean], shape: Array[Int],
@@ -110,23 +110,12 @@ object TensorFunctions {
     if (dilation) StencilKernel.dilate(data, shape, fp, fshape)
     else StencilKernel.erode(data, shape, fp, fshape)
   }
-  val dilateUdf = udf { (data: Array[Boolean], shape: Array[Int]) =>
-    StencilKernel.dilateDefault(data, shape)
-  }
   /** boxed morphology: crop to the support bounding box + margin, run the
     * op on the crop, paste back (/root/reference/imops/morphology.py:117-151). */
   val boxedMorphUdf = udf { (data: Array[Boolean], shape: Array[Int], dilation: Boolean) =>
     val (fp, fs) = StencilKernel.crossFootprint(shape.length)
     StencilKernel.boxed(data, shape, fp, fs,
       if (dilation) StencilKernel.dilate else StencilKernel.erode)
-  }
-  val closeUdf = udf { (data: Array[Boolean], shape: Array[Int]) =>
-    val (fp, fs) = StencilKernel.crossFootprint(shape.length)
-    StencilKernel.close(data, shape, fp, fs)
-  }
-  val openUdf = udf { (data: Array[Boolean], shape: Array[Int]) =>
-    val (fp, fs) = StencilKernel.crossFootprint(shape.length)
-    StencilKernel.open(data, shape, fp, fs)
   }
 
   /** connected components; returns struct(labels, num, sizes). */

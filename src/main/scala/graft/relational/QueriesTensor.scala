@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TensorFunctions._
+import graft.exprs.MorphExpr
 import graft.operators.Interp1dJoin
 
 /** imops-parity operators over array columns built in-query from the
@@ -370,7 +371,7 @@ object QueriesTensor {
 
     Q("q_erosion1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        erodeUdf(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        MorphExpr.erode(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(maskCte,
         """SELECT id, list_transform(range(1, len(mask)+1), i ->
           |(CASE WHEN i = 1 THEN true ELSE mask[i-1] END)
@@ -380,7 +381,7 @@ object QueriesTensor {
 
     Q("q_dilation1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        dilateUdf(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        MorphExpr.dilate(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(maskCte,
         """SELECT id, list_transform(range(1, len(mask)+1), i ->
           |(CASE WHEN i = 1 THEN false ELSE mask[i-1] END)
@@ -390,7 +391,7 @@ object QueriesTensor {
 
     Q("q_closing1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        closeUdf(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        MorphExpr.close(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(
         s"""$maskCte, d AS (SELECT id, list_transform(range(1, len(mask)+1), i ->
            |(CASE WHEN i = 1 THEN false ELSE mask[i-1] END) OR mask[i]
@@ -402,7 +403,7 @@ object QueriesTensor {
 
     Q("q_opening1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        openUdf(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        MorphExpr.open(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(
         s"""$maskCte, e AS (SELECT id, list_transform(range(1, len(mask)+1), i ->
            |(CASE WHEN i = 1 THEN true ELSE mask[i-1] END) AND mask[i]

@@ -508,6 +508,37 @@ class Interp1dExprSpec extends AnyFunSuite {
   }
 }
 
+class GraftMorphologySpec extends AnyFunSuite {
+  private val spark = SharedSpark.spark
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types._
+
+  test("all four default-cross morphology calls return null for a null mask row") {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("mask", ArrayType(BooleanType, containsNull = false), nullable = true)))
+    val m = Array(true, true, false, true, true, true, false, false, true)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(0L, m.toSeq), Row(1L, null)), 2), schema)
+    val shape = array(lit(3), lit(3))
+    val (fp, fs) = graft.kernels.StencilKernel.crossFootprint(2)
+    val sh = Array(3, 3)
+    val calls = Seq(
+      "erosion" -> (graft.api.Graft.binaryErosion(col("mask"), shape),
+        graft.kernels.StencilKernel.erode(m, sh, fp, fs)),
+      "dilation" -> (graft.api.Graft.binaryDilation(col("mask"), shape),
+        graft.kernels.StencilKernel.dilate(m, sh, fp, fs)),
+      "closing" -> (graft.api.Graft.binaryClosing(col("mask"), shape),
+        graft.kernels.StencilKernel.close(m, sh, fp, fs)),
+      "opening" -> (graft.api.Graft.binaryOpening(col("mask"), shape),
+        graft.kernels.StencilKernel.open(m, sh, fp, fs)))
+    calls.foreach { case (name, (c, want)) =>
+      val got = df.select(col("id"), c.as("r")).collect().map(r => r.getLong(0) -> r).toMap
+      assert(got(1L).isNullAt(1), s"$name of a null row")
+      assert(got(0L).getSeq[Boolean](1) == want.toSeq, s"$name of a mask row")
+    }
+  }
+}
+
 class ExtensionsSpec extends AnyFunSuite {
   private val spark = SharedSpark.spark
 
