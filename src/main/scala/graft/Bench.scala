@@ -34,6 +34,39 @@ object Bench {
     if (v.isNaN || v.isInfinite) "null"
     else String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
+  /** One timed rep of a declared query. A rep that throws has no time:
+    * `sec` is NaN (written as null) and `error` carries its message. */
+  private[graft] final case class Rep(sec: Double, gcMs: Long, error: Option[String])
+
+  private def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).sum
+  }
+
+  private[graft] def timeRep(body: => Any): Rep = {
+    val g0 = gcMillis()
+    val t0 = System.nanoTime()
+    val error = try { body; None } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    Rep(if (error.isEmpty) sec else Double.NaN, gcMillis() - g0, error)
+  }
+
+  /** A query's published time: its fastest successful rep, NaN (null)
+    * when no rep succeeded. */
+  private[graft] def bestRep(reps: Seq[Rep]): Double =
+    reps.map(_.sec).filterNot(_.isNaN).minOption.getOrElse(Double.NaN)
+
+  /** A query's `query_reps` entry: every rep (null when it failed), per-rep
+    * GC, the failed reps' errors and, when probed, the host's eff cores. */
+  private[graft] def repsJson(reps: Seq[Rep], eff: Option[Double]): String = {
+    val errors = reps.flatMap(_.error).map(e => org.json4s.jackson.JsonMethods.compact(org.json4s.JString(e)))
+    "{\"reps\":" + reps.map(r => jsonNum(r.sec, 3)).mkString("[", ",", "]") +
+      ",\"gc_ms\":" + reps.map(_.gcMs).mkString("[", ",", "]") +
+      (if (errors.isEmpty) "" else errors.mkString(",\"errors\":[", ",", "]")) +
+      eff.fold("")(e => ",\"eff\":" + jsonNum(e, 2)) + "}"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -75,11 +108,6 @@ object Bench {
       case Some(sel) => SparkEntry.all.filter(q => sel(q.name))
       case None => SparkEntry.all
     }
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime).sum
-    }
     val cpusN = cpus.toInt
     val sweepFloor = cpusN * 0.45
     // per-query steal defense (r10 verdict item 2): the op benches got
@@ -96,15 +124,10 @@ object Bench {
     // "just these queries, no ops" is expressible for local iteration
     val results = if (onlyOps.isDefined && onlyQueries.isEmpty) Seq.empty[(String, Double)]
       else queryList.map { q =>
-      def once(): (Double, Long) = {
-        val g0 = gcMillis()
-        val t0 = System.nanoTime()
-        try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        ((System.nanoTime() - t0) / 1e9, gcMillis() - g0)
-      }
+      def once(): Rep = timeRep(q.run(spark, sfDir).count())
       val reps = scala.collection.mutable.ArrayBuffer(once(), once())
       var eff = -1.0
-      if (reps.map(_._1).min > 2.0) {
+      if (bestRep(reps.toSeq) > 2.0) {
         eff = graft.core.HostProbe.effectiveCores(cpusN, 10000000L)._1
         var w = 0
         while (eff < sweepFloor && w < 2) {
@@ -114,13 +137,8 @@ object Bench {
         }
         reps += once()
       }
-      val effPart = if (eff >= 0)
-        "," + "\"eff\":" + jsonNum(eff, 2)
-      else ""
-      qdetail(q.name) =
-        "{\"reps\":" + reps.map(r => jsonNum(r._1, 3)).mkString("[", ",", "]") +
-        ",\"gc_ms\":" + reps.map(_._2).mkString("[", ",", "]") + effPart + "}"
-      q.name -> reps.map(_._1).min
+      qdetail(q.name) = repsJson(reps.toSeq, Some(eff).filter(_ >= 0))
+      q.name -> bestRep(reps.toSeq)
     }
 
     // ---- matched-work kernel benches (force full evaluation via an agg

@@ -21,16 +21,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.registrations.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // optimizer surface: key-less |l.t - r.t| <= w joins re-plan from
-    // nested-loop to the bucketed hash join (see BandJoinRewrite),
-    // key-less levenshtein(l.s, r.s) <= d joins re-plan to the PassJoin
-    // blocked equi-join with a canonical-witness exactly-once predicate
-    // (see FuzzyJoinRewrite), and key-less bit_count(l.h ^ r.h) <= r
-    // joins re-plan to the pigeonhole (r+1)-band equi-join with a
-    // first-equal-band witness (see HammingJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.FuzzyJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.HammingJoinRewrite)
+    // optimizer surface: the key-less band, levenshtein and hamming join
+    // rewrites (see plans.JoinRewrites)
+    graft.plans.JoinRewrites.rules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 

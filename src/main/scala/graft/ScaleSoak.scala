@@ -418,17 +418,14 @@ object ScaleSoak {
             .otherwise(col("base").bitwiseXOR(lit(0x8001L))).as("h"))
     def hammingRun(n: Int): Long = {
       val d = hammingRows(n)
-      val saved = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations = saved :+ graft.plans.HammingJoinRewrite
-      try {
-        val l = d.select(col("id").as("id1"), col("h").as("h1"))
-        val r = d.select(col("id").as("id2"), col("h").as("h2"))
-        val j = l.join(r, bit_count(col("h1").bitwiseXOR(col("h2"))) <= 2)
-          .where(col("id1") < col("id2"))
-        require(!j.queryExecution.executedPlan.toString.contains("NestedLoop"),
-          "soak must exercise the rewritten plan, not the product")
-        j.count()
-      } finally spark.experimental.extraOptimizations = saved
+      graft.plans.JoinRewrites.setup(spark)
+      val l = d.select(col("id").as("id1"), col("h").as("h1"))
+      val r = d.select(col("id").as("id2"), col("h").as("h2"))
+      val j = l.join(r, bit_count(col("h1").bitwiseXOR(col("h2"))) <= 2)
+        .where(col("id1") < col("id2"))
+      require(!j.queryExecution.executedPlan.toString.contains("NestedLoop"),
+        "soak must exercise the rewritten plan, not the product")
+      j.count()
     }
 
     /** Gap fill at scale: users replicate ×n over the same time range, so

@@ -22,7 +22,6 @@ object Backend {
   case object Kernel extends Kind { val name = "kernel" }
 
   val ConfKey = "spark.graft.backend"
-  val ParallelismKey = "spark.graft.parallelism"
 
   private val registry = Map(Builtin.name -> Builtin, Kernel.name -> Kernel)
 

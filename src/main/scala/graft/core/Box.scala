@@ -15,8 +15,6 @@ final case class Box(start: Seq[Int], stop: Seq[Int]) {
   def addMargin(margin: Seq[Int]): Box =
     Box(start.zip(margin).map { case (a, m) => a - m }, stop.zip(margin).map { case (b, m) => b + m })
   def addMargin(margin: Int): Box = addMargin(Seq.fill(rank)(margin))
-  def clampTo(shape: Seq[Int]): Box =
-    Box(start.map(math.max(0, _)), stop.zip(shape).map { case (b, s) => math.min(b, s) })
   def contains(other: Box): Boolean =
     start.zip(other.start).forall { case (a, b) => a <= b } &&
       stop.zip(other.stop).forall { case (a, b) => a >= b }

@@ -36,13 +36,6 @@ object NdTensor {
     acc
   }
 
-  /** Flat index of a multi-index under row-major layout. */
-  def ravel(idx: Array[Int], strides: Array[Int]): Int = {
-    var acc = 0; var i = 0
-    while (i < idx.length) { acc += idx(i) * strides(i); i += 1 }
-    acc
-  }
-
   /** Prepend dummy axes of size 1 until `rank` — the reference's `n_dummy`
     * promotion (/root/reference/imops/zoom.py:264-268,
     * /root/reference/imops/morphology.py:99-110). */

@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * These have no counterpart in the reference (it is purely numeric); they
   * are the beyond-reference surface required by BASELINE.json's north star.
-  * Everything here is built from codegen'd `functions._` expressions — no
-  * UDFs — so the whole pipeline stays inside WholeStageCodegen and scales as
-  * narrow per-row maps (no shuffle).
+  * Everything here is built from `functions._` expressions — no UDFs — and
+  * scales as narrow per-row maps (no shuffle). The plain expressions are
+  * codegen'd; the lambda paths (`transform`, `aggregate`, `filter`, ...)
+  * are not: every Spark 4.1.2 higher-order function is `CodegenFallback`,
+  * so a lambda is evaluated interpreted, one call per element.
   */
 object TextFunctions {
 
@@ -74,7 +76,8 @@ object TextFunctions {
 
   /** 16-bit SimHash from per-token md5 digests: bit b is set when the
     * majority of tokens have hex digit b of md5(token) >= '8' (top bit of
-    * the nibble). Pure expression — portable and codegen'd. */
+    * the nibble). Pure expression, so portable; its `transform`/`aggregate`
+    * lambdas are evaluated interpreted, one call per token. */
   def simhash16(text: Column): Column = {
     val t = tokens(text)
     (0 until 16).map { b =>

@@ -143,10 +143,4 @@ object Interp2dKernel {
     }
     fill
   }
-
-  def interpolateAll(px: Array[Double], py: Array[Double], values: Array[Double],
-                     qx: Array[Double], qy: Array[Double], fill: Double): Array[Double] = {
-    val tr = triangulate(px, py)
-    Array.tabulate(qx.length)(k => interpolate(tr, values, qx(k), qy(k), fill))
-  }
 }

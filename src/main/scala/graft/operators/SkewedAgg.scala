@@ -24,14 +24,4 @@ object SkewedAgg {
       .groupBy(col(key))
       .agg(sum(col("__s")).as("sum"), sum(col("__c")).as("cnt"))
   }
-
-  /** Salted weighted mean (center-of-mass shape): Σ(w·x)/Σw per key. */
-  def weightedMean(df: DataFrame, key: String, weight: String, coord: String,
-                   salts: Int = 16): DataFrame = {
-    val salted = df.withColumn("__salt", pmod(hash(col(key), monotonically_increasing_id()), lit(salts)))
-    salted.groupBy(col(key), col("__salt"))
-      .agg(sum(col(weight) * col(coord)).as("__wx"), sum(col(weight)).as("__w"))
-      .groupBy(col(key))
-      .agg((sum(col("__wx")) / sum(col("__w"))).as("mean"))
-  }
 }

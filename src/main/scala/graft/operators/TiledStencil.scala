@@ -255,10 +255,4 @@ object TiledStencil {
     val (fp, fs) = StencilKernel.crossFootprint(3)
     apply3Auto(tiles, ts, grid, fp, fs, isDilation = false)
   }
-
-  def dilate3Auto(tiles: Dataset[Tile3], ts: Int, grid: Array[Int])
-                 (implicit spark: SparkSession): Dataset[Tile3] = {
-    val (fp, fs) = StencilKernel.crossFootprint(3)
-    apply3Auto(tiles, ts, grid, fp, fs, isDilation = true)
-  }
 }

@@ -31,8 +31,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * band bound is a positive integral literal on integral-typed,
   * deterministic ordinate expressions. The rewritten join contains a
   * cross-side equality, so the rule cannot re-fire on its own output.
-  * Registered by [[graft.GraftExtensions]]; also usable directly via
-  * `spark.experimental.extraOptimizations`.
+  * Installed once per session by [[JoinRewrites.setup]] (which every
+  * declared query runs first) and injected by [[graft.GraftExtensions]].
   */
 object BandJoinRewrite extends Rule[LogicalPlan] with JoinRewriteSupport {
 

@@ -29,7 +29,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * there is no cross-side equality (Spark would already hash-join), and
   * only for deterministic string operands. The rewritten join contains
   * cross-side equalities, so the rule cannot re-fire on its own output.
-  * Registered by [[graft.GraftExtensions]].
+  * Installed once per session by [[JoinRewrites.setup]] (which every
+  * declared query runs first) and injected by [[graft.GraftExtensions]].
   */
 object FuzzyJoinRewrite extends Rule[LogicalPlan] with JoinRewriteSupport {
 

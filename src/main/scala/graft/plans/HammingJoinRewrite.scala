@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * >= floor(B/16) bits), only when there is no cross-side equality
   * (Spark would already hash-join), and only for deterministic INT/BIGINT
   * operands. The rewritten join contains cross-side equalities, so the
-  * rule cannot re-fire on its own output. Registered by
-  * [[graft.GraftExtensions]].
+  * rule cannot re-fire on its own output. Installed once per session by
+  * [[JoinRewrites.setup]] (which every declared query runs first) and
+  * injected by [[graft.GraftExtensions]].
   */
 object HammingJoinRewrite extends Rule[LogicalPlan] with JoinRewriteSupport {
 

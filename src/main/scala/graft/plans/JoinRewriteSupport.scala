@@ -1,7 +1,30 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+
+/** The key-less-join rewrites as one always-on set. Each rule is an exact
+  * re-plan (its residual re-checks the original predicate), so it is
+  * installed once per session rather than scoped to the queries that
+  * need it: [[graft.relational.Q.run]] calls [[setup]] before every
+  * declared query, and [[graft.GraftExtensions]] injects the same list.
+  */
+object JoinRewrites {
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(BandJoinRewrite, FuzzyJoinRewrite, HammingJoinRewrite)
+
+  /** Appends whichever of [[rules]] `session` lacks to its
+    * `experimental.extraOptimizations`; a no-op once all are there. The
+    * lock makes the read-modify-write atomic across threads sharing a
+    * session, so no install can drop another's rule. */
+  def setup(session: SparkSession): Unit = synchronized {
+    val have = session.experimental.extraOptimizations
+    val missing = rules.filterNot(r => have.exists(_ eq r))
+    if (missing.nonEmpty) session.experimental.extraOptimizations = have ++ missing
+  }
+}
 
 /** Shared side-classification for the key-less-join rewrite rules
   * ([[BandJoinRewrite]], [[FuzzyJoinRewrite]], [[HammingJoinRewrite]]) —

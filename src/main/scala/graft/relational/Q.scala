@@ -9,8 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * on both sides; integer-valued doubles and strings are left exact.
   */
 final case class Q(name: String,
-                   run: (SparkSession, String) => DataFrame,
-                   oracle: Option[String])
+                   body: (SparkSession, String) => DataFrame,
+                   oracle: Option[String]) {
+  /** The query's DataFrame on `s`, planned with the session's join
+    * rewrites installed: every caller (Verify, Bench, Explain, the
+    * benchmark) reaches the body through here. */
+  def run(s: SparkSession, dir: String): DataFrame = {
+    graft.plans.JoinRewrites.setup(s)
+    body(s, dir)
+  }
+}
 
 object T {
   import org.apache.spark.sql.functions.{col, expr, unix_micros}

@@ -1049,31 +1049,22 @@ object QueriesRelational {
     // equi-join (with the canonical-witness exactly-once predicate) and
     // match DuckDB's naive evaluation. The gate throws if the rewrite
     // stopped firing, so it can't silently regress to the product plan
-    // and still pass.
+    // and still pass. The rule is one of the session's join rewrites
+    // (plans.JoinRewrites), installed by Q.run before this body plans.
     Q("q_fuzzy_rewrite",
       (s, dir) => {
-        // install the rule ONLY for this query body and restore on exit —
-        // an optimizer rule left in a shared session alters planning for
-        // every later gate. Downstream consumers (Verify's write, Bench's
-        // count) re-plan the returned frame WITHOUT the rule, so the body
-        // materializes the rewritten result eagerly (localCheckpoint) and
-        // hands back the checkpoint scan.
-        val saved = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = saved :+ graft.plans.FuzzyJoinRewrite
-        try {
-          val c = T(s, dir, "customer")
-          val l = c.where(col("c_custkey") < 150)
-            .select(col("c_custkey").as("id1"), col("c_name").as("n1"))
-          val r = c.select(col("c_custkey").as("id2"), col("c_name").as("n2"))
-          val joined = l.join(r, levenshtein(col("n1"), col("n2")) <= 1)
-            .where(col("id1") < col("id2"))
-            .select(col("id1"), col("id2"),
-              levenshtein(col("n1"), col("n2")).as("dist"))
-          val plan = joined.queryExecution.executedPlan.toString
-          require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-            "FuzzyJoinRewrite did not fire; levenshtein join planned as a product")
-          joined.localCheckpoint(true)
-        } finally s.experimental.extraOptimizations = saved
+        val c = T(s, dir, "customer")
+        val l = c.where(col("c_custkey") < 150)
+          .select(col("c_custkey").as("id1"), col("c_name").as("n1"))
+        val r = c.select(col("c_custkey").as("id2"), col("c_name").as("n2"))
+        val joined = l.join(r, levenshtein(col("n1"), col("n2")) <= 1)
+          .where(col("id1") < col("id2"))
+          .select(col("id1"), col("id2"),
+            levenshtein(col("n1"), col("n2")).as("dist"))
+        val plan = joined.queryExecution.executedPlan.toString
+        require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
+          "FuzzyJoinRewrite did not fire; levenshtein join planned as a product")
+        joined
       },
       Some("""SELECT a.c_custkey AS id1, b.c_custkey AS id2,
              |  levenshtein(a.c_name, b.c_name) AS dist
@@ -1086,25 +1077,21 @@ object QueriesRelational {
     // plans as a nested-loop product) runs through the rewritten bucketed
     // hash join and must match DuckDB's naive evaluation. The gate throws
     // if the rewrite stopped firing, so it can't silently regress to the
-    // nested-loop plan and still pass. Scoped-install + eager checkpoint
-    // (the q_fuzzy_rewrite pattern): the rule never leaks into other
-    // gates' planning.
+    // nested-loop plan and still pass. The rule is one of the session's
+    // join rewrites (plans.JoinRewrites), installed by Q.run before this
+    // body plans.
     Q("q_band_rewrite",
       (s, dir) => {
-        val saved = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = saved :+ graft.plans.BandJoinRewrite
-        try {
-          val e = T(s, dir, "events").where(col("user_id") % 7 === 0)
-          val l = e.select(col("event_id").as("id1"), col("ts").as("t1"))
-          val r = e.select(col("event_id").as("id2"), col("ts").as("t2"))
-          val joined = l.join(r, abs(col("t1") - col("t2")) <= 3600000000000L)
-            .where(col("id1") < col("id2"))
-            .select(col("id1"), col("id2"), (col("t2") - col("t1")).as("dt_ns"))
-          val plan = joined.queryExecution.executedPlan.toString
-          require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-            s"BandJoinRewrite did not fire; band join planned as a product")
-          joined.localCheckpoint(true)
-        } finally s.experimental.extraOptimizations = saved
+        val e = T(s, dir, "events").where(col("user_id") % 7 === 0)
+        val l = e.select(col("event_id").as("id1"), col("ts").as("t1"))
+        val r = e.select(col("event_id").as("id2"), col("ts").as("t2"))
+        val joined = l.join(r, abs(col("t1") - col("t2")) <= 3600000000000L)
+          .where(col("id1") < col("id2"))
+          .select(col("id1"), col("id2"), (col("t2") - col("t1")).as("dt_ns"))
+        val plan = joined.queryExecution.executedPlan.toString
+        require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
+          s"BandJoinRewrite did not fire; band join planned as a product")
+        joined
       },
       Some("""WITH e AS (SELECT event_id, epoch_ns(ts) AS t FROM events
              |  WHERE user_id % 7 = 0)

@@ -258,9 +258,10 @@ object QueriesText {
 
     // the BUILTIN (pure-expression) minhash backend against the SAME oracle
     // as the kernel-UDF path above — the two-backends-one-semantics matrix,
-    // both sides oracle-gated (the expression path stays inside
-    // WholeStageCodegen; its shingle array binds as a lambda variable, see
-    // TextFunctions.shingles)
+    // both sides oracle-gated (the expression path's shingle array binds as
+    // a lambda variable, see TextFunctions.shingles; its higher-order
+    // functions are CodegenFallback, so the lambdas are evaluated
+    // interpreted, one call per element)
     Q("q_minhash_builtin",
       (s, dir) => T(s, dir, "documents")
         .select(col("doc_id") +:
@@ -701,26 +702,22 @@ object QueriesText {
     // equi-join with a first-equal-band exactly-once witness, and
     // compared against DuckDB's naive evaluation. The gate throws if the
     // rewrite stops firing (no silent regression to the product plan);
-    // scoped-install + eager checkpoint (the q_fuzzy_rewrite pattern) so
-    // the rule never leaks into other gates' planning.
+    // the rule is one of the session's join rewrites (plans.JoinRewrites),
+    // installed by Q.run before this body plans.
     Q("q_hamming_rewrite",
       (s, dir) => {
-        val saved = s.experimental.extraOptimizations
-        s.experimental.extraOptimizations = saved :+ graft.plans.HammingJoinRewrite
-        try {
-          val d = T(s, dir, "documents").where(col("doc_id") < 600)
-            .select(col("doc_id"), simhash16Udf(col("text")).as("sh"))
-          val l = d.select(col("doc_id").as("id1"), col("sh").as("s1"))
-          val r = d.select(col("doc_id").as("id2"), col("sh").as("s2"))
-          val joined = l.join(r, bit_count(col("s1").bitwiseXOR(col("s2"))) <= 2)
-            .where(col("id1") < col("id2"))
-            .select(col("id1"), col("id2"),
-              bit_count(col("s1").bitwiseXOR(col("s2"))).cast("int").as("hamming"))
-          val plan = joined.queryExecution.executedPlan.toString
-          require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
-            "HammingJoinRewrite did not fire; hamming join planned as a product")
-          joined.localCheckpoint(true)
-        } finally s.experimental.extraOptimizations = saved
+        val d = T(s, dir, "documents").where(col("doc_id") < 600)
+          .select(col("doc_id"), simhash16Udf(col("text")).as("sh"))
+        val l = d.select(col("doc_id").as("id1"), col("sh").as("s1"))
+        val r = d.select(col("doc_id").as("id2"), col("sh").as("s2"))
+        val joined = l.join(r, bit_count(col("s1").bitwiseXOR(col("s2"))) <= 2)
+          .where(col("id1") < col("id2"))
+          .select(col("id1"), col("id2"),
+            bit_count(col("s1").bitwiseXOR(col("s2"))).cast("int").as("hamming"))
+        val plan = joined.queryExecution.executedPlan.toString
+        require(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
+          "HammingJoinRewrite did not fire; hamming join planned as a product")
+        joined
       },
       Some(s"""WITH sig AS (SELECT doc_id, $simhashSql AS sh FROM documents
               |  WHERE doc_id < 600)

@@ -79,14 +79,6 @@ object StreamingOps {
       .groupBy(org.apache.spark.sql.functions.window(col(tsCol), window), col(keyCol))
       .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
 
-  /** Session windows (gap-based), the streaming form of q_sessionize. */
-  def sessionized(events: DataFrame, tsCol: String, keyCol: String,
-                  gap: String, watermark: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-
   /** Streaming EXACT dedup by content hash — the streaming form of
     * q_dedup_exact. Exact global dedup necessarily keeps one state row per
     * distinct key for the stream's lifetime (`dropDuplicates` state is NOT
@@ -169,7 +161,9 @@ object StreamingOps {
   private val confLock = new Object
 
   /** Drains a streaming DataFrame with `Trigger.AvailableNow` into a memory
-    * sink and returns the result as a batch DataFrame. This is the
+    * sink and returns the result as a batch DataFrame over a local copy of
+    * the sink's rows; the sink's temp view is dropped, so nothing of the
+    * drain stays in the session past the returned frame. This is the
     * verification harness for the streaming surface: AvailableNow processes
     * everything currently in the source and terminates, so the result is
     * comparable to the equivalent batch query — which is exactly what the
@@ -239,7 +233,12 @@ object StreamingOps {
         }
       }
       q.awaitTermination()
+      // the sink's rows already sit on the driver (MemoryPlan plans as a
+      // LocalTableScan, so this collect runs no job)
+      val drained = spark.table(table)
+      spark.createDataFrame(drained.collectAsList(), drained.schema)
     } finally {
+      spark.catalog.dropTempView(table)
       ckpt.foreach { c =>
         try {
           val root = java.nio.file.Paths.get(c)
@@ -252,6 +251,5 @@ object StreamingOps {
         } catch { case _: Throwable => () }
       }
     }
-    spark.table(table)
   }
 }

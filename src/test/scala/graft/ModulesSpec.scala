@@ -152,6 +152,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(keys.map(spark.conf.getOption) == conf0)
   }
 
+  test("AvailableNow drains leave no temp views behind and keep their rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_drain_views").toString
+    (0 until 60).map(i => (i % 5L, i.toDouble)).toDF("user_id", "value")
+      .write.mode("overwrite").parquet(dir)
+    val schema = spark.read.parquet(dir).schema
+    val expected = spark.read.parquet(dir).groupBy("user_id").agg(sum("value").as("s"))
+      .as[(Long, Double)].collect().toSet
+    def drainViews() = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("drain_views_")).map(_.name)
+    val drained = (0 until 3).map { _ =>
+      StreamingOps.runAvailableNow(
+        spark.readStream.schema(schema).parquet(dir)
+          .groupBy("user_id").agg(sum("value").as("s")),
+        "drain_views")
+    }
+    assert(drainViews().isEmpty, s"drains left temp views: ${drainViews().mkString(", ")}")
+    drained.foreach(df => assert(df.as[(Long, Double)].collect().toSet == expected))
+  }
+
   test("mapGroupsWithState profile survives a user split across micro-batches") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(Long, Long, String, Double)]
@@ -581,14 +600,14 @@ class BandJoinRewriteSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   private def withRule[T](body: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.BandJoinRewrite
-    try body finally spark.experimental.extraOptimizations = saved
+    graft.plans.JoinRewrites.setup(spark)
+    body
   }
 
-  // the q_band_rewrite gate installs the rule session-wide (QuerySmokeSpec
-  // runs it in this shared session), so the naive-plan precondition must
-  // explicitly strip it rather than assume a clean session
+  // every declared query installs the join rewrites session-wide
+  // (JoinRewrites.setup via Q.run; QuerySmokeSpec runs them in this shared
+  // session), so the naive-plan reference must explicitly strip the rule
+  // rather than assume a clean session
   private def withoutRule[T](body: => T): T = {
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
@@ -649,9 +668,8 @@ class FuzzyJoinRewriteSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   private def withRule[T](body: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.FuzzyJoinRewrite
-    try body finally spark.experimental.extraOptimizations = saved
+    graft.plans.JoinRewrites.setup(spark)
+    body
   }
 
   private def withoutRule[T](body: => T): T = {
@@ -758,9 +776,8 @@ class HammingJoinRewriteSpec extends AnyFunSuite {
   import org.apache.spark.sql.functions._
 
   private def withRule[T](body: => T): T = {
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.HammingJoinRewrite
-    try body finally spark.experimental.extraOptimizations = saved
+    graft.plans.JoinRewrites.setup(spark)
+    body
   }
 
   private def withoutRule[T](body: => T): T = {
@@ -889,13 +906,12 @@ class HammingJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("all three rewrite rules coexist: two rewritable joins in ONE plan both fire") {
-    // GraftExtensions registers Band+Fuzzy+Hamming together; a plan
-    // containing a hamming self-join stacked on a levenshtein join must
-    // see BOTH rewritten (rules transformUp independently) and keep
-    // nested-loop-free results identical to the unrewritten plan
-    val rules = Seq(graft.plans.BandJoinRewrite,
-      graft.plans.FuzzyJoinRewrite, graft.plans.HammingJoinRewrite)
-    val saved = spark.experimental.extraOptimizations
+    // JoinRewrites.setup (and GraftExtensions) install Band+Fuzzy+Hamming
+    // together; a plan containing a hamming self-join stacked on a
+    // levenshtein join must see BOTH rewritten (rules transformUp
+    // independently) and keep nested-loop-free results identical to the
+    // unrewritten plan
+    val rules = graft.plans.JoinRewrites.rules
     val strs = Seq((100L, "kitten", 0x0F0FL), (200L, "sitten", 0x0F0EL),
       (300L, "abc", 0xFFFFL), (400L, "abd", 0x0F0DL)).toDF("id", "s", "h")
     def composed = {
@@ -907,20 +923,61 @@ class HammingJoinRewriteSpec extends AnyFunSuite {
           bit_count($"fh".bitwiseXOR($"hh")) <= 2)
         .select($"fid", $"gid", $"hid")
     }
-    val expected =
+    val expected = {
+      val saved = spark.experimental.extraOptimizations
       try { spark.experimental.extraOptimizations = saved.filterNot(rules.contains)
         composed.as[(Long, Long, Long)].collect().sorted.toSeq
       } finally spark.experimental.extraOptimizations = saved
+    }
+    graft.plans.JoinRewrites.setup(spark)
+    val df = composed
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("_graft_fj_"), "fuzzy rewrite did not fire in the composed plan")
+    assert(plan.contains("_graft_hj_"), "hamming rewrite did not fire in the composed plan")
+    val got = df.as[(Long, Long, Long)].collect().sorted.toSeq
+    assert(got == expected, s"composed rewrites changed results: $got vs $expected")
+    assert(expected.nonEmpty)
+  }
+}
+
+class JoinRewriteSetupSpec extends AnyFunSuite {
+  private val spark = SharedSpark.spark
+  import spark.implicits._
+
+  test("rewrite gates on three threads of one session all fire and install each rule once") {
+    // small fixtures with the columns the three gates read: sequential
+    // customer names (many one-edit pairs), documents over a tiny
+    // vocabulary (many near-dup SimHashes), minute-spaced events
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite_gates").toString
+    (1 to 300).map(k => (k.toLong, f"Customer#$k%09d")).toDF("c_custkey", "c_name")
+      .write.parquet(s"$dir/customer.parquet")
+    (0 until 200).map(i => (i.toLong, s"w${i % 7} w${i % 11} w${i % 13} the same tail"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    (0 until 1400).map(i => (i.toLong, (i % 70).toLong, i * 60000000000L))
+      .toDF("event_id", "user_id", "ts").write.parquet(s"$dir/events.parquet")
+    val gates = SparkEntry.all.filter(q =>
+      Set("q_hamming_rewrite", "q_band_rewrite", "q_fuzzy_rewrite")(q.name))
+    assert(gates.size == 3)
+    def rows(q: graft.relational.Q) =
+      q.run(spark, dir).collect().map(_.toString).sorted.toSeq
+    val solo = gates.map(q => q.name -> rows(q)).toMap
+    solo.foreach { case (name, r) => assert(r.nonEmpty, s"$name: no rows on the fixtures") }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      spark.experimental.extraOptimizations = saved ++ rules
-      val df = composed
-      val plan = df.queryExecution.optimizedPlan.toString
-      assert(plan.contains("_graft_fj_"), "fuzzy rewrite did not fire in the composed plan")
-      assert(plan.contains("_graft_hj_"), "hamming rewrite did not fire in the composed plan")
-      val got = df.as[(Long, Long, Long)].collect().sorted.toSeq
-      assert(got == expected, s"composed rewrites changed results: $got vs $expected")
-      assert(expected.nonEmpty)
-    } finally spark.experimental.extraOptimizations = saved
+      val runs = for (round <- 0 until 10; q <- gates) yield scala.concurrent.Future {
+        try { if (rows(q) == solo(q.name)) None else Some(s"round $round ${q.name}: rows differ") }
+        catch { case e: Throwable => Some(s"round $round ${q.name}: ${e.getMessage}") }
+      }
+      val failures = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
+        scala.concurrent.duration.Duration(5, "min")).flatten
+      assert(failures.isEmpty, failures.mkString("; "))
+    } finally pool.shutdown()
+    val installed = spark.experimental.extraOptimizations
+    for (rule <- Seq(graft.plans.BandJoinRewrite, graft.plans.FuzzyJoinRewrite,
+                     graft.plans.HammingJoinRewrite))
+      assert(installed.count(_ eq rule) == 1, s"$rule installed ${installed.count(_ eq rule)} times")
   }
 }
 
