@@ -424,21 +424,14 @@ object Bench {
       }
       comRdd.unpersist()
     }
-    // the SQL/DataFrame-facing path, now measured through the facade: for a
-    // cached input api.Graft.centerOfMass builds a MEMORY_ONLY object-store
-    // mirror once (warmup pays it) and runs the VolumeCom kernel per call —
-    // this is the number a facade user gets on a cached volume, replacing
-    // the r4 figure that paid the columnar cache's ~0.16 s/pass ARRAY
-    // re-materialization floor on every call (VERDICT r4 item 3). The raw
-    // uncached ComPartialSums plan stays gated by q_com_vectorized.
+    // the SQL/DataFrame-facing path through the facade: every call runs the
+    // single-pass ComPartialSums plan over comDf's columnar cache, so each
+    // rep pays the cache's ARRAY re-materialization; the matched-work
+    // VolumeCom row above is the memory-bandwidth ceiling
     val comDf = slices(512, 262144)
     bench("center_of_mass_sql", v512.toDouble, Some(comDf)) {
       graft.api.Graft.centerOfMass(comDf, "id", "data", 512, 512)
     }
-    // the facade's 1 GiB MEMORY_ONLY mirror outlives comDf's unpersist and
-    // was measured costing the NEXT bench 1.7× (r6's pointwise_add
-    // regression: 0.091 s → 0.155 s under the stale mirror's heap)
-    graft.api.Graft.releaseVolumeMirrors()
     bench("pointwise_add", c24, Some(slices256)) {
       slices256
         .select(graft.api.Graft.pointwiseAdd(col("data"), 1.0).as("d"))
@@ -714,31 +707,22 @@ object Bench {
       s""""conf_cores":$cpus,"quiet_waits":$waits,"g1_region":"$g1Region",""" +
       s""""local_dir":"${localDir.fold("default")(_ => "shm")}",""" +
       s""""agg_rate":${jsonNum(aggRate * 1000, 4)},"single_rate":${jsonNum(singleRate * 1000, 4)}"""
-    // the scale-soak record (graft.ScaleSoak: 1×/10×/30× wall + shuffle
-    // bytes for the LSH/pack/halo pipelines) rides along in the full
-    // artifact when present — it is run per-round by hand, not per-bench
-    val soak = {
-      val p = Seq("SOAK_r11_x1000.json", "SOAK_r10_x100.json", "SOAK_r8.json")
-        .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
-      p.map(f => "," + "\"soak\":" +
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim).getOrElse("")
-    }
     // per-query reps + GC + (when probed) eff — the sweep-level honesty
     // instrument (r10 verdict items 2/8); file-only, the stdout tail
     // window stays compact
     val qreps = qdetail.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_reps":$qreps,"ops":$opsJsonFull,$eff,"sf":"$sfDir"$soak}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_reps":$qreps,"ops":$opsJsonFull,$eff,"sf":"$sfDir"}"""
     // The final stdout line is the driver contract: metric/value/unit,
     // the PER-QUERY seconds map, ops, sf. r11 shipped "ops" but no
     // "queries" in the final line and the driver's per-query and scaling
     // comparison came back structurally empty (PERF_r11: n_common 0,
     // per_query {}, both bench_ok flags false) — r11 verdict item 2. The
     // 244-entry map at 2-decimal seconds (~5.5 KB) cannot fit a ~2 KB
-    // display tail TOGETHER with the soak blob and per-query reps, so the
-    // final line carries queries + compact ops and the soak/query_reps
-    // diagnostics stay in the earlier full line and bench_full.json.
+    // display tail TOGETHER with the per-query reps, so the final line
+    // carries queries + compact ops and the query_reps diagnostics stay
+    // in the earlier full line and bench_full.json.
     val qsCompact = results.map { case (k, v) =>
       "\"" + k + "\":" + jsonNum(v, 2)
     }.mkString("{", ",", "}")

@@ -182,12 +182,6 @@ object ScaleSoak {
       while (i < m) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
       a
     }
-    // dev knob for the stripe-size/heap trade measurement (r7 verdict
-    // item 5): SPARK_GRAFT_VZ_STRIPE overrides VolumeZoom's output-stripe
-    // width for this soak only — smaller stripes shrink each group's
-    // live set (fewer output slices in flight per task) at the cost of
-    // more input duplication (1 + 2*scale/stripe)
-    val vzStripe = sys.env.getOrElse("SPARK_GRAFT_VZ_STRIPE", "32").toInt
     def zoomRun(n: Int): Long = {
       import spark.implicits._
       val slices = spark.range(256L * n).select(
@@ -198,7 +192,7 @@ object ScaleSoak {
       // the x30 tail to 7.4x with 6.6 s GC; ≤1 MiB strips keep the same
       // shuffle plan with allocation G1 can handle
       graft.operators.VolumeZoom.strips(slices, Array(256 * n, 256, 256),
-          Array(2.0, 2.0, 2.0), order = 1, stripeSize = vzStripe)(spark)
+          Array(2.0, 2.0, 2.0), order = 1)(spark)
         .toDF().count()
     }
 
@@ -292,22 +286,18 @@ object ScaleSoak {
     /** Per-group cap at scale (the exprs.TopKAgg bounded-heap aggregate):
       * shuffle should be O(groups·k) — FLAT in n, not linear — because
       * map-side partials emit at most k entries per group per task.
-      * SPARK_GRAFT_CAP_WINDOW=1 swaps in the row_number window form for
-      * an A/B reading; measured r9: BOTH are flat (Spark 4 plans the
-      * rank filter as a partial WindowGroupLimit below the exchange), at
-      * x30 agg 526 KB / window 512 KB, times par — the aggregate's edge
-      * is streaming support and aggregate composability, not bytes. */
+      * The row_number window form (`capPerGroupWindow`) is flat too, as
+      * r9 measured (Spark 4 plans the rank filter as a partial
+      * WindowGroupLimit below the exchange): at x30 agg 526 KB / window
+      * 512 KB — the aggregate's edge is streaming support and aggregate
+      * composability, not bytes. */
     def capRun(n: Int): Long = {
       // the payload carries the TEXT column — the capPerGroup use case is
       // "cap each domain's share of the corpus", and the body riding along
       // is what makes the window form's full-input shuffle expensive
       val c = corpus(n).select(col("doc_id"),
         (col("doc_id") % 37).cast("string").as("grp"), col("text"))
-      val out =
-        if (sys.env.get("SPARK_GRAFT_CAP_WINDOW").contains("1"))
-          graft.functions.SketchFunctions.capPerGroupWindow(c, Seq(col("grp")), col("doc_id"), 64)
-        else
-          graft.functions.SketchFunctions.capPerGroup(c, Seq(col("grp")), col("doc_id"), 64)
+      val out = graft.functions.SketchFunctions.capPerGroup(c, Seq(col("grp")), col("doc_id"), 64)
       // consume the text column ABOVE the cap with an aggregate: a bare
       // count() prunes text through the window, and a pushable predicate
       // (length(text) >= 0) gets pushed BELOW it and pruned again — only a

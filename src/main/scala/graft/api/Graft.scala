@@ -115,75 +115,28 @@ object Graft {
     graft.operators.DistributedLabel(tiles, tileSize, gridRows, gridCols, connectivity)(
       tiles.sparkSession)
 
-  // object-storage mirrors for cached volume inputs, keyed by the input
-  // plan's semantic hash: Spark's in-memory columnar cache re-materializes
-  // ARRAY columns at ~0.16 s/pass on 512^3 (the vectorized cache reader
-  // covers atomic types only), capping any DataFrame-path center-of-mass at
-  // ~0.85 G cells/s while the MEMORY_ONLY RDD kernel runs at memory
-  // bandwidth (2.4-2.7 G) — see VolumeCom's scaladoc. LRU-capped at 4
-  // mirrors; evicted mirrors are unpersisted.
-  private val volumeMirrors =
-    new java.util.LinkedHashMap[String, org.apache.spark.rdd.RDD[(Long, Array[Double])]](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.rdd.RDD[(Long, Array[Double])]]): Boolean =
-        if (size > 4) { e.getValue.unpersist(blocking = false); true } else false
-    }
-
   /** Whole-volume center of mass `(com_s, com_i, com_j)` over a DataFrame
     * of (sliceIdx, rows×cols row-major array) slices — the facade analog of
     * the reference's `center_of_mass` on a 3-D volume
-    * (/root/reference/imops/measure.py, src/_measure.pyx:73-91).
+    * (imops/measure.py, src/_measure.pyx:73-91).
     *
-    * Routing: a CACHED input signals repeated interactive use, so it gets a
-    * MEMORY_ONLY object-storage mirror and the VolumeCom RDD kernel (first
-    * call pays one conversion pass, later calls run at memory bandwidth —
-    * the measured ~3× over any columnar-cache DataFrame path). Uncached
-    * inputs take the single-pass codegen'd ComPartialSums plan — one scan,
-    * no extra materialization. All paths share the same partial layout, so
-    * per-slice partials are bit-identical (final merge order is
-    * scheduler-dependent either way; see ROUND_NOTES r3 lesson 6). */
+    * Every call runs the single-pass codegen'd ComPartialSums plan over
+    * `df` as it stands, cached or not: one scan, no state kept between
+    * calls and nothing left persisted. Per-slice partials share VolumeCom's
+    * layout, so they are bit-identical to it; the final merge order is
+    * scheduler-dependent (see ROUND_NOTES r3 lesson 6). */
   def centerOfMass(df: org.apache.spark.sql.DataFrame, sliceIdxCol: String, dataCol: String,
                    rows: Int, cols: Int): Array[Double] = {
-    val cached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (cached) {
-      val key = df.queryExecution.logical.semanticHash().toString + "|" +
-        df.sparkSession.hashCode + "|" + sliceIdxCol + "|" + dataCol
-      val mirror = volumeMirrors.synchronized {
-        Option(volumeMirrors.get(key)).getOrElse {
-          val sp = df.sparkSession
-          import sp.implicits._
-          val r = df.select(col(sliceIdxCol).cast("long"), col(dataCol).cast("array<double>"))
-            .as[(Long, Array[Double])].rdd
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-          volumeMirrors.put(key, r)
-          r
-        }
-      }
-      graft.operators.VolumeCom.centerOfMass(mirror, rows, cols)
-    } else {
-      val row = graft.exprs.ComPartialSums.centerOfMassVolume(
-        df, col(dataCol), lit(rows), lit(cols), col(sliceIdxCol)).collect()(0)
-      if (row.isNullAt(0)) null
-      else Array(row.getDouble(0), row.getDouble(1), row.getDouble(2))
-    }
-  }
-
-  /** Unpersist and drop every object-storage volume mirror. A 512³ mirror
-    * is ~1 GiB of executor heap that outlives its source DataFrame's
-    * unpersist (the LRU keeps 4); callers that are done with interactive
-    * volume work release it explicitly — the r6 bench measured a 1.7×
-    * slowdown on the NEXT op when a stale mirror stayed resident. */
-  def releaseVolumeMirrors(): Unit = volumeMirrors.synchronized {
-    val it = volumeMirrors.values.iterator
-    while (it.hasNext) it.next().unpersist(blocking = false)
-    volumeMirrors.clear()
+    val row = graft.exprs.ComPartialSums.centerOfMassVolume(
+      df, col(dataCol), lit(rows), lit(cols), col(sliceIdxCol)).collect()(0)
+    if (row.isNullAt(0)) null
+    else Array(row.getDouble(0), row.getDouble(1), row.getDouble(2))
   }
 
   /** Scattered 2-D linear interpolation — the facade analog of the
     * reference's `Linear2DInterpolator` call shape
-    * (/root/reference/imops/interp2d.py:12-121), with automatic scale
-    * routing like [[centerOfMass]]: sample sets within the driver cap take
+    * (imops/interp2d.py:12-121), with automatic scale
+    * routing: sample sets within the driver cap take
     * the broadcast-triangulation path (one build, zero-shuffle query side —
     * fastest when the surface fits one machine, which is the reference's
     * only mode); larger sets take the tiled per-executor triangulation

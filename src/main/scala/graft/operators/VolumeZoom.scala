@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import graft.kernels.ZoomKernel
 
 /** Slice-distributed 3-D zoom — the 100 TB path for the reference's
@@ -69,6 +69,23 @@ object VolumeZoom {
             stripeSize: Int = 32)
            (implicit spark: SparkSession): Dataset[ZSlice] = {
     import spark.implicits._
+    // one strip per slice: no maxRowCells bound, so every strip is rows [0, n1)
+    grouped(slices, dims, scale, order, stripeSize, Long.MaxValue) { (id, os, _, data) =>
+      ZSlice(id, os, data)
+    }
+  }
+
+  /** The one shuffle plan behind [[apply]] and [[strips]]: ships each
+    * input slice to the output stripes that need it, groups by (volume,
+    * stripe) and emits every output slice of the stripe as row strips of
+    * at most `maxRowCells` cells (whole rows, at least one), in slice then
+    * strip order, through `emit(id, sid, strip, data)`. */
+  private def grouped[T: Encoder](slices: Dataset[ZSlice], dims: Array[Int],
+                                  scale: Array[Double], order: Int, stripeSize: Int,
+                                  maxRowCells: Long)
+                                 (emit: (Long, Int, Int, Array[Double]) => T)
+                                 (implicit spark: SparkSession): Dataset[T] = {
+    import spark.implicits._
     require(dims.length == 3 && scale.length == 3, "VolumeZoom is rank-3")
     require(order == 0 || order == 1, s"order $order unsupported")
     require(stripeSize >= 1, "stripeSize must be >= 1")
@@ -79,6 +96,8 @@ object VolumeZoom {
     val t0 = ZoomKernel.axisTables(d0, n0)
     val t1 = ZoomKernel.axisTables(d1, n1)
     val t2 = ZoomKernel.axisTables(d2, n2)
+    val stripRows = math.max(1, math.min(n1.toLong, maxRowCells / math.max(1, n2)).toInt)
+    val nStrips = (n1 + stripRows - 1) / stripRows
     val par = math.max(1, spark.sparkContext.defaultParallelism)
     val effStripe = math.max(1, math.min(stripeSize, n0 / (2 * par)))
     val nStripes = (n0 + effStripe - 1) / effStripe
@@ -103,12 +122,19 @@ object VolumeZoom {
         val bySid = it.map(p => p.sid -> p.data).toMap
         val oLo = st * effStripe
         val oHi = math.min(oLo + effStripe, n0)
-        // one reused output buffer per group (all slices are n1·n2) — see
-        // fillRows' reuse contract: the downstream serializer copies each
-        // slice into an UnsafeRow before the iterator advances.
-        val buf = new Array[Double](n1 * n2)
-        (oLo until oHi).iterator.map { os =>
-          ZSlice(id, os, fillRows(bySid, os, 0, n1, n1, n2, d2, order, t0, t1, t2, buf))
+        // one buffer per strip LENGTH (full-width strips plus at most one
+        // shorter remainder), reused across every emission in the group —
+        // see fillRows' reuse contract. The downstream serializer copies
+        // each strip before the iterator advances.
+        val bufs = scala.collection.mutable.Map.empty[Int, Array[Double]]
+        for {
+          os <- (oLo until oHi).iterator
+          sp <- (0 until nStrips).iterator
+        } yield {
+          val rLo = sp * stripRows
+          val rHi = math.min(rLo + stripRows, n1)
+          val buf = bufs.getOrElseUpdate((rHi - rLo) * n2, new Array[Double]((rHi - rLo) * n2))
+          emit(id, os, sp, fillRows(bySid, os, rLo, rHi, n1, n2, d2, order, t0, t1, t2, buf))
         }
     }
   }
@@ -179,52 +205,9 @@ object VolumeZoom {
              stripeSize: Int = 32, maxRowBytes: Int = 1 << 20)
             (implicit spark: SparkSession): Dataset[ZStrip] = {
     import spark.implicits._
-    require(dims.length == 3 && scale.length == 3, "VolumeZoom is rank-3")
-    require(order == 0 || order == 1, s"order $order unsupported")
-    require(stripeSize >= 1, "stripeSize must be >= 1")
     require(maxRowBytes >= 8, "maxRowBytes must hold at least one cell")
-    val Array(d0, d1, d2) = dims
-    val n0 = ZoomKernel.outDim(d0, scale(0))
-    val n1 = ZoomKernel.outDim(d1, scale(1))
-    val n2 = ZoomKernel.outDim(d2, scale(2))
-    val t0 = ZoomKernel.axisTables(d0, n0)
-    val t1 = ZoomKernel.axisTables(d1, n1)
-    val t2 = ZoomKernel.axisTables(d2, n2)
-    val stripRows = math.max(1, math.min(n1.toLong, maxRowBytes.toLong / 8 / math.max(1, n2)).toInt)
-    val nStrips = (n1 + stripRows - 1) / stripRows
-    val par = math.max(1, spark.sparkContext.defaultParallelism)
-    val effStripe = math.max(1, math.min(stripeSize, n0 / (2 * par)))
-    val nStripes = (n0 + effStripe - 1) / effStripe
-    def needOf(o: Int): Seq[Int] =
-      if (order == 0) Seq(t0.nr(o)) else Seq(t0.lo(o), t0.hi(o))
-    val needed: Array[Set[Int]] = Array.tabulate(nStripes) { st =>
-      (st * effStripe until math.min((st + 1) * effStripe, n0)).flatMap(needOf).toSet
-    }
-    val pieces = slices.flatMap { sl =>
-      (0 until nStripes).collect {
-        case st if needed(st)(sl.sid) => SlicePiece(sl.id, st, sl.sid, sl.data)
-      }
-    }
-    pieces.groupByKey(p => (p.id, p.stripe)).flatMapGroups {
-      (key: (Long, Int), it: Iterator[SlicePiece]) =>
-        val (id, st) = key
-        val bySid = it.map(p => p.sid -> p.data).toMap
-        val oLo = st * effStripe
-        val oHi = math.min(oLo + effStripe, n0)
-        // one buffer per strip LENGTH (full-width strips plus at most one
-        // shorter remainder), reused across every emission in the group —
-        // see fillRows' reuse contract. The downstream serializer copies
-        // each strip before the iterator advances.
-        val bufs = scala.collection.mutable.Map.empty[Int, Array[Double]]
-        for {
-          os <- (oLo until oHi).iterator
-          sp <- (0 until nStrips).iterator
-        } yield {
-          val rLo = sp * stripRows
-          val rHi = math.min(rLo + stripRows, n1)
-          val buf = bufs.getOrElseUpdate((rHi - rLo) * n2, new Array[Double]((rHi - rLo) * n2))
-          ZStrip(id, os, sp, fillRows(bySid, os, rLo, rHi, n1, n2, d2, order, t0, t1, t2, buf))
-        }
+    grouped(slices, dims, scale, order, stripeSize, maxRowBytes.toLong / 8) {
+      (id, os, sp, data) => ZStrip(id, os, sp, data)
     }
   }
 

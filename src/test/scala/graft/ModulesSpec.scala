@@ -1250,26 +1250,72 @@ class GraftFacadeComSpec extends AnyFunSuite {
   private val spark = SharedSpark.spark
   import org.apache.spark.sql.functions._
 
-  test("facade CoM routes cached inputs to the RDD mirror and agrees with the SQL path") {
+  test("facade CoM agrees on cached and uncached inputs, across repeat calls") {
     val gen = udf { (id: Long) =>
       Array.tabulate(64)(i => ((id * 131 + i * 17) % 23).toDouble)
     }
     val df = spark.range(16).select(col("id"), gen(col("id")).as("data"))
-    // uncached: single-pass ComPartialSums plan
-    val viaSql = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8)
-    // cached: object-storage mirror + VolumeCom kernel
+    val uncached = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8)
     df.persist(); df.count()
     try {
-      val viaMirror = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8)
-      val viaMirror2 = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8) // mirror reuse
-      assert(viaSql.length == 3 && viaMirror.length == 3)
-      // per-slice partials are bit-identical across paths; the final merge
-      // order is scheduler-dependent, so compare at 1e-12 (r3 lesson 6)
+      val cached = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8)
+      val cached2 = graft.api.Graft.centerOfMass(df, "id", "data", 8, 8)
+      assert(uncached.length == 3 && cached.length == 3 && cached2.length == 3)
+      // per-slice partials are bit-identical; the final merge order is
+      // scheduler-dependent, so compare at 1e-12 (r3 lesson 6)
       (0 until 3).foreach { k =>
-        assert(math.abs(viaSql(k) - viaMirror(k)) < 1e-12, s"component $k")
-        assert(viaMirror(k) == viaMirror2(k))
+        assert(math.abs(uncached(k) - cached(k)) < 1e-12, s"component $k")
+        assert(math.abs(uncached(k) - cached2(k)) < 1e-12, s"repeat call, component $k")
       }
     } finally df.unpersist()
+  }
+
+  test("facade CoM on a persisted reread of an overwritten path sees the new data") {
+    // a reread of the same path has the same plan (and semantic hash) as
+    // the first read, so any result keyed by the plan would be stale here
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_com_reread").toString
+    def write(shift: Int): Unit =
+      (0L until 12L).map(id => (id, Array.tabulate(36)(i => ((id * 7 + i * shift) % 11).toDouble)))
+        .toDF("id", "data").write.mode("overwrite").parquet(dir)
+    def com(df: org.apache.spark.sql.DataFrame) =
+      graft.api.Graft.centerOfMass(df, "id", "data", 6, 6)
+    try {
+      write(3)
+      val first = spark.read.parquet(dir)
+      first.persist(); first.count()
+      val before = com(first)
+      first.unpersist(blocking = true)
+
+      write(5)
+      val reread = spark.read.parquet(dir)
+      reread.persist(); reread.count()
+      val cached = com(reread)
+      reread.unpersist(blocking = true)
+      val uncached = com(reread)
+      assert((0 until 3).exists(k => math.abs(before(k) - uncached(k)) > 1e-6),
+        "the two volumes must have different centers of mass")
+      (0 until 3).foreach { k =>
+        assert(math.abs(cached(k) - uncached(k)) < 1e-12,
+          s"component $k: cached ${cached.toSeq} vs uncached ${uncached.toSeq}")
+      }
+    } finally {
+      val root = new java.io.File(dir)
+      Option(root.listFiles).foreach(_.foreach(_.delete()))
+      root.delete()
+    }
+  }
+
+  test("facade CoM on a persisted frame persists nothing of its own") {
+    val gen = udf { (id: Long) => Array.tabulate(16)(i => ((id + i) % 5).toDouble) }
+    val df = spark.range(8).select(col("id"), gen(col("id")).as("data"))
+    df.persist(); df.count()
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      graft.api.Graft.centerOfMass(df, "id", "data", 4, 4)
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after == before, s"$before -> $after persisted RDDs")
+    } finally df.unpersist(blocking = true)
   }
 }
 
