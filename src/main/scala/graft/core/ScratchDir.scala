@@ -1,13 +1,14 @@
 package graft.core
 
-/** RAM-backed scratch-space selection shared by the bench/soak harness
-  * mains and the streaming drain helper: prefer `/dev/shm` when it has
-  * ≥ 32 GiB headroom, else fall back to the platform default. Shuffle and
-  * micro-batch checkpoint traffic on an ext4 tmp dir showed multi-second
-  * rep-to-rep writeback swings on otherwise-idle hosts; tmpfs makes both
-  * deterministic. Production deployments make the same choice by
-  * provisioning local SSDs — this is the single-box analog, never a
-  * correctness dependency. */
+/** RAM-backed `spark.local.dir` (shuffle scratch) selection for the
+  * bench and soak harness mains: prefer `/dev/shm` when it has ≥ 32 GiB
+  * headroom, else fall back to the platform default. Shuffle traffic on an
+  * ext4 tmp dir showed multi-second rep-to-rep writeback swings on
+  * otherwise-idle hosts; tmpfs makes it deterministic. Production
+  * deployments make the same choice by provisioning local SSDs — this is
+  * the single-box analog, never a correctness dependency. (Streaming
+  * drains checkpoint to a per-drain temp dir instead; see
+  * `StreamingOps.runAvailableNow`.) */
 object ScratchDir {
   def shm(subdir: String): Option[String] = {
     val shm = new java.io.File("/dev/shm")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming surface. The reference has no streaming
@@ -151,12 +152,12 @@ object StreamingOps {
         max("max_value").as("max_value"), max("last_ts").as("last_ts"))
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val jvmToken = java.util.UUID.randomUUID().toString.take(8)
 
   /** Serializes [[runAvailableNow]]'s scoped session-conf overrides. A
     * query clones its session (and with it the confs it runs on) inside
-    * `start()`, so only set → start → restore needs the lock; the drains
-    * themselves still run concurrently. Without it two concurrent drains
+    * `start()`, and its file sources read the caller's session once while
+    * the query initializes, so only set → start → initialized → restore
+    * needs the lock; the drains themselves still run concurrently. Without it two concurrent drains
     * could restore each other's override and leave it behind. */
   private val confLock = new Object
 
@@ -181,55 +182,65 @@ object StreamingOps {
                       noDataBatch: Boolean = true): DataFrame = {
     val spark = stream.sparkSession
     val table = s"${name}_${runSeq.incrementAndGet()}"
-    // memory-sink drains are a verification harness: their checkpoint is
-    // throwaway, so keep the per-batch offset/commit/state-delta writes
-    // on RAM-backed scratch when available (each micro-batch fsyncs
-    // several small files; on ext4 that is the drain's floor). The path
-    // carries a per-JVM token — a stale checkpoint from a previous run
-    // would otherwise be RESUMED (offsets committed, nothing processed,
-    // silently empty results) — and is deleted in the finally block, so a
-    // FAILED drain can't strand its state files on /dev/shm for the
-    // host's uptime. A real sink passes its own durable
-    // checkpointLocation and never hits this.
-    val ckpt = graft.core.ScratchDir.shm("graft-ckpt").map(d => s"$d/$jvmToken/$table")
+    // memory-sink drains are a verification harness, so their checkpoint
+    // is throwaway: a fresh temp dir per drain (a reused path would be
+    // RESUMED — offsets committed, nothing processed, silently empty
+    // results), deleted in the finally block, also when the drain fails.
+    // Without an explicit location Spark makes its own temporary-* dir and
+    // removes it only after a successful run. Each micro-batch writes
+    // several small checkpoint files; the scoped manager below writes them
+    // without forking a process per file. A real sink passes its own
+    // durable checkpointLocation.
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
     try {
-      val w0 = stream.writeStream
+      val writer = stream.writeStream
         .format("memory")
         .queryName(table)
         .outputMode(outputMode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val writer = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
+        .option("checkpointLocation", ckpt.toString)
+      // Stateful operators allocate one state-store instance per shuffle
+      // partition per micro-batch; the verification streams carry small
+      // state, so 4 partitions cuts fixed store setup 8x vs the session's
+      // batch setting. Production sizing is data-dependent — this scoped
+      // override applies only to this drain's query (the partition count
+      // is pinned into the query's checkpoint at first batch).
+      //
+      // complete/update drains emit their full/touched result in the data
+      // batch itself; the trailing no-data micro-batch exists to advance
+      // the watermark so APPEND-mode aggregations can finalize — skip it
+      // for the modes that don't need it (one full state round saved per
+      // drain). `noDataBatch = false` lets an APPEND-mode caller opt out
+      // too when its rows provably don't depend on the final watermark
+      // advance (the inner stream-stream join: matches emit in the data
+      // batch; the trailing batch only evicts state the drain is about
+      // to discard).
+      val overrides = Seq(
+        "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.checkpointFileManagerClass" ->
+          classOf[ForkFreeCheckpointFileManager].getName) ++
+        (if (outputMode != "append" || !noDataBatch)
+          Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") else Nil)
       val q = confLock.synchronized {
-        // Stateful operators allocate one state-store instance per shuffle
-        // partition per micro-batch; the verification streams carry small
-        // state, so 4 partitions cuts fixed store setup 8x vs the session's
-        // batch setting. Production sizing is data-dependent — this scoped
-        // override applies only to this drain's query (the partition count
-        // is pinned into the query's checkpoint at first batch).
-        val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        // complete/update drains emit their full/touched result in the data
-        // batch itself; the trailing no-data micro-batch exists to advance
-        // the watermark so APPEND-mode aggregations can finalize — skip it
-        // for the modes that don't need it (one full state round saved per
-        // drain). `noDataBatch = false` lets an APPEND-mode caller opt out
-        // too when its rows provably don't depend on the final watermark
-        // advance (the inner stream-stream join: matches emit in the data
-        // batch; the trailing batch only evicts state the drain is about
-        // to discard).
-        val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-        if (outputMode != "append" || !noDataBatch)
-          spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        try writer.start()
-        finally {
-          prev match {
-            case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-            case None => spark.conf.unset("spark.sql.shuffle.partitions")
+        val prev = overrides.map { case (k, v) =>
+          val p = spark.conf.getOption(k)
+          spark.conf.set(k, v)
+          k -> p
+        }
+        try {
+          val started = writer.start()
+          // a file source builds its metadata log (sources/N) from the
+          // caller's session, on the query thread, after start() returns;
+          // hold the overrides until the sources exist so that log is on
+          // the fork-free manager too (a failed init rethrows here)
+          started match {
+            case w: StreamingQueryWrapper => w.streamingQuery.awaitInitialization(60000L)
+            case _ =>
           }
-          prevNoData match {
-            case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-            case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-          }
+          started
+        } finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
         }
       }
       q.awaitTermination()
@@ -239,17 +250,14 @@ object StreamingOps {
       spark.createDataFrame(drained.collectAsList(), drained.schema)
     } finally {
       spark.catalog.dropTempView(table)
-      ckpt.foreach { c =>
-        try {
-          val root = java.nio.file.Paths.get(c)
-          // Files.walk holds a directory stream open until closed — scope
-          // it with Using so the fd is released even when deletion throws
-          scala.util.Using.resource(java.nio.file.Files.walk(root)) { walk =>
-            walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        } catch { case _: Throwable => () }
-      }
+      try {
+        // Files.walk holds a directory stream open until closed — scope
+        // it with Using so the fd is released even when deletion throws
+        scala.util.Using.resource(java.nio.file.Files.walk(ckpt)) { walk =>
+          walk.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        }
+      } catch { case _: Throwable => () }
     }
   }
 }

@@ -117,58 +117,94 @@ class StreamingSpec extends AnyFunSuite {
     // own query; an append-mode session-window drain needs that batch to
     // close its sessions. Running both kinds at once must neither leak the
     // override into the session nor into the other drain.
-    val dir = java.nio.file.Files.createTempDirectory("graft_drains").toString
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    // 7 users, one event each 70 minutes: every event is its own session
-    (0 until 140).map(i => (i % 7L, new java.sql.Timestamp(t0 + i * 600000L)))
-      .toDF("user_id", "ts").write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    def src = spark.readStream.schema(schema).parquet(dir)
-    def sessions(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
-      src.withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id")).count()
-        .select(col("session_window.start"), col("user_id"), col("count")),
-      "drain_sessions", outputMode = "append").collect().toSet
-    def windows(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
-      src.groupBy(window(col("ts"), "1 hour"), col("user_id")).count()
-        .select(col("window.start"), col("user_id"), col("count")),
-      "drain_windows").collect().toSet
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
-    val conf0 = keys.map(spark.conf.getOption)
-    val (soloSessions, soloWindows) = (sessions(), windows())
-    assert(soloSessions.nonEmpty && soloWindows.nonEmpty)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val runs = (0 until 8).map { i =>
-        scala.concurrent.Future(if (i % 2 == 0) ("sessions", sessions() == soloSessions)
-          else ("windows", windows() == soloWindows))
+    TempDirs.withTempDir("graft_drains") { dir =>
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+      // 7 users, one event each 70 minutes: every event is its own session
+      (0 until 140).map(i => (i % 7L, new java.sql.Timestamp(t0 + i * 600000L)))
+        .toDF("user_id", "ts").write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      def src = spark.readStream.schema(schema).parquet(dir)
+      def sessions(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
+        src.withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id")).count()
+          .select(col("session_window.start"), col("user_id"), col("count")),
+        "drain_sessions", outputMode = "append").collect().toSet
+      def windows(): Set[org.apache.spark.sql.Row] = StreamingOps.runAvailableNow(
+        src.groupBy(window(col("ts"), "1 hour"), col("user_id")).count()
+          .select(col("window.start"), col("user_id"), col("count")),
+        "drain_windows").collect().toSet
+      val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.checkpointFileManagerClass")
+      val conf0 = keys.map(spark.conf.getOption)
+      val (soloSessions, soloWindows) = (sessions(), windows())
+      assert(soloSessions.nonEmpty && soloWindows.nonEmpty)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val runs = (0 until 8).map { i =>
+          scala.concurrent.Future(if (i % 2 == 0) ("sessions", sessions() == soloSessions)
+            else ("windows", windows() == soloWindows))
+        }
+        val results = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
+          scala.concurrent.duration.Duration(5, "min"))
+        results.foreach { case (what, same) => assert(same, s"a concurrent $what drain differs") }
+      } finally pool.shutdown()
+      assert(keys.map(spark.conf.getOption) == conf0)
+    }
+  }
+
+  test("a failed AvailableNow drain rethrows, restores the session conf and leaves no checkpoint dir") {
+    TempDirs.withTempDir("graft_drain_fail") { dir =>
+      (0 until 40).map(i => (i % 4L, i.toDouble)).toDF("user_id", "value")
+        .write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      val boom = udf { (v: Double) =>
+        if (v >= 0) throw new IllegalStateException("drain gate failed on purpose")
+        v
       }
-      val results = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
-        scala.concurrent.duration.Duration(5, "min"))
-      results.foreach { case (what, same) => assert(same, s"a concurrent $what drain differs") }
-    } finally pool.shutdown()
-    assert(keys.map(spark.conf.getOption) == conf0)
+      val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.checkpointFileManagerClass")
+      val conf0 = keys.map(spark.conf.getOption)
+      // a drain's own checkpoint dir, or the temporary-* one Spark makes
+      // when it is given none
+      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+      def checkpointDirs() = Option(tmp.list()).toSeq.flatten
+        .filter(n => n.startsWith("graft-ckpt") || n.startsWith("temporary-")).toSet
+      val before = checkpointDirs()
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingOps.runAvailableNow(
+          spark.readStream.schema(schema).parquet(dir)
+            .groupBy("user_id").agg(sum(boom(col("value"))).as("s")),
+          "drain_fail")
+      }
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("drain gate failed on purpose")),
+        s"the UDF's error is not in the cause chain: $err")
+      assert(keys.map(spark.conf.getOption) == conf0)
+      val left = checkpointDirs() -- before
+      assert(left.isEmpty, s"the failed drain left ${left.mkString(", ")} in $tmp")
+    }
   }
 
   test("AvailableNow drains leave no temp views behind and keep their rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drain_views").toString
-    (0 until 60).map(i => (i % 5L, i.toDouble)).toDF("user_id", "value")
-      .write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val expected = spark.read.parquet(dir).groupBy("user_id").agg(sum("value").as("s"))
-      .as[(Long, Double)].collect().toSet
-    def drainViews() = spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary && t.name.startsWith("drain_views_")).map(_.name)
-    val drained = (0 until 3).map { _ =>
-      StreamingOps.runAvailableNow(
-        spark.readStream.schema(schema).parquet(dir)
-          .groupBy("user_id").agg(sum("value").as("s")),
-        "drain_views")
+    TempDirs.withTempDir("graft_drain_views") { dir =>
+      (0 until 60).map(i => (i % 5L, i.toDouble)).toDF("user_id", "value")
+        .write.mode("overwrite").parquet(dir)
+      val schema = spark.read.parquet(dir).schema
+      val expected = spark.read.parquet(dir).groupBy("user_id").agg(sum("value").as("s"))
+        .as[(Long, Double)].collect().toSet
+      def drainViews() = spark.catalog.listTables().collect()
+        .filter(t => t.isTemporary && t.name.startsWith("drain_views_")).map(_.name)
+      val drained = (0 until 3).map { _ =>
+        StreamingOps.runAvailableNow(
+          spark.readStream.schema(schema).parquet(dir)
+            .groupBy("user_id").agg(sum("value").as("s")),
+          "drain_views")
+      }
+      assert(drainViews().isEmpty, s"drains left temp views: ${drainViews().mkString(", ")}")
+      drained.foreach(df => assert(df.as[(Long, Double)].collect().toSet == expected))
     }
-    assert(drainViews().isEmpty, s"drains left temp views: ${drainViews().mkString(", ")}")
-    drained.foreach(df => assert(df.as[(Long, Double)].collect().toSet == expected))
   }
 
   test("mapGroupsWithState profile survives a user split across micro-batches") {
@@ -948,36 +984,37 @@ class JoinRewriteSetupSpec extends AnyFunSuite {
     // small fixtures with the columns the three gates read: sequential
     // customer names (many one-edit pairs), documents over a tiny
     // vocabulary (many near-dup SimHashes), minute-spaced events
-    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite_gates").toString
-    (1 to 300).map(k => (k.toLong, f"Customer#$k%09d")).toDF("c_custkey", "c_name")
-      .write.parquet(s"$dir/customer.parquet")
-    (0 until 200).map(i => (i.toLong, s"w${i % 7} w${i % 11} w${i % 13} the same tail"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
-    (0 until 1400).map(i => (i.toLong, (i % 70).toLong, i * 60000000000L))
-      .toDF("event_id", "user_id", "ts").write.parquet(s"$dir/events.parquet")
-    val gates = SparkEntry.all.filter(q =>
-      Set("q_hamming_rewrite", "q_band_rewrite", "q_fuzzy_rewrite")(q.name))
-    assert(gates.size == 3)
-    def rows(q: graft.relational.Q) =
-      q.run(spark, dir).collect().map(_.toString).sorted.toSeq
-    val solo = gates.map(q => q.name -> rows(q)).toMap
-    solo.foreach { case (name, r) => assert(r.nonEmpty, s"$name: no rows on the fixtures") }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val runs = for (round <- 0 until 10; q <- gates) yield scala.concurrent.Future {
-        try { if (rows(q) == solo(q.name)) None else Some(s"round $round ${q.name}: rows differ") }
-        catch { case e: Throwable => Some(s"round $round ${q.name}: ${e.getMessage}") }
-      }
-      val failures = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
-        scala.concurrent.duration.Duration(5, "min")).flatten
-      assert(failures.isEmpty, failures.mkString("; "))
-    } finally pool.shutdown()
-    val installed = spark.experimental.extraOptimizations
-    for (rule <- Seq(graft.plans.BandJoinRewrite, graft.plans.FuzzyJoinRewrite,
-                     graft.plans.HammingJoinRewrite))
-      assert(installed.count(_ eq rule) == 1, s"$rule installed ${installed.count(_ eq rule)} times")
+    TempDirs.withTempDir("graft_rewrite_gates") { dir =>
+      (1 to 300).map(k => (k.toLong, f"Customer#$k%09d")).toDF("c_custkey", "c_name")
+        .write.parquet(s"$dir/customer.parquet")
+      (0 until 200).map(i => (i.toLong, s"w${i % 7} w${i % 11} w${i % 13} the same tail"))
+        .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      (0 until 1400).map(i => (i.toLong, (i % 70).toLong, i * 60000000000L))
+        .toDF("event_id", "user_id", "ts").write.parquet(s"$dir/events.parquet")
+      val gates = SparkEntry.all.filter(q =>
+        Set("q_hamming_rewrite", "q_band_rewrite", "q_fuzzy_rewrite")(q.name))
+      assert(gates.size == 3)
+      def rows(q: graft.relational.Q) =
+        q.run(spark, dir).collect().map(_.toString).sorted.toSeq
+      val solo = gates.map(q => q.name -> rows(q)).toMap
+      solo.foreach { case (name, r) => assert(r.nonEmpty, s"$name: no rows on the fixtures") }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val runs = for (round <- 0 until 10; q <- gates) yield scala.concurrent.Future {
+          try { if (rows(q) == solo(q.name)) None else Some(s"round $round ${q.name}: rows differ") }
+          catch { case e: Throwable => Some(s"round $round ${q.name}: ${e.getMessage}") }
+        }
+        val failures = scala.concurrent.Await.result(scala.concurrent.Future.sequence(runs),
+          scala.concurrent.duration.Duration(5, "min")).flatten
+        assert(failures.isEmpty, failures.mkString("; "))
+      } finally pool.shutdown()
+      val installed = spark.experimental.extraOptimizations
+      for (rule <- Seq(graft.plans.BandJoinRewrite, graft.plans.FuzzyJoinRewrite,
+                       graft.plans.HammingJoinRewrite))
+        assert(installed.count(_ eq rule) == 1, s"$rule installed ${installed.count(_ eq rule)} times")
+    }
   }
 }
 
@@ -985,14 +1022,15 @@ class TensorSourceSpec extends AnyFunSuite {
   private val spark = SharedSpark.spark
 
   test("full generator -> partitioned sink -> pruned read roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
-    val ds = graft.sources.TensorSource.full(spark, 20, Seq(2, 3), 1.5)
-    assert(ds.head().data.forall(_ == 1.5) && ds.head().shape == Seq(2, 3))
-    graft.sources.TensorSource.write(ds, dir, buckets = 4)
-    val back = graft.sources.TensorSource.read(spark, dir)
-    assert(back.count() == 20)
-    val one = graft.sources.TensorSource.readOne(spark, dir, 7L, buckets = 4)
-    assert(one.count() == 1 && one.head().getAs[Long]("id") == 7L)
+    TempDirs.withTempDir("graft_ts") { dir =>
+      val ds = graft.sources.TensorSource.full(spark, 20, Seq(2, 3), 1.5)
+      assert(ds.head().data.forall(_ == 1.5) && ds.head().shape == Seq(2, 3))
+      graft.sources.TensorSource.write(ds, dir, buckets = 4)
+      val back = graft.sources.TensorSource.read(spark, dir)
+      assert(back.count() == 20)
+      val one = graft.sources.TensorSource.readOne(spark, dir, 7L, buckets = 4)
+      assert(one.count() == 1 && one.head().getAs[Long]("id") == 7L)
+    }
   }
 }
 
@@ -1274,13 +1312,12 @@ class GraftFacadeComSpec extends AnyFunSuite {
     // a reread of the same path has the same plan (and semantic hash) as
     // the first read, so any result keyed by the plan would be stale here
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_com_reread").toString
-    def write(shift: Int): Unit =
-      (0L until 12L).map(id => (id, Array.tabulate(36)(i => ((id * 7 + i * shift) % 11).toDouble)))
-        .toDF("id", "data").write.mode("overwrite").parquet(dir)
-    def com(df: org.apache.spark.sql.DataFrame) =
-      graft.api.Graft.centerOfMass(df, "id", "data", 6, 6)
-    try {
+    TempDirs.withTempDir("graft_com_reread") { dir =>
+      def write(shift: Int): Unit =
+        (0L until 12L).map(id => (id, Array.tabulate(36)(i => ((id * 7 + i * shift) % 11).toDouble)))
+          .toDF("id", "data").write.mode("overwrite").parquet(dir)
+      def com(df: org.apache.spark.sql.DataFrame) =
+        graft.api.Graft.centerOfMass(df, "id", "data", 6, 6)
       write(3)
       val first = spark.read.parquet(dir)
       first.persist(); first.count()
@@ -1299,10 +1336,6 @@ class GraftFacadeComSpec extends AnyFunSuite {
         assert(math.abs(cached(k) - uncached(k)) < 1e-12,
           s"component $k: cached ${cached.toSeq} vs uncached ${uncached.toSeq}")
       }
-    } finally {
-      val root = new java.io.File(dir)
-      Option(root.listFiles).foreach(_.foreach(_.delete()))
-      root.delete()
     }
   }
 

@@ -7,16 +7,20 @@ import graft.operators.{AsOfJoin, Interp1dJoin}
 import graft.functions.{TextFunctions, SimilarityFunctions}
 
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    // the session lives until the test JVM exits, and so does its warehouse
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
+    sys.addShutdownHook(TempDirs.deleteRecursively(warehouse))
+    SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
+      .getOrCreate()
+  }
 }
 
 class AsOfJoinSpec extends AnyFunSuite {
@@ -575,18 +579,19 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val cen = vecs.where($"vec_id" % 10 === 0)
     val idx = graft.functions.PqIndex.build(cen, cen, m = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
-    idx.encode(vecs).write.mode("overwrite").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val q = vecs.where($"vec_id" < 5)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select($"qid", $"vec_id", $"adist", $"rank")
-      .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    val viaStore = key(idx.search(q, stored, k = 4, nprobe = 2))
-    val direct = key(SimilarityFunctions.ivfPqTopK(q, vecs, cen, cen, k = 4, nprobe = 2, m = 4))
-    assert(viaStore.toSeq == direct.toSeq,
-      s"stored-codes search diverged: ${viaStore.take(3).toSeq} vs ${direct.take(3).toSeq}")
-    assert(direct.nonEmpty)
+    TempDirs.withTempDir("graft_pq") { dir =>
+      idx.encode(vecs).write.mode("overwrite").parquet(dir)
+      val stored = spark.read.parquet(dir)
+      val q = vecs.where($"vec_id" < 5)
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select($"qid", $"vec_id", $"adist", $"rank")
+        .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
+      val viaStore = key(idx.search(q, stored, k = 4, nprobe = 2))
+      val direct = key(SimilarityFunctions.ivfPqTopK(q, vecs, cen, cen, k = 4, nprobe = 2, m = 4))
+      assert(viaStore.toSeq == direct.toSeq,
+        s"stored-codes search diverged: ${viaStore.take(3).toSeq} vs ${direct.take(3).toSeq}")
+      assert(direct.nonEmpty)
+    }
   }
 
   test("PqIndex residual path: persisted residual codes search like the one-shot") {
@@ -604,19 +609,20 @@ class SimilaritySpec extends AnyFunSuite {
     val resSample = graft.functions.SimilarityFunctions.ivfResiduals(vecs, cen)
       .where($"vec_id" % 4 === 0).select($"vec_id", $"re".as("embedding"))
     val idx = graft.functions.PqIndex.build(cen, resSample, m = 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rpq").toString
-    idx.encodeResidual(vecs).write.mode("overwrite").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val q = vecs.where($"vec_id" < 5)
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select($"qid", $"vec_id", $"adist", $"rank")
-      .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    val viaStore = key(idx.searchResidual(q, stored, k = 4, nprobe = 2))
-    val direct = key(SimilarityFunctions.ivfPqResidualTopK(
-      q, vecs, cen, resSample, k = 4, nprobe = 2, m = 4))
-    assert(viaStore.toSeq == direct.toSeq,
-      s"stored residual codes diverged: ${viaStore.take(3).toSeq} vs ${direct.take(3).toSeq}")
-    assert(direct.nonEmpty)
+    TempDirs.withTempDir("graft_rpq") { dir =>
+      idx.encodeResidual(vecs).write.mode("overwrite").parquet(dir)
+      val stored = spark.read.parquet(dir)
+      val q = vecs.where($"vec_id" < 5)
+      def key(df: org.apache.spark.sql.DataFrame) = df
+        .select($"qid", $"vec_id", $"adist", $"rank")
+        .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
+      val viaStore = key(idx.searchResidual(q, stored, k = 4, nprobe = 2))
+      val direct = key(SimilarityFunctions.ivfPqResidualTopK(
+        q, vecs, cen, resSample, k = 4, nprobe = 2, m = 4))
+      assert(viaStore.toSeq == direct.toSeq,
+        s"stored residual codes diverged: ${viaStore.take(3).toSeq} vs ${direct.take(3).toSeq}")
+      assert(direct.nonEmpty)
+    }
   }
 
   test("PqIndex is build-once: repeated search planning launches zero jobs") {

@@ -45,48 +45,49 @@ class StreamingSoakSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     val trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")
-    val q1 = dedup.writeStream.format("noop").outputMode("append").trigger(trigger)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_soak_dedup").toString)
-      .start()
-    val q2 = windowed.writeStream.format("noop").outputMode("update").trigger(trigger)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_soak_window").toString)
-      .start()
-    try {
-      val deadline = System.nanoTime() + 240L * 1000L * 1000L * 1000L
-      while ((batches(q1) < 110 || batches(q2) < 110) && System.nanoTime() < deadline)
-        Thread.sleep(500)
-      assert(batches(q1) >= 100, s"dedup stream only reached batch ${batches(q1)}")
-      assert(batches(q2) >= 100, s"windowed stream only reached batch ${batches(q2)}")
+    TempDirs.withTempDir("graft_soak_dedup") { dedupCkpt =>
+    TempDirs.withTempDir("graft_soak_window") { windowCkpt =>
+      val q1 = dedup.writeStream.format("noop").outputMode("append").trigger(trigger)
+        .option("checkpointLocation", dedupCkpt)
+        .start()
+      val q2 = windowed.writeStream.format("noop").outputMode("update").trigger(trigger)
+        .option("checkpointLocation", windowCkpt)
+        .start()
+      try {
+        val deadline = System.nanoTime() + 240L * 1000L * 1000L * 1000L
+        while ((batches(q1) < 110 || batches(q2) < 110) && System.nanoTime() < deadline)
+          Thread.sleep(500)
+        assert(batches(q1) >= 100, s"dedup stream only reached batch ${batches(q1)}")
+        assert(batches(q2) >= 100, s"windowed stream only reached batch ${batches(q2)}")
 
-      def stateRows(q: StreamingQuery): Array[Long] =
-        q.recentProgress.filter(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.apply(0).numRowsTotal)
-      val r1 = stateRows(q1)
-      val r2 = stateRows(q2)
-      assert(r1.length >= 50 && r2.length >= 50, "not enough progress history retained")
+        def stateRows(q: StreamingQuery): Array[Long] =
+          q.recentProgress.filter(_.stateOperators.nonEmpty)
+            .map(_.stateOperators.apply(0).numRowsTotal)
+        val r1 = stateRows(q1)
+        val r2 = stateRows(q2)
+        assert(r1.length >= 50 && r2.length >= 50, "not enough progress history retained")
 
-      // dedup: plateau bound = watermark(5 s) × 5000 rows/s plus commit lag;
-      // a leak over ~100 batches (tens of seconds) would exceed this multiply
-      val mid1 = r1.slice(r1.length / 3, 2 * r1.length / 3).max
-      val late1 = r1.takeRight(10).max
-      assert(late1 < 150000L, s"dedup state grew to $late1 rows — watermark purge not bounding it")
-      assert(late1 < 2 * mid1 + 5000,
-        s"dedup state still growing late in the soak: mid-third max $mid1 vs final $late1")
+        // dedup: plateau bound = watermark(5 s) × 5000 rows/s plus commit lag;
+        // a leak over ~100 batches (tens of seconds) would exceed this multiply
+        val mid1 = r1.slice(r1.length / 3, 2 * r1.length / 3).max
+        val late1 = r1.takeRight(10).max
+        assert(late1 < 150000L, s"dedup state grew to $late1 rows — watermark purge not bounding it")
+        assert(late1 < 2 * mid1 + 5000,
+          s"dedup state still growing late in the soak: mid-third max $mid1 vs final $late1")
 
-      // windowed agg: live windows × 8 keys — two orders below any leak
-      assert(r2.takeRight(10).max < 1000L,
-        s"windowed state ${r2.takeRight(10).max} rows — closed windows not evicted")
+        // windowed agg: live windows × 8 keys — two orders below any leak
+        assert(r2.takeRight(10).max < 1000L,
+          s"windowed state ${r2.takeRight(10).max} rows — closed windows not evicted")
 
-      info(s"dedup state rows (first/mid/late): ${r1.head}/$mid1/$late1 over ${batches(q1)} batches")
-      info(s"windowed state rows late max: ${r2.takeRight(10).max} over ${batches(q2)} batches")
-    } finally {
-      q1.stop(); q2.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-        case None => spark.conf.unset("spark.sql.shuffle.partitions")
+        info(s"dedup state rows (first/mid/late): ${r1.head}/$mid1/$late1 over ${batches(q1)} batches")
+        info(s"windowed state rows late max: ${r2.takeRight(10).max} over ${batches(q2)} batches")
+      } finally {
+        q1.stop(); q2.stop()
+        prev match {
+          case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
+          case None => spark.conf.unset("spark.sql.shuffle.partitions")
+        }
       }
-    }
+    }}
   }
 }
