@@ -500,16 +500,19 @@ class GraphCCSpec extends AnyFunSuite {
   test("one unpersist releases the labels of a fixpoint that ends without the finish") {
     // an edgeless graph converges in its first distributed round, so the
     // contraction finish never runs; the returned RDD must be the persisted
-    // one itself, not a view whose unpersist misses its backing RDD
+    // one itself, not a view whose unpersist misses its backing RDD.
+    // Compared by id, not by count: the ContextCleaner may unpersist an
+    // earlier test's unreferenced RDD while this one runs
     implicit val s: org.apache.spark.sql.SparkSession = SharedSpark.spark
-    def persistedCount = s.sparkContext.getPersistentRDDs.size
-    val before = persistedCount
+    def persisted = s.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     val labels = graft.operators.GraphCC.minLabels(
       s.sparkContext.parallelize(0L to 9L), s.sparkContext.emptyRDD[(Long, Long)],
       localCutoff = 0L)
     assert(labels.collect().toMap == (0L to 9L).map(v => v -> v).toMap)
     labels.unpersist(blocking = true)
-    assert(persistedCount == before, s"$before -> $persistedCount persisted RDDs")
+    val left = persisted -- before
+    assert(left.isEmpty, s"RDDs ${left.mkString(", ")} still persisted after the unpersist")
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
@@ -83,6 +84,15 @@ class StreamingSoakSpec extends AnyFunSuite {
         info(s"windowed state rows late max: ${r2.takeRight(10).max} over ${batches(q2)} batches")
       } finally {
         q1.stop(); q2.stop()
+        // stop() cancels the running micro-batch, but its tasks may still be
+        // committing state deltas, and the state-store maintenance thread
+        // snapshots the stopped queries' stores until it unloads them; let
+        // the tasks end and unload the stores before the checkpoint dirs go
+        val settled = System.nanoTime() + 60L * 1000L * 1000L * 1000L
+        while (spark.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+            System.nanoTime() < settled)
+          Thread.sleep(100)
+        StateStore.stop()
         prev match {
           case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
           case None => spark.conf.unset("spark.sql.shuffle.partitions")
