@@ -360,14 +360,14 @@ object Bench {
     // a SPARK_GRAFT_BENCH_ONLY run for an unrelated op paid every C2 loop)
     def opWanted(names: String*): Boolean =
       onlyOps.forall(sel => names.exists(sel.contains))
-    // warm BOTH monomorphic morphology kernels (and thereby the closing /
-    // opening compositions, which are dilate∘erode) to steady JIT state
-    // before ANY timed morphology section — r8 verdict item 1: the driver
-    // artifact recorded dilation/closing 25-30x over budget while erosion
-    // through the same bridge ran 0.1 s; the kernels are now split into
-    // monomorphic erode/dilate methods (StencilKernel.scala) and this loop
-    // pushes both past the C2 compile threshold in-driver (local mode: the
-    // executor threads share this JVM's code cache)
+    // warm BOTH morphology ops (and thereby the closing / opening
+    // compositions, which are dilate∘erode) to steady JIT state before ANY
+    // timed morphology section — the r8 bench artifact recorded
+    // dilation/closing 25-30x over budget while erosion through the same
+    // bridge ran 0.1 s; this loop pushes the kernel's AND and OR run
+    // combiners (StencilKernel.scala) past the C2 compile threshold in the
+    // Spark driver JVM (local mode: the executor threads share its code
+    // cache)
     if (opWanted("binary_erosion", "binary_dilation", "binary_closing",
                  "binary_opening", "tiled_erosion_3d")) {
       val wShape = Array(64, 64)

@@ -24,13 +24,40 @@ object TiledStencil {
   // not private: Spark's encoder codegen needs public accessors
   final case class Piece(id: Long, ti: Int, tj: Int, di: Int, dj: Int, strip: Array[Boolean])
 
+  /** Copies a box of `planes` x `rows` x `len` cells between two row-major
+    * arrays, one System.arraycopy per row: the box starts at flat index `s0`
+    * in `src`, whose rows and planes are `sRow` and `sPlane` cells apart, and
+    * at `d0` in `dst` (`dRow`, `dPlane`). A 2-D box is one plane. */
+  private def copyBox(src: Array[Boolean], s0: Int, sRow: Int, sPlane: Int,
+                      dst: Array[Boolean], d0: Int, dRow: Int, dPlane: Int,
+                      planes: Int, rows: Int, len: Int): Unit = {
+    var p = 0
+    while (p < planes) {
+      var r = 0
+      while (r < rows) {
+        System.arraycopy(src, s0 + p * sPlane + r * sRow, dst, d0 + p * dPlane + r * dRow, len)
+        r += 1
+      }
+      p += 1
+    }
+  }
+
+  /** Per axis, the r-wide edge of a tile that the neighbor in direction `d`
+    * needs, as (first index, extent); the whole axis when `d` is 0. */
+  private def edge(d: Int, ts: Int, r: Int): (Int, Int) =
+    if (d < 0) (0, r) else if (d > 0) (ts - r, r) else (0, ts)
+
+  /** Per axis, where a piece from direction `d` lands in the padded tile
+    * (side ts + 2r), as (first index, extent). */
+  private def landing(d: Int, ts: Int, r: Int): (Int, Int) =
+    if (d < 0) (0, r) else if (d > 0) (ts + r, r) else (r, ts)
+
   /** Split a full 2-D mask into tiles (test/ingest helper). */
   def tile(mask: Array[Boolean], rows: Int, cols: Int, ts: Int, id: Long = 0L): Seq[Tile] = {
     require(rows % ts == 0 && cols % ts == 0, "grid must divide evenly into tiles")
     for (ti <- 0 until rows / ts; tj <- 0 until cols / ts) yield {
       val data = new Array[Boolean](ts * ts)
-      for (i <- 0 until ts; j <- 0 until ts)
-        data(i * ts + j) = mask((ti * ts + i) * cols + tj * ts + j)
+      copyBox(mask, ti * ts * cols + tj * ts, cols, 0, data, 0, ts, 0, 1, ts, ts)
       Tile(id, ti, tj, data)
     }
   }
@@ -38,10 +65,7 @@ object TiledStencil {
   /** Reassemble a full mask from tiles (test/egress helper). */
   def untile(tiles: Seq[Tile], rows: Int, cols: Int, ts: Int): Array[Boolean] = {
     val out = new Array[Boolean](rows * cols)
-    tiles.foreach { t =>
-      for (i <- 0 until ts; j <- 0 until ts)
-        out((t.ti * ts + i) * cols + t.tj * ts + j) = t.data(i * ts + j)
-    }
+    tiles.foreach(t => copyBox(t.data, 0, ts, 0, out, t.ti * ts * cols + t.tj * ts, cols, 0, 1, ts, ts))
     out
   }
 
@@ -49,11 +73,9 @@ object TiledStencil {
     * the r-wide edge nearest to that neighbor, as a row-major array of shape
     * (rows(di) x cols(dj)) where rows/cols are r or ts. */
   private def slab(data: Array[Boolean], ts: Int, r: Int, di: Int, dj: Int): Array[Boolean] = {
-    val is = if (di < 0) 0 until r else if (di > 0) ts - r until ts else 0 until ts
-    val js = if (dj < 0) 0 until r else if (dj > 0) ts - r until ts else 0 until ts
-    val out = new Array[Boolean](is.length * js.length)
-    var k = 0
-    for (i <- is; j <- js) { out(k) = data(i * ts + j); k += 1 }
+    val ((i0, ni), (j0, nj)) = (edge(di, ts, r), edge(dj, ts, r))
+    val out = new Array[Boolean](ni * nj)
+    copyBox(data, i0 * ts + j0, ts, 0, out, 0, nj, 0, 1, ni, nj)
     out
   }
 
@@ -81,22 +103,17 @@ object TiledStencil {
     pieces.groupByKey(p => (p.id, p.ti, p.tj)).mapGroups { (key: (Long, Int, Int), it: Iterator[Piece]) =>
       val (id, ti, tj) = key
       val pts = ts + 2 * r
-      val padded = Array.fill(pts * pts)(borderValue)
+      val padded = new Array[Boolean](pts * pts)
+      if (borderValue) java.util.Arrays.fill(padded, true)
       it.foreach { p =>
-        val (rows, cols) = (if (p.di == 0) ts else r, if (p.dj == 0) ts else r)
-        val (i0, j0) = (
-          if (p.di < 0) 0 else if (p.di > 0) ts + r else r,
-          if (p.dj < 0) 0 else if (p.dj > 0) ts + r else r)
-        var k = 0
-        for (i <- 0 until rows; j <- 0 until cols) {
-          padded((i0 + i) * pts + (j0 + j)) = p.strip(k); k += 1
-        }
+        val ((i0, rows), (j0, cols)) = (landing(p.di, ts, r), landing(p.dj, ts, r))
+        copyBox(p.strip, 0, cols, 0, padded, i0 * pts + j0, pts, 0, 1, rows, cols)
       }
       val res =
         if (isDilation) StencilKernel.dilate(padded, Array(pts, pts), fp, fshape)
         else StencilKernel.erode(padded, Array(pts, pts), fp, fshape)
       val out = new Array[Boolean](ts * ts)
-      for (i <- 0 until ts; j <- 0 until ts) out(i * ts + j) = res((i + r) * pts + (j + r))
+      copyBox(res, r * pts + r, pts, 0, out, 0, ts, 0, 1, ts, ts)
       Tile(id, ti, tj, out)
     }
   }
@@ -126,30 +143,25 @@ object TiledStencil {
     val (d0, d1, d2) = (dims(0), dims(1), dims(2))
     for (ti <- 0 until d0 / ts; tj <- 0 until d1 / ts; tk <- 0 until d2 / ts) yield {
       val data = new Array[Boolean](ts * ts * ts)
-      for (i <- 0 until ts; j <- 0 until ts; k <- 0 until ts)
-        data((i * ts + j) * ts + k) =
-          mask(((ti * ts + i) * d1 + (tj * ts + j)) * d2 + (tk * ts + k))
+      copyBox(mask, ((ti * d1 + tj) * d2 + tk) * ts, d2, d1 * d2, data, 0, ts, ts * ts, ts, ts, ts)
       Tile3(id, ti, tj, tk, data)
     }
   }
 
   def untile3(tiles: Seq[Tile3], dims: Array[Int], ts: Int): Array[Boolean] = {
-    val out = new Array[Boolean](dims(0) * dims(1) * dims(2))
+    val (d1, d2) = (dims(1), dims(2))
+    val out = new Array[Boolean](dims(0) * d1 * d2)
     tiles.foreach { t =>
-      for (i <- 0 until ts; j <- 0 until ts; k <- 0 until ts)
-        out(((t.ti * ts + i) * dims(1) + (t.tj * ts + j)) * dims(2) + (t.tk * ts + k)) =
-          t.data((i * ts + j) * ts + k)
+      copyBox(t.data, 0, ts, ts * ts, out, ((t.ti * d1 + t.tj) * d2 + t.tk) * ts, d2, d1 * d2, ts, ts, ts)
     }
     out
   }
 
   private def slab3(data: Array[Boolean], ts: Int, r: Int,
                     di: Int, dj: Int, dk: Int): Array[Boolean] = {
-    def rng(d: Int) = if (d < 0) 0 until r else if (d > 0) ts - r until ts else 0 until ts
-    val (is, js, ks) = (rng(di), rng(dj), rng(dk))
-    val out = new Array[Boolean](is.length * js.length * ks.length)
-    var c = 0
-    for (i <- is; j <- js; k <- ks) { out(c) = data((i * ts + j) * ts + k); c += 1 }
+    val ((i0, ni), (j0, nj), (k0, nk)) = (edge(di, ts, r), edge(dj, ts, r), edge(dk, ts, r))
+    val out = new Array[Boolean](ni * nj * nk)
+    copyBox(data, (i0 * ts + j0) * ts + k0, ts, ts * ts, out, 0, nk, nj * nk, ni, nj, nk)
     out
   }
 
@@ -174,23 +186,18 @@ object TiledStencil {
       .mapGroups { (key: (Long, Int, Int, Int), it: Iterator[Piece3]) =>
         val (id, ti, tj, tk) = key
         val pts = ts + 2 * r
-        val padded = Array.fill(pts * pts * pts)(borderValue)
+        val padded = new Array[Boolean](pts * pts * pts)
+        if (borderValue) java.util.Arrays.fill(padded, true)
         it.foreach { p =>
-          def ext(d: Int) = if (d == 0) ts else r
-          def org(d: Int) = if (d < 0) 0 else if (d > 0) ts + r else r
-          val (ri, rj, rk) = (ext(p.di), ext(p.dj), ext(p.dk))
-          val (oi, oj, ok) = (org(p.di), org(p.dj), org(p.dk))
-          var c = 0
-          for (i <- 0 until ri; j <- 0 until rj; k <- 0 until rk) {
-            padded(((oi + i) * pts + (oj + j)) * pts + (ok + k)) = p.strip(c); c += 1
-          }
+          val ((oi, ri), (oj, rj), (ok, rk)) =
+            (landing(p.di, ts, r), landing(p.dj, ts, r), landing(p.dk, ts, r))
+          copyBox(p.strip, 0, rk, rj * rk, padded, (oi * pts + oj) * pts + ok, pts, pts * pts, ri, rj, rk)
         }
         val res =
           if (isDilation) StencilKernel.dilate(padded, Array(pts, pts, pts), fp, fshape)
           else StencilKernel.erode(padded, Array(pts, pts, pts), fp, fshape)
         val out = new Array[Boolean](ts * ts * ts)
-        for (i <- 0 until ts; j <- 0 until ts; k <- 0 until ts)
-          out((i * ts + j) * ts + k) = res(((i + r) * pts + (j + r)) * pts + (k + r))
+        copyBox(res, (r * pts + r) * pts + r, pts, pts * pts, out, 0, ts, ts * ts, ts, ts, ts)
         Tile3(id, ti, tj, tk, out)
       }
   }

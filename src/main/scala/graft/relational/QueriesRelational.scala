@@ -48,8 +48,7 @@ object QueriesRelational {
         val joined = SharedInputs(s, dir, "bucketedJoin") {
           // tag carries the JVM name too: the table CATALOG is per-session,
           // but the tmpdir PATH is host-shared — two concurrent harness JVMs
-          // (Verify + test suite) racing one path corrupts both scans, the
-          // same failure class fixed for q_source_roundtrip above
+          // (Verify + test suite) racing one path corrupts both scans
           val jvmTag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
             .replaceAll("[^A-Za-z0-9]", "_")
           val tag = "b" + math.abs(dir.hashCode).toString + "_" + jvmTag
@@ -1535,30 +1534,35 @@ object QueriesRelational {
              |round(quantile_cont(l_extendedprice, 0.99), 4) AS p99_price
              |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
-    // Source/sink round-trip beyond parquet: nation is written to CSV and
-    // JSON under java.io.tmpdir, read back through the csv/json sources
-    // (schema re-inferred for CSV), and aggregated; the oracle runs the
-    // same rollup on the parquet original — header/type round-trip is the
-    // verified property.
+    // Source/sink round-trip beyond parquet: nation is written to CSV, JSON
+    // and ORC under java.io.tmpdir, read back through those sources (schema
+    // re-inferred for CSV), and aggregated; the oracle runs the same rollup
+    // on the parquet original — header/type round-trip is the verified
+    // property.
     Q("q_source_roundtrip",
       (s, dir) => {
-        // per-JVM scratch: a fixed path raced when two harnesses (e.g. a
-        // Verify run and the test suite) exercised this gate concurrently —
-        // one JVM's overwrite deleted files the other's scan had listed
+        // a fresh dir per call, so concurrent harness JVMs (or calls) never
+        // share a path; its name carries the JVM's name, so a check can tell
+        // this JVM's dirs from another's. The joined rows (one per region)
+        // are materialized by an eager localCheckpoint before the dir is
+        // deleted, since the returned frame must not read files that are gone
         val jvmTag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
           .replaceAll("[^A-Za-z0-9]", "_")
-        val base = new java.io.File(sys.props("java.io.tmpdir"), s"graft_roundtrip_$jvmTag").getPath
-        val nation = T(s, dir, "nation")
-        nation.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$base/csv")
-        nation.coalesce(1).write.mode("overwrite").json(s"$base/json")
-        nation.coalesce(1).write.mode("overwrite").orc(s"$base/orc")
-        val fromCsv = s.read.option("header", "true").option("inferSchema", "true").csv(s"$base/csv")
-        val fromJson = s.read.json(s"$base/json")
-        val fromOrc = s.read.orc(s"$base/orc")
-        fromCsv.groupBy("n_regionkey").agg(count(lit(1)).as("n_csv"))
-          .join(fromJson.groupBy("n_regionkey").agg(count(lit(1)).as("n_json")), "n_regionkey")
-          .join(fromOrc.groupBy("n_regionkey").agg(count(lit(1)).as("n_orc")), "n_regionkey")
-          .select(col("n_regionkey").cast("long"), col("n_csv"), col("n_json"), col("n_orc"))
+        val base = java.nio.file.Files.createTempDirectory(s"graft_roundtrip_${jvmTag}_")
+        try {
+          val nation = T(s, dir, "nation")
+          nation.coalesce(1).write.option("header", "true").csv(s"$base/csv")
+          nation.coalesce(1).write.json(s"$base/json")
+          nation.coalesce(1).write.orc(s"$base/orc")
+          val fromCsv = s.read.option("header", "true").option("inferSchema", "true").csv(s"$base/csv")
+          val fromJson = s.read.json(s"$base/json")
+          val fromOrc = s.read.orc(s"$base/orc")
+          fromCsv.groupBy("n_regionkey").agg(count(lit(1)).as("n_csv"))
+            .join(fromJson.groupBy("n_regionkey").agg(count(lit(1)).as("n_json")), "n_regionkey")
+            .join(fromOrc.groupBy("n_regionkey").agg(count(lit(1)).as("n_orc")), "n_regionkey")
+            .select(col("n_regionkey").cast("long"), col("n_csv"), col("n_json"), col("n_orc"))
+            .localCheckpoint()
+        } finally graft.core.ScratchDir.delete(base)
       },
       Some("""SELECT n_regionkey, count(*) AS n_csv, count(*) AS n_json, count(*) AS n_orc
              |FROM nation GROUP BY n_regionkey""".stripMargin)),

@@ -250,14 +250,7 @@ object StreamingOps {
       spark.createDataFrame(drained.collectAsList(), drained.schema)
     } finally {
       spark.catalog.dropTempView(table)
-      try {
-        // Files.walk holds a directory stream open until closed — scope
-        // it with Using so the fd is released even when deletion throws
-        scala.util.Using.resource(java.nio.file.Files.walk(ckpt)) { walk =>
-          walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-      } catch { case _: Throwable => () }
+      graft.core.ScratchDir.delete(ckpt)
     }
   }
 }

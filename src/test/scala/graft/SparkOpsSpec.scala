@@ -10,7 +10,7 @@ object SharedSpark {
   lazy val spark: SparkSession = {
     // the session lives until the test JVM exits, and so does its warehouse
     val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
-    sys.addShutdownHook(TempDirs.deleteRecursively(warehouse))
+    sys.addShutdownHook(graft.core.ScratchDir.delete(warehouse))
     SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
@@ -1270,5 +1270,33 @@ class QuerySmokeSpec extends AnyFunSuite {
 
   test("entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+}
+
+class SourceRoundtripSpec extends AnyFunSuite {
+  private val spark = SharedSpark.spark
+  import spark.implicits._
+
+  test("q_source_roundtrip keeps its rows and leaves no scratch dir behind") {
+    // only this JVM's dirs: the gate names them after the JVM, as the
+    // earlier version of it did for the one dir it wrote to and never
+    // deleted, and another JVM may run the gate at the same time
+    val jvmTag = java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+      .replaceAll("[^A-Za-z0-9]", "_")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def scratch: Set[String] =
+      Option(tmp.list()).toSeq.flatten.filter(_.startsWith(s"graft_roundtrip_$jvmTag")).toSet
+    TempDirs.withTempDir("graft_nation") { dir =>
+      (0 until 25).map(i => (i, s"NATION$i", i % 4, s"comment, with a comma $i"))
+        .toDF("n_nationkey", "n_name", "n_regionkey", "n_comment")
+        .write.parquet(s"$dir/nation.parquet")
+      val gate = SparkEntry.all.find(_.name == "q_source_roundtrip").get
+      val before = scratch
+      val df = gate.run(spark, dir)
+      assert(scratch -- before == Set.empty, s"scratch left behind: ${scratch -- before}")
+      // the returned frame still reads back after its files are gone
+      val got = df.as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      assert(got == Seq((0L, 7L, 7L, 7L), (1L, 6L, 6L, 6L), (2L, 6L, 6L, 6L), (3L, 6L, 6L, 6L)))
+    }
   }
 }
