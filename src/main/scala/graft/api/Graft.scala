@@ -88,13 +88,16 @@ object Graft {
   /** Distributed 3-D connected-components over tiled boolean volumes — the
     * cluster path for the reference's `label` on volumes too large for one
     * row (/root/reference/imops/measure.py:33-137). `connectivity` 1..3
-    * maps to cc3d 6/18/26 like the reference; cross-tile merge shuffles
-    * O(surface), never O(volume). Returns (global flat index, label) with
-    * the kernel's scan-order label numbering.
+    * maps to cc3d 6/18/26 like the reference. Returns (global flat index,
+    * label) with the kernel's scan-order label numbering.
     *
-    * The result is materialized before this returns (a local checkpoint
-    * that Spark frees once the frame is unreachable); there is nothing to
-    * unpersist. */
+    * The kernel runs twice per tile: once to find the cross-tile merges,
+    * once to write the labels. Only the O(surface) border and component
+    * rows are cached, never one row per voxel. While the merge graph fits
+    * the driver, the call is three single-stage jobs with no shuffle. The
+    * result is materialized before this returns (a local checkpoint that
+    * Spark frees once the frame is unreachable); there is nothing to
+    * unpersist, and a persisted `tiles` keeps its cache. */
   def labelVolume(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile3],
                   tileSize: Int, grid: Array[Int], connectivity: Int = 1)
                  : org.apache.spark.sql.DataFrame =
@@ -103,12 +106,12 @@ object Graft {
 
   /** 2-D counterpart of [[labelVolume]]: distributed connected components
     * over tiled boolean masks. `connectivity` 1 (cross, skimage conn-1) or
-    * 2 (8-adjacency); conn-1 merges tiles with the cheaper face-key
-    * equi-join, conn-2 with the shell-probe exchange (corner cells of four
-    * tiles can meet diagonally). Shuffle O(perimeter), never O(area).
+    * 2 (8-adjacency; corner cells of four tiles can meet diagonally).
     *
-    * Like [[labelVolume]], the result is materialized before this returns;
-    * there is nothing to unpersist. */
+    * The same code as [[labelVolume]]: the kernel runs twice per tile, only
+    * O(perimeter) rows are cached, the driver route is three single-stage
+    * jobs with no shuffle, and the result is materialized before this
+    * returns; there is nothing to unpersist. */
   def labelImage(tiles: org.apache.spark.sql.Dataset[graft.operators.TiledStencil.Tile],
                  tileSize: Int, gridRows: Int, gridCols: Int, connectivity: Int = 1)
                 : org.apache.spark.sql.DataFrame =

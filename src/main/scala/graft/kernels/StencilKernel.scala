@@ -177,11 +177,20 @@ object StencilKernel {
 
   /** `boxed` rewrite: crop to the mask's bounding box + footprint margin, run
     * the op on the crop, paste back (/root/reference/imops/morphology.py:117-151).
-    * Valid only when the dilated support fits strictly inside the image. */
+    * Valid only when the dilated support fits strictly inside the image.
+    *
+    * The crop is exact when the footprint holds its centre: erosion then
+    * reads each cell itself, so every cell outside the support erodes to
+    * false, as the paste-back assumes. Without the centre, erosion turns a
+    * cell outside the support true when every cell its footprint reads is
+    * true or outside the image, and the crop's edge would read true where
+    * the image holds false; such a footprint runs `op` on the whole image. */
   def boxed(data: Array[Boolean], shape: Array[Int],
             fp: Array[Boolean], fshape: Array[Int],
             op: (Array[Boolean], Array[Int], Array[Boolean], Array[Int]) => Array[Boolean]): Array[Boolean] = {
     checkShape(data, shape)
+    val centre = fshape.indices.foldLeft(0)((f, d) => f * fshape(d) + fshape(d) / 2)
+    if (centre >= fp.length || !fp(centre)) return op(data, shape, fp, fshape)
     if (!data.exists(identity)) return new Array[Boolean](data.length)
     val margin = fshape.map(_ / 2)
     val box = Box.fromMask(data, shape).addMargin(margin.toSeq)

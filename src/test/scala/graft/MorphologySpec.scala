@@ -120,6 +120,32 @@ class MorphologyOracleSpec extends AnyFunSuite {
     }
   }
 
+  test("boxed ops equal the per-cell definition when the footprint lacks its centre") {
+    // erosion without the centre can set cells outside the support: here
+    // the last cell reads only outside the image, and the cells left of
+    // the support read its true cells
+    val line = Array.tabulate(10)(i => i == 5 || i == 6)
+    val (fp1, fs1) = (Array(false, false, true), Array(3))
+    assert(StencilKernel.boxed(line, Array(10), fp1, fs1, StencilKernel.erode)
+      .sameElements(oErode(line, Array(10), fp1, fs1)), "boxed erode, 1-D shift")
+    val rng = new scala.util.Random(2024)
+    for (rank <- 1 to 4) {
+      val shape = Array.tabulate(rank)(d => 8 + d + (if (d == rank - 1) 5 else 0))
+      val fs = Array.fill(rank)(if (rank % 2 == 0) 4 else 3)
+      val centre = fs.indices.foldLeft(0)((f, d) => f * fs(d) + fs(d) / 2)
+      val fp = Array.tabulate(fs.product)(f => f != centre && rng.nextInt(3) > 0)
+      val strides = NdTensor.strides(shape)
+      val m = Array.tabulate(shape.product) { f =>
+        (0 until rank).forall { d => val c = (f / strides(d)) % shape(d); c >= 3 && c < shape(d) - 3 } &&
+          rng.nextInt(4) > 0
+      }
+      assert(StencilKernel.boxed(m, shape, fp, fs, StencilKernel.dilate)
+        .sameElements(oDilate(m, shape, fp, fs)), s"boxed dilate rank $rank ${show(shape, fs, fp)}")
+      assert(StencilKernel.boxed(m, shape, fp, fs, StencilKernel.erode)
+        .sameElements(oErode(m, shape, fp, fs)), s"boxed erode rank $rank ${show(shape, fs, fp)}")
+    }
+  }
+
   test("data that does not fill its shape exactly is rejected") {
     val bad = Seq(
       (Array(16), 20),         // longer array: the last line would write past the output

@@ -231,13 +231,24 @@ class DistributedLabelSpec extends AnyFunSuite {
     assert(labels == Set(1L))
   }
 
+  // non-cubic grids: a border matcher that swapped axes or grid sizes
+  // would still pass on the cubic and square masks above. Densities sit
+  // near each connectivity's percolation threshold, so many components
+  // cross tile borders without merging into one blob.
+  private val nonCubic =
+    Seq(1 -> 0.3, 2 -> 0.12, 3 -> 0.08).map { case (conn, p) =>
+      randomCase(s"3-D 16x8x24 conn $conn", 41 + conn, Array(16, 8, 24), 8, conn)(_.nextDouble() < p)
+    } ++ Seq(1 -> 0.55, 2 -> 0.35).map { case (conn, p) =>
+      randomCase(s"2-D 16x48 conn $conn", 51 + conn, Array(16, 48), 16, conn)(_.nextDouble() < p)
+    }
+
   test("driver and distributed merge routes give identical labels on every mask") {
     // every mask above resolves on the driver route by default;
     // localCutoff 0 sends it through the GraphCC fixpoint and the
     // distributed densify instead
     val empty = new LabelCase("all-false 3-D", new Array[Boolean](16 * 16 * 16),
       Array(16, 16, 16), 8, 1)
-    for (c <- Seq(dense2, sparse2, dense3) ++ sparse3 ++ Seq(lines, empty)) {
+    for (c <- Seq(dense2, sparse2, dense3) ++ sparse3 ++ Seq(lines, empty) ++ nonCubic) {
       val driver = c.labels()
       val distributed = c.labels(localCutoff = 0L)
       assert(driver == distributed, s"${c.name}: routes disagree")
@@ -270,12 +281,49 @@ class DistributedLabelSpec extends AnyFunSuite {
     val mask = Array.fill(rows * cols)(rng.nextInt(3) > 0)
     val tiles = TiledStencil.tile(mask, rows, cols, ts).toDS()
     check("2-D conn 2")(() => DistributedLabel(tiles, ts, rows / ts, cols / ts, connectivity = 2))
-    // the benchmark's shape: apply3 at connectivity 1, on both routes
+    // the benchmark's shape: apply3 at connectivity 1, on both routes, over
+    // tiles its caller persisted; labeling releases its own caches, never
+    // the caller's
     val tiles3 = TiledStencil.tile3(dense3.mask, dense3.dims, dense3.ts).toDS()
-    check("3-D conn 1, driver route")(() =>
-      DistributedLabel.apply3(tiles3, dense3.ts, dense3.grid))
-    check("3-D conn 1, distributed route")(() =>
-      DistributedLabel.label3(tiles3, dense3.ts, dense3.grid, 1, localCutoff = 0L))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    tiles3.count()
+    try {
+      check("3-D conn 1, driver route")(() =>
+        DistributedLabel.apply3(tiles3, dense3.ts, dense3.grid))
+      check("3-D conn 1, distributed route")(() =>
+        DistributedLabel.label3(tiles3, dense3.ts, dense3.grid, 1, localCutoff = 0L))
+      assert(tiles3.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "the caller's persisted tiles lost their storage level")
+      // a fresh Dataset over the same plan, so the lookup is not a stale one
+      assert(tiles3.toDF().queryExecution.withCachedData
+        .find(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]).isDefined,
+        "the caller's persisted tiles lost their CacheManager entry")
+    } finally tiles3.unpersist(blocking = true)
+  }
+
+  test("the driver route runs at most three stages and shuffles nothing") {
+    // pins the plan shape: count, collect and relabel, one stage each. A
+    // pixel-row join or an aggregate exchange put back would add stages
+    // and shuffle bytes.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val tiles3 = TiledStencil.tile3(dense3.mask, dense3.dims, dense3.ts).toDS()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        shuffleBytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      DistributedLabel.label3(tiles3, dense3.ts, dense3.grid, 1, GraphCC.LocalVertexCutoff)
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(stages.get >= 1 && stages.get <= 3, s"${stages.get} stages")
+    assert(shuffleBytes.get == 0L, s"${shuffleBytes.get} shuffle bytes written")
   }
 }
 
