@@ -344,13 +344,13 @@ object Bench {
     val slices256 = slices(256, 65536) // 256 slices of 256x256
     bench("zoom_o1", c24, Some(slices256)) {
       slices256
-        .select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(256), lit(256)),
+        .select(graft.exprs.Kernels.zoom(col("data"), array(lit(256), lit(256)),
           array(lit(2.0), lit(2.0)), lit(1), lit(0.0)).getField("_1").as("z"))
         .agg(sum(get(col("z"), lit(0)))).collect()
     }
     bench("zoom_o0", c24, Some(slices256)) {
       slices256
-        .select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(256), lit(256)),
+        .select(graft.exprs.Kernels.zoom(col("data"), array(lit(256), lit(256)),
           array(lit(2.0), lit(2.0)), lit(0), lit(0.0)).getField("_1").as("z"))
         .agg(sum(get(col("z"), lit(0)))).collect()
     }
@@ -381,17 +381,17 @@ object Bench {
     }
     bench("binary_erosion", v512.toDouble, Some(masks512)) {
       masks512
-        .select(graft.exprs.MorphExpr.erode(col("mask"), array(lit(512), lit(512))).as("e"))
+        .select(graft.api.Graft.binaryErosion(col("mask"), array(lit(512), lit(512))).as("e"))
         .agg(sum(when(get(col("e"), lit(0)), 1).otherwise(0))).collect()
     }
     bench("binary_dilation", v512.toDouble, Some(masks512)) {
       masks512
-        .select(graft.exprs.MorphExpr.dilate(col("mask"), array(lit(512), lit(512))).as("e"))
+        .select(graft.api.Graft.binaryDilation(col("mask"), array(lit(512), lit(512))).as("e"))
         .agg(sum(when(get(col("e"), lit(0)), 1).otherwise(0))).collect()
     }
     // closing/opening at the same 512^3 matched-work shape
     // (imops README.md:31-32: 469/522 ms) through the facade: one
-    // MorphExpr per row runs both passes in a single kernel call
+    // Kernels.morph per row runs both passes in a single kernel call
     bench("binary_closing", v512.toDouble, Some(masks512)) {
       masks512
         .select(graft.api.Graft.binaryClosing(col("mask"), array(lit(512), lit(512))).as("e"))
@@ -487,7 +487,7 @@ object Bench {
       val xs = typedlit((0 until 256).map(_.toDouble).toArray)
       val xq = typedlit((0 until 256).map(_ + 0.37).toArray)
       interpInput
-        .select(graft.exprs.Interp1dExpr.interp1dArr(
+        .select(graft.exprs.Kernels.interp1d(
           xs, col("data"), xq, lit(true), lit(0.0)).as("y"))
         .agg(sum(get(col("y"), lit(0)))).collect()
     }
@@ -515,7 +515,7 @@ object Bench {
     val radonReady = radonInput.select(col("id"), circleMask(col("data"), lit(256)).as("data"))
     bench("radon", 32.0 * 256 * 180, Some(radonReady)) {
       radonReady
-        .select(graft.exprs.RadonExpr.radon(col("data"), lit(256), theta180).as("s"))
+        .select(graft.exprs.Kernels.radon(col("data"), lit(256), theta180).as("s"))
         .agg(sum(get(col("s"), lit(0)))).collect()
     }
     // angle-sharded variant THROUGH THE ROUTER (r9 verdict item 2): the
@@ -534,10 +534,10 @@ object Bench {
         .agg(sum(get(col("sino"), lit(0)))).collect()
     }
     val sinoInput = radonReady
-      .select(graft.exprs.RadonExpr.radon(col("data"), lit(256), theta180).as("s"))
+      .select(graft.exprs.Kernels.radon(col("data"), lit(256), theta180).as("s"))
     bench("inverse_radon", 32.0 * 256 * 256, Some(sinoInput)) {
       sinoInput
-        .select(graft.exprs.InverseRadonExpr.inverseRadon(col("s"), lit(256), theta180, lit(0.0)).as("r"))
+        .select(graft.exprs.Kernels.inverseRadon(col("s"), lit(256), theta180, lit(0.0), lit(0.0), lit(1.0)).as("r"))
         .agg(sum(get(col("r"), lit(0)))).collect()
     }
 

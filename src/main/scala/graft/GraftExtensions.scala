@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.exprs.{CenterOfMassAgg, ComPartialSums, DotProduct, Interp1dExpr,
-  InverseRadonExpr, MorphExpr, RadonExpr, ZoomExpr}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import graft.exprs.{CenterOfMassAgg, ComPartialSums, DotProduct, KernelCall, KernelFn, Kernels}
 
 /** Session-extension registration: exposes the custom Catalyst expressions
   * as SQL functions so `spark.sql` users get them too. Install with
@@ -31,6 +31,11 @@ object GraftExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
 
+  /** A kernel under its declared name; `fixed` literals complete the
+    * arguments the SQL form leaves out. */
+  private def kernel(fn: KernelFn, usage: String, fixed: Expression*) =
+    (fn.name, info(fn.name, usage), (args: Seq[Expression]) => KernelCall(fn, args ++ fixed))
+
   val registrations: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("dot_product",
       info("dot_product", "dot_product(a, b) - codegen'd Σ a[k]*b[k] over numeric arrays"),
@@ -44,25 +49,16 @@ object GraftExtensions {
       info("com_partial",
         "com_partial(data, rows, cols, slice) - per-slice [Σw, Σw·s, Σw·i, Σw·j] partial sums"),
       (args: Seq[Expression]) => ComPartialSums(args(0), args(1), args(2), args(3))),
-    ("graft_zoom",
-      info("graft_zoom",
-        "graft_zoom(data, shape, scale, order, cval) - n-d zoom, returns struct(_1 data, _2 shape)"),
-      (args: Seq[Expression]) => ZoomExpr(args(0), args(1), args(2), args(3), args(4))),
-    ("graft_interp1d",
-      info("graft_interp1d",
-        "graft_interp1d(xs, ys, xq, extrapolate, fill) - whole-array linear interpolation"),
-      (args: Seq[Expression]) => Interp1dExpr(args(0), args(1), args(2), args(3), args(4))),
-    ("graft_morph",
-      info("graft_morph",
-        "graft_morph(mask, shape, dilation) - default-cross binary erosion/dilation"),
-      (args: Seq[Expression]) => MorphExpr(args(0), args(1), args(2))),
-    ("graft_radon",
-      info("graft_radon", "graft_radon(data, size, theta_deg) - forward radon of one slice"),
-      (args: Seq[Expression]) => RadonExpr(args(0), args(1), args(2))),
-    ("graft_iradon",
-      info("graft_iradon",
-        "graft_iradon(sinogram, size, theta_deg, fill) - filtered backprojection of one slice"),
-      (args: Seq[Expression]) => InverseRadonExpr(args(0), args(1), args(2), args(3))))
+    kernel(Kernels.zoom,
+      "graft_zoom(data, shape, scale, order, cval) - n-d zoom, returns struct(_1 data, _2 shape)"),
+    kernel(Kernels.interp1d,
+      "graft_interp1d(xs, ys, xq, extrapolate, fill) - whole-array linear interpolation"),
+    kernel(Kernels.morph,
+      "graft_morph(mask, shape, dilation) - default-cross binary erosion/dilation", Literal(false)),
+    kernel(Kernels.radon, "graft_radon(data, size, theta_deg) - forward radon of one slice"),
+    kernel(Kernels.inverseRadon,
+      "graft_iradon(sinogram, size, theta_deg, fill) - filtered backprojection of one slice",
+      Literal(0.0), Literal(1.0)))
 
   /** Register on an existing session (temp functions). */
   def register(spark: SparkSession): Unit =

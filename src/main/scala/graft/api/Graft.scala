@@ -24,12 +24,12 @@ object Graft {
            scaleFactor: Either[Double, Seq[Double]], axis: Seq[Int] = Seq(),
            order: Int = 1, fillValue: Double = 0.0): Column = {
     val scales = NdTensor.broadcastParam(rank, scaleFactor, axis, default = 1.0)
-    graft.exprs.ZoomExpr.zoomCol(data, shape, array(scales.map(lit): _*), lit(order), lit(fillValue))
+    graft.exprs.Kernels.zoom(data, shape, array(scales.map(lit): _*), lit(order), lit(fillValue))
   }
 
   /** zoom_to_shape (/root/reference/imops/zoom.py:129-188). */
   def zoomToShape(data: Column, shape: Column, target: Seq[Int], order: Int = 1): Column =
-    TensorFunctions.zoomToShapeUdf(data, shape, array(target.map(lit): _*), lit(order))
+    graft.exprs.Kernels.zoomToShape(data, shape, array(target.map(lit): _*), lit(order))
 
   /** pointwise_add with scalar or same-shape array summand
     * (/root/reference/imops/numeric.py:99-192). */
@@ -48,30 +48,34 @@ object Graft {
   def cropToShape(data: Column, target: Int, ratio: Double = 0.5): Column =
     TensorFunctions.cropToShape(data, target, ratio)
 
-  def binaryErosion(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.erode(mask, shape)
-  def binaryDilation(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.dilate(mask, shape)
-  def binaryClosing(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.close(mask, shape)
-  def binaryOpening(mask: Column, shape: Column): Column = graft.exprs.MorphExpr.open(mask, shape)
+  /** Default-cross morphology; closing and opening run both passes in one
+    * kernel call per row. */
+  def binaryErosion(mask: Column, shape: Column): Column = morph(mask, shape, dilation = false, thenDual = false)
+  def binaryDilation(mask: Column, shape: Column): Column = morph(mask, shape, dilation = true, thenDual = false)
+  def binaryClosing(mask: Column, shape: Column): Column = morph(mask, shape, dilation = true, thenDual = true)
+  def binaryOpening(mask: Column, shape: Column): Column = morph(mask, shape, dilation = false, thenDual = true)
+  private def morph(mask: Column, shape: Column, dilation: Boolean, thenDual: Boolean) =
+    graft.exprs.Kernels.morph(mask, shape, lit(dilation), lit(thenDual))
   def distanceTransformEdt(mask: Column, shape: Column, sampling: Seq[Double]): Column =
-    TensorFunctions.edtUdf(mask, shape, array(sampling.map(lit): _*))
-  def convexHullImage(mask: Column, shape: Column): Column = TensorFunctions.hullUdf(mask, shape)
+    graft.exprs.Kernels.edt(mask, shape, array(sampling.map(lit): _*))
+  def convexHullImage(mask: Column, shape: Column): Column = graft.exprs.Kernels.hull(mask, shape)
   def label(data: Column, shape: Column, background: Double = 0.0, connectivity: Int = -1): Column =
-    TensorFunctions.labelUdf(data, shape, lit(background), lit(connectivity))
+    graft.exprs.Kernels.label(data, shape, lit(background), lit(connectivity))
   def radon(data: Column, size: Int, thetaDeg: Seq[Double]): Column =
-    graft.exprs.RadonExpr.radon(data, lit(size), array(thetaDeg.map(lit): _*))
+    graft.exprs.Kernels.radon(data, lit(size), array(thetaDeg.map(lit): _*))
   /** `radon(..., return_fill=True)` (/root/reference/imops/radon.py:16-102):
     * struct of (sinogram, outside-circle fill) from one validation pass. */
   def radonWithFill(data: Column, size: Int, thetaDeg: Seq[Double]): Column =
-    graft.exprs.RadonExpr.radonWithFill(data, lit(size), array(thetaDeg.map(lit): _*))
+    graft.exprs.Kernels.radonWithFill(data, lit(size), array(thetaDeg.map(lit): _*))
   def inverseRadon(sino: Column, size: Int, thetaDeg: Seq[Double], fillValue: Double = 0.0): Column =
-    graft.exprs.InverseRadonExpr.inverseRadon(sino, lit(size), array(thetaDeg.map(lit): _*), lit(fillValue))
+    inverseRadonFiltered(sino, size, thetaDeg, fillValue, a = 0.0, b = 1.0)
 
   /** Filtered backprojection with the smooth/sharpen filter family
     * `ramp*(1 + a*ramp^b)` (/root/reference/imops/radon.py:235-237). */
   def inverseRadonFiltered(sino: Column, size: Int, thetaDeg: Seq[Double],
                            fillValue: Double, a: Double, b: Double): Column =
-    graft.exprs.InverseRadonExpr.inverseRadonFiltered(sino, lit(size),
-      array(thetaDeg.map(lit): _*), lit(fillValue), a, b)
+    graft.exprs.Kernels.inverseRadon(sino, lit(size), array(thetaDeg.map(lit): _*),
+      lit(fillValue), lit(a), lit(b))
 
   /** Slice-distributed 3-D zoom — the cluster path for the reference's
     * headline trilinear volume zoom (/root/reference/README.md:25) when

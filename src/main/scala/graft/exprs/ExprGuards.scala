@@ -5,16 +5,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType}
 
-/** Shared input guards and codegen glue for the kernel-bridge expressions. */
+/** Input guard and codegen glue shared by [[KernelCall]] and
+  * [[PointwiseAddExpr]]. */
 object ExprGuards {
   /** Fails fast on null array elements instead of leaving the outcome to
     * the physical representation (the bulk converters NPE on
     * GenericArrayData but silently read 0/false from UnsafeArrayData's
-    * null slots). Call sites apply this only when the static element type
-    * is nullable, so dense (`containsNull = false`) schemas — all the
+    * null slots). [[KernelCall]] applies this only when the static element
+    * type is nullable, so dense (`containsNull = false`) schemas — all the
     * benched hot paths — pay nothing.
     */
-  def noNulls(a: ArrayData, what: String): ArrayData = {
+  def noNulls(a: ArrayData, what: String): Unit = {
     val n = a.numElements()
     var i = 0
     while (i < n) {
@@ -23,20 +24,7 @@ object ExprGuards {
           s"graft: $what contains a null element at index $i; kernels require dense arrays")
       i += 1
     }
-    a
   }
-
-  /** Eval-path form: guard only when the static schema allows nulls. */
-  def evalGuard(a: ArrayData, elementsNullable: Boolean, what: String): ArrayData =
-    if (elementsNullable) noNulls(a, what) else a
-
-  /** Codegen form: wraps the generated value expression in the guard when
-    * the static schema allows nulls; otherwise returns it untouched (the
-    * generated code is identical to the unguarded version).
-    */
-  def genGuard(value: String, elementsNullable: Boolean, what: String): String =
-    if (elementsNullable) s"""graft.exprs.ExprGuards.noNulls($value, "$what")"""
-    else value
 
   /** Whether the static type is an array whose elements may be null. */
   def elemNullable(dt: DataType): Boolean = dt match {

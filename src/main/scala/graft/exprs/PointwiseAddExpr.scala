@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
 /** pointwise_add (imops/numeric.py:99-192) as a native Expression: a
   * numeric array plus a double scalar or a numeric array, per element, as
   * `array<double>`. Dense rows take one bulk read, a primitive loop and one
-  * `UnsafeArrayData.fromPrimitiveArray` out, like [[ZoomExpr]] and
-  * [[MorphExpr]]; Spark's `transform`/`zip_with` are interpreted lambdas
+  * `UnsafeArrayData.fromPrimitiveArray` out, like [[KernelCall]]; Spark's
+  * `transform`/`zip_with` are interpreted lambdas
   * (`CodegenFallback`) that box every cell.
   *
   * Results equal those HOF forms: null elements stay null (no

@@ -2,23 +2,20 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.kernels._
 
 /** Public Column-returning API over tensor rows.
   *
-  * Two execution paths, mirroring the reference's Backend dispatch
-  * (/root/reference/imops/backend.py:29-64):
-  *  - "builtin" — compositions of `org.apache.spark.sql.functions` for
-  *    pad/crop/slice and full. `fillArray` and `isinArray` are `transform`
-  *    lambdas, which Spark 4.1 evaluates interpreted (`CodegenFallback`,
-  *    one boxed value per cell); they stay there because no benchmarked
-  *    path runs them.
-  *  - "kernel" — the pure kernels in `graft.kernels`, the analog of the
-  *    reference's Cython backend; parallelism is the DataFrame row axis.
-  *    Pointwise add, zoom, interp1d, default-cross morphology,
-  *    center-of-mass partials and radon run as codegen'd expressions in
-  *    `graft.exprs`; the rest (zoom-to-shape, footprint morphology, label,
-  *    EDT, convex hull) are Scala UDFs here.
+  * Pad/crop/slice and full compose `org.apache.spark.sql.functions`.
+  * `fillArray` and `isinArray` are `transform` lambdas, which Spark 4.1
+  * evaluates interpreted (`CodegenFallback`, one boxed value per cell);
+  * they stay there because no benchmarked path runs them. Pointwise add is
+  * the codegen'd [[graft.exprs.PointwiseAddExpr]].
+  *
+  * The other kernels (zoom, interp1d, morphology, label, EDT, hull,
+  * radon), the analog of the reference's Cython backend
+  * (imops/backend.py:29-64), are declared once in
+  * [[graft.exprs.Kernels]]; each runs as one codegen'd
+  * [[graft.exprs.KernelCall]] per row, so the row axis is the parallelism.
   */
 object TensorFunctions {
 
@@ -96,46 +93,4 @@ object TensorFunctions {
     * filling with `value` (pad.py:195-253). */
   def restoreCrop(data: Column, start: Column, total: Column, value: Double): Column =
     padArray(data, start, total - start - size(data), value)
-
-  // ---------- kernel path: UDFs over graft.kernels ----------
-
-  val zoomToShapeUdf = udf { (data: Array[Double], shape: Array[Int], target: Array[Int], order: Int) =>
-    ZoomKernel.zoomToShape(data, shape, target, order, 0.0)
-  }
-
-  /** morphology with an explicit footprint (incl. even shapes with the
-    * origin-shift rule, _morphology.pyx:62-64). */
-  val morphUdf = udf { (data: Array[Boolean], shape: Array[Int],
-                        fp: Array[Boolean], fshape: Array[Int], dilation: Boolean) =>
-    if (dilation) StencilKernel.dilate(data, shape, fp, fshape)
-    else StencilKernel.erode(data, shape, fp, fshape)
-  }
-  /** boxed morphology: crop to the support bounding box + margin, run the
-    * op on the crop, paste back (/root/reference/imops/morphology.py:117-151). */
-  val boxedMorphUdf = udf { (data: Array[Boolean], shape: Array[Int], dilation: Boolean) =>
-    val (fp, fs) = StencilKernel.crossFootprint(shape.length)
-    StencilKernel.boxed(data, shape, fp, fs,
-      if (dilation) StencilKernel.dilate else StencilKernel.erode)
-  }
-
-  /** connected components; returns struct(labels, num, sizes). */
-  val labelUdf = udf { (data: Array[Double], shape: Array[Int], background: Double, connectivity: Int) =>
-    val r = LabelKernel.label(data, shape, background, connectivity)
-    (r.labels, r.num, r.sizes)
-  }
-
-  val edtUdf = udf { (mask: Array[Boolean], shape: Array[Int], sampling: Array[Double]) =>
-    EdtKernel.edt(mask, shape, sampling)
-  }
-
-  /** EDT feature transform (`return_indices`): per cell, the flat index of
-    * the nearest zero cell; -1 when the mask has no zero. */
-  val edtFeatureUdf = udf { (mask: Array[Boolean], shape: Array[Int], sampling: Array[Double]) =>
-    EdtKernel.edtFeature(mask, shape, sampling)._2
-  }
-
-  /** convex_hull_image of one 2-D mask row (morphology.py:524-591). */
-  val hullUdf = udf { (mask: Array[Boolean], shape: Array[Int]) =>
-    HullKernel.convexHullImage(mask, shape)
-  }
 }

@@ -248,12 +248,24 @@ object Multimodal {
     }
   }
 
+  /** Every k-th `frameBytes` chunk of a payload (the last one may be
+    * short); the stub codec's frame model. */
+  def frames(payload: Array[Byte], frameBytes: Int, everyK: Int): Array[Array[Byte]] = {
+    require(frameBytes > 0 && everyK > 0,
+      s"frameBytes/everyK must be positive, got $frameBytes/$everyK")
+    val nFrames = (payload.length + frameBytes - 1) / frameBytes
+    Array.tabulate((nFrames + everyK - 1) / everyK) { o =>
+      val from = o * everyK * frameBytes
+      java.util.Arrays.copyOfRange(payload, from, math.min(from + frameBytes, payload.length))
+    }
+  }
+
   /** "Video" frame sampling: treat the payload as a sequence of fixed-size
     * frame chunks and keep every k-th — the partition/batch plumbing of
-    * real frame sampling, as a codegen'd native Expression (no per-row UDF
-    * converter boxing; see [[graft.exprs.FrameSampleExpr]]). */
+    * real frame sampling, as one codegen'd kernel call per row
+    * ([[graft.exprs.Kernels.frameSample]]). */
   def sampleFrames(df: DataFrame, payloadCol: String, frameBytes: Int, everyK: Int): DataFrame =
-    df.withColumn("frames", graft.exprs.FrameSampleExpr.sample(
+    df.withColumn("frames", graft.exprs.Kernels.frameSample(
         col(payloadCol).cast("binary"), lit(frameBytes), lit(everyK)))
       .withColumn("n_frames", size(col("frames")))
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernels.EdtKernel
+import graft.exprs.Kernels
 
 /** Distributed exact Euclidean distance transform over pixel rows — the
   * 100 TB path for `distance_transform_edt`
@@ -18,10 +18,6 @@ import graft.kernels.EdtKernel
   */
 object DistributedEdt {
 
-  private val dt1dUdf = udf { (f: Seq[Double], w: Double) =>
-    EdtKernel.dt1d(f.toArray, w)
-  }
-
   /** pixels: (i, j, mask:boolean). Returns (i, j, dist). */
   def apply(pixels: DataFrame, sampling: (Double, Double) = (1.0, 1.0)): DataFrame = {
     val inf = lit(1e100)
@@ -31,12 +27,12 @@ object DistributedEdt {
     val pass1 = f0.groupBy("j")
       .agg(transform(array_sort(collect_list(struct(col("i"), col("f")))),
         x => x.getField("f")).as("line"))
-      .select(col("j"), posexplode(dt1dUdf(col("line"), lit(sampling._1))).as(Seq("i", "d")))
+      .select(col("j"), posexplode(Kernels.dt1d(col("line"), lit(sampling._1))).as(Seq("i", "d")))
     // pass 2: lines along axis 1 (fixed i), ordered by j
     pass1.groupBy("i")
       .agg(transform(array_sort(collect_list(struct(col("j"), col("d")))),
         x => x.getField("d")).as("line"))
-      .select(col("i"), posexplode(dt1dUdf(col("line"), lit(sampling._2))).as(Seq("j", "d2")))
+      .select(col("i"), posexplode(Kernels.dt1d(col("line"), lit(sampling._2))).as(Seq("j", "d2")))
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
         sqrt(col("d2")).as("dist"))
   }
@@ -54,17 +50,17 @@ object DistributedEdt {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("f")))),
         x => x.getField("f")).as("line"))
       .select(col("j"), col("k"),
-        posexplode(dt1dUdf(col("line"), lit(sampling._1))).as(Seq("i", "d")))
+        posexplode(Kernels.dt1d(col("line"), lit(sampling._1))).as(Seq("i", "d")))
     val pass2 = pass1.groupBy("i", "k")
       .agg(transform(array_sort(collect_list(struct(col("j"), col("d")))),
         x => x.getField("d")).as("line"))
       .select(col("i"), col("k"),
-        posexplode(dt1dUdf(col("line"), lit(sampling._2))).as(Seq("j", "d")))
+        posexplode(Kernels.dt1d(col("line"), lit(sampling._2))).as(Seq("j", "d")))
     pass2.groupBy("i", "j")
       .agg(transform(array_sort(collect_list(struct(col("k"), col("d")))),
         x => x.getField("d")).as("line"))
       .select(col("i"), col("j"),
-        posexplode(dt1dUdf(col("line"), lit(sampling._3))).as(Seq("k", "d2")))
+        posexplode(Kernels.dt1d(col("line"), lit(sampling._3))).as(Seq("k", "d2")))
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
         col("k").cast("long").as("k"), sqrt(col("d2")).as("dist"))
   }

@@ -39,7 +39,7 @@ object ShardedRadon {
     val rows = rowsHint.getOrElse(df.select(idCol).limit((minShardRows + 1).toInt).count())
     if (rows >= minShardRows)
       df.select(idCol.cast("long").as("id"),
-        graft.exprs.RadonExpr.radon(dataCol, org.apache.spark.sql.functions.lit(size),
+        graft.exprs.Kernels.radon(dataCol, org.apache.spark.sql.functions.lit(size),
           org.apache.spark.sql.functions.typedlit(thetaDeg.toArray)).as("sino"))
     else apply(df, idCol, dataCol, size, thetaDeg, chunks)
   }
@@ -56,7 +56,7 @@ object ShardedRadon {
       .select(col("id"), col("data"),
         explode(sequence(lit(0), lit(groups.length - 1))).as("c"))
       .select(col("id"), col("c"),
-        graft.exprs.RadonExpr.radon(col("data"), lit(size),
+        graft.exprs.Kernels.radon(col("data"), lit(size),
           element_at(arrLit, col("c") + 1)).as("s"))
     sharded.as[(Long, Int, Array[Double])]
       .groupByKey(_._1)

@@ -2,7 +2,7 @@ package graft.relational
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TensorFunctions._
+import graft.exprs.Kernels
 
 /** 2-D kernel queries: a 16x16 grid image is assembled in-query from
   * `events` (cell (i,j) = user_id%16, event_id%16), one row = one tensor,
@@ -223,7 +223,7 @@ object QueriesGrid {
     Q("q_erosion2d",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(graft.exprs.MorphExpr.erode(col("data"), array(lit(N), lit(N))).as("e")),
+            .select(graft.api.Graft.binaryErosion(col("data"), array(lit(N), lit(N))).as("e")),
           "e", N)
         .select(col("i"), col("j"), when(col("out"), 1).otherwise(0).as("e")),
       Some(s"""WITH $maskGridCte
@@ -239,7 +239,7 @@ object QueriesGrid {
     Q("q_dilation2d",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(graft.exprs.MorphExpr.dilate(col("data"), array(lit(N), lit(N))).as("e")),
+            .select(graft.api.Graft.binaryDilation(col("data"), array(lit(N), lit(N))).as("e")),
           "e", N)
         .select(col("i"), col("j"), when(col("out"), 1).otherwise(0).as("e")),
       Some(s"""WITH $maskGridCte
@@ -258,7 +258,7 @@ object QueriesGrid {
     Q("q_erosion2d_even",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(morphUdf(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.morphFootprint(col("data"), array(lit(N), lit(N)),
               array(lit(true), lit(true), lit(true), lit(true)), array(lit(2), lit(2)),
               lit(false)).as("e")),
           "e", N)
@@ -275,7 +275,7 @@ object QueriesGrid {
     Q("q_dilation2d_even",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(morphUdf(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.morphFootprint(col("data"), array(lit(N), lit(N)),
               array(lit(true), lit(true), lit(true), lit(true)), array(lit(2), lit(2)),
               lit(true)).as("e")),
           "e", N)
@@ -298,7 +298,7 @@ object QueriesGrid {
     Q("q_erosion2d_fp",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(morphUdf(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.morphFootprint(col("data"), array(lit(N), lit(N)),
               array(lit(true), lit(true), lit(true), lit(false), lit(false), lit(true)),
               array(lit(3), lit(2)), lit(false)).as("e")),
           "e", N)
@@ -318,7 +318,7 @@ object QueriesGrid {
     Q("q_dilation2d_fp",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(morphUdf(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.morphFootprint(col("data"), array(lit(N), lit(N)),
               array(lit(true), lit(true), lit(true), lit(false), lit(false), lit(true)),
               array(lit(3), lit(2)), lit(true)).as("e")),
           "e", N)
@@ -336,7 +336,7 @@ object QueriesGrid {
     Q("q_edt2d",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(edtUdf(col("data"), array(lit(N), lit(N)), array(lit(1.0), lit(1.0))).as("e")),
+            .select(Kernels.edt(col("data"), array(lit(N), lit(N)), array(lit(1.0), lit(1.0))).as("e")),
           "e", N)
         .select(col("i"), col("j"), round(col("out"), 4).as("dist")),
       Some(s"""WITH $maskGridCte
@@ -366,7 +366,7 @@ object QueriesGrid {
     Q("q_edt2d_indices",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(edtFeatureUdf(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.edtFeature(col("data"), array(lit(N), lit(N)),
               array(lit(1.0), lit(1.0))).as("ft")),
           "ft", N)
         .select(col("i"), col("j"),
@@ -382,7 +382,7 @@ object QueriesGrid {
     Q("q_zoom2d",
       (s, dir) => explodeGrid(
           toTensor(valueGrid(s, dir), asBool = false)
-            .select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(N), lit(N)),
+            .select(Kernels.zoom(col("data"), array(lit(N), lit(N)),
               array(lit(0.5), lit(0.5)), lit(1), lit(0.0)).as("z"))
             .select(col("z").getField("_1").as("zd")),
           "zd", N / 2)
@@ -414,7 +414,7 @@ object QueriesGrid {
           when((col("i") - 8) * (col("i") - 8) + (col("j") - 8) * (col("j") - 8) > 64, 0.0)
             .otherwise(col("v")).as("v"))
         toTensor(circled, asBool = false)
-          .select(graft.exprs.RadonExpr.radon(col("data"), lit(N), array(lit(0.0))).as("sino"))
+          .select(Kernels.radon(col("data"), lit(N), array(lit(0.0))).as("sino"))
           .select(posexplode(col("sino")).as(Seq("offset", "val")))
           .select(col("offset").cast("long").as("offset"), round(col("val"), 4).as("val"))
       },
@@ -444,7 +444,7 @@ object QueriesGrid {
           when(outside, lit(5.0) + ((col("i") + col("j")) % 2).cast("double") * lit(0.0625))
             .otherwise(col("v")).as("v"))
         toTensor(filled, asBool = false)
-          .select(graft.exprs.RadonExpr.radonWithFill(
+          .select(Kernels.radonWithFill(
             col("data"), lit(N), array(lit(0.0))).as("sf"))
           .select(col("sf").getField("_2").as("fill"),
             posexplode(col("sf").getField("_1")).as(Seq("offset", "val")))
@@ -482,7 +482,7 @@ object QueriesGrid {
           when((col("i") - 8) * (col("i") - 8) + (col("j") - 8) * (col("j") - 8) > 64, 0.0)
             .otherwise(col("v")).as("v"))
         toTensor(circled, asBool = false)
-          .select(graft.exprs.RadonExpr.radon(col("data"), lit(N), ZoomSeqLit.thetaArray(180)).as("sino"))
+          .select(Kernels.radon(col("data"), lit(N), ZoomSeqLit.thetaArray(180)).as("sino"))
           .select(posexplode(col("sino")).as(Seq("pos", "val")))
           .select((col("pos") / 180).cast("long").as("offset"),
             (col("pos") % 180).cast("long").as("ang"),
@@ -563,7 +563,7 @@ object QueriesGrid {
         grid.groupBy("event_type")
           .agg(transform(array_sort(collect_list(struct(col("i"), col("j"), col("v")))),
             x => x.getField("v").cast("double")).as("data"))
-          .select(col("event_type"), graft.exprs.RadonExpr.radon(col("data"), lit(N), array(lit(0.0))).as("sino"))
+          .select(col("event_type"), Kernels.radon(col("data"), lit(N), array(lit(0.0))).as("sino"))
           .select(col("event_type"), posexplode(col("sino")).as(Seq("offset", "val")))
           .select(col("event_type"), col("offset").cast("long").as("offset"),
             round(col("val"), 4).as("val"))
@@ -788,7 +788,7 @@ object QueriesGrid {
             .otherwise(col("v")).as("v"))
         explodeGrid(
           toTensor(interior, asBool = true)
-            .select(boxedMorphUdf(col("data"), array(lit(N), lit(N)), lit(false)).as("e2")),
+            .select(Kernels.boxedMorph(col("data"), array(lit(N), lit(N)), lit(false)).as("e2")),
           "e2", N)
           .select(col("i"), col("j"), when(col("out"), 1).otherwise(0).as("e"))
       },
@@ -814,7 +814,7 @@ object QueriesGrid {
         val t3 = value3Grid(s, dir)
           .agg(transform(array_sort(collect_list(struct(col("i"), col("j"), col("k"), col("v")))),
             x => x.getField("v").cast("double")).as("data"))
-        t3.select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(8), lit(8), lit(8)),
+        t3.select(Kernels.zoom(col("data"), array(lit(8), lit(8), lit(8)),
             array(lit(1.5), lit(1.5), lit(1.5)), lit(0), lit(0.0)).getField("_1").as("z"))
           .select(posexplode(col("z")).as(Seq("pos", "v")))
           .select((col("pos") / 144).cast("long").as("i"),
@@ -841,7 +841,7 @@ object QueriesGrid {
     Q("q_zoom4d_nearest",
       (s, dir) => {
         toTensor4(s, dir)
-          .select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(4), lit(4), lit(4), lit(4)),
+          .select(Kernels.zoom(col("data"), array(lit(4), lit(4), lit(4), lit(4)),
             array(lit(1.5), lit(1.5), lit(1.5), lit(1.5)), lit(0), lit(0.0)).getField("_1").as("z"))
           .select(posexplode(col("z")).as(Seq("pos", "v")))
           .select((col("pos") / 216).cast("long").as("i"),
@@ -893,7 +893,7 @@ object QueriesGrid {
         val t4 = m4.agg(transform(
           array_sort(collect_list(struct(col("i"), col("j"), col("k"), col("l"), col("v")))),
           x => x.getField("v") === 1).as("data"))
-        t4.select(graft.exprs.MorphExpr.erode(col("data"),
+        t4.select(graft.api.Graft.binaryErosion(col("data"),
             array(lit(4), lit(4), lit(4), lit(4))).as("e"))
           .select(posexplode(col("e")).as(Seq("pos", "out")))
           .select((col("pos") / 64).cast("long").as("i"),
@@ -932,7 +932,7 @@ object QueriesGrid {
         val t3 = mask3(s, dir)
           .agg(transform(array_sort(collect_list(struct(col("i"), col("j"), col("k"), col("v")))),
             x => x.getField("v") === 1).as("data"))
-        t3.select(edtUdf(col("data"), array(lit(8), lit(8), lit(8)),
+        t3.select(Kernels.edt(col("data"), array(lit(8), lit(8), lit(8)),
             array(lit(1.0), lit(1.0), lit(1.0))).as("e"))
           .select(posexplode(col("e")).as(Seq("pos", "out")))
           .select((col("pos") / 64).cast("long").as("i"),
@@ -974,7 +974,7 @@ object QueriesGrid {
         val t3 = mask3(s, dir)
           .agg(transform(array_sort(collect_list(struct(col("i"), col("j"), col("k"), col("v")))),
             x => x.getField("v") === 1).as("data"))
-        t3.select(edtFeatureUdf(col("data"), array(lit(8), lit(8), lit(8)),
+        t3.select(Kernels.edtFeature(col("data"), array(lit(8), lit(8), lit(8)),
             array(lit(1.0), lit(1.0), lit(1.0))).as("ft"))
           .select(posexplode(col("ft")).as(Seq("pos", "out")))
           .select((col("pos") / 64).cast("long").as("i"),
@@ -1003,7 +1003,7 @@ object QueriesGrid {
     Q("q_hull2d",
       (s, dir) => explodeGrid(
           toTensor(maskGrid(s, dir), asBool = true)
-            .select(hullUdf(col("data"), array(lit(N), lit(N))).as("h")),
+            .select(Kernels.hull(col("data"), array(lit(N), lit(N))).as("h")),
           "h", N)
         .select(col("i"), col("j"), when(col("out"), 1).otherwise(0).as("h")),
       Some(s"""WITH $maskGridCte,
@@ -1129,7 +1129,7 @@ object QueriesGrid {
     Q("q_label2d",
       (s, dir) => {
         val lab = toTensor(maskGrid(s, dir), asBool = false)
-          .select(labelUdf(col("data"), array(lit(N), lit(N)), lit(0.0), lit(2)).as("lab"))
+          .select(Kernels.label(col("data"), array(lit(N), lit(N)), lit(0.0), lit(2)).as("lab"))
         lab.select(posexplode(col("lab").getField("_3")).as(Seq("idx", "sz")))
           .select((col("idx") + 1).cast("long").as("label"), col("sz").cast("long").as("size"))
       },
@@ -1156,7 +1156,7 @@ object QueriesGrid {
         val bucketed = valueGrid(s, dir).select(col("i"), col("j"),
           when(col("v") > 400.0, 1.0).when(col("v") > 0.0, 2.0).otherwise(0.0).as("v"))
         val lab = toTensor(bucketed, asBool = false)
-          .select(labelUdf(col("data"), array(lit(N), lit(N)), lit(2.0), lit(1)).as("lab"))
+          .select(Kernels.label(col("data"), array(lit(N), lit(N)), lit(2.0), lit(1)).as("lab"))
         lab.select(posexplode(col("lab").getField("_3")).as(Seq("idx", "sz")))
           .select((col("idx") + 1).cast("long").as("label"), col("sz").cast("long").as("size"))
       },
@@ -1188,7 +1188,7 @@ object QueriesGrid {
       (s, dir) => {
         val theta = ZoomSeqLit.thetaArray(16)
         toTensor(valueGrid(s, dir), asBool = false)
-          .select(graft.exprs.InverseRadonExpr.inverseRadon(col("data"), lit(N), theta, lit(0.0)).as("rec"))
+          .select(Kernels.inverseRadon(col("data"), lit(N), theta, lit(0.0), lit(0.0), lit(1.0)).as("rec"))
           .select(posexplode(col("rec")).as(Seq("pos", "out")))
           .select((col("pos") / N).cast("long").as("i"), (col("pos") % N).cast("long").as("j"),
             round(col("out"), 2).as("v"))
@@ -1237,7 +1237,7 @@ object QueriesGrid {
         val t3 = value3Grid(s, dir)
           .agg(transform(array_sort(collect_list(struct(col("i"), col("j"), col("k"), col("v")))),
             x => x.getField("v").cast("double")).as("data"))
-        t3.select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(8), lit(8), lit(8)),
+        t3.select(Kernels.zoom(col("data"), array(lit(8), lit(8), lit(8)),
             array(lit(1.5), lit(1.5), lit(1.5)), lit(1), lit(0.0)).getField("_1").as("z"))
           .select(posexplode(col("z")).as(Seq("pos", "raw")))
           .select((col("pos") / 144).cast("long").as("i"),
@@ -1314,7 +1314,7 @@ object QueriesGrid {
     Q("q_zoom4d_linear",
       (s, dir) => {
         toTensor4(s, dir)
-          .select(graft.exprs.ZoomExpr.zoomCol(col("data"), array(lit(4), lit(4), lit(4), lit(4)),
+          .select(Kernels.zoom(col("data"), array(lit(4), lit(4), lit(4), lit(4)),
             array(lit(1.5), lit(1.5), lit(1.5), lit(1.5)), lit(1), lit(0.0)).getField("_1").as("z"))
           .select(posexplode(col("z")).as(Seq("pos", "raw")))
           .select((col("pos") / 216).cast("long").as("i"),
@@ -1358,8 +1358,8 @@ object QueriesGrid {
       (s, dir) => {
         val theta = ZoomSeqLit.thetaArray(16)
         toTensor(valueGrid(s, dir), asBool = false)
-          .select(graft.exprs.InverseRadonExpr.inverseRadonFiltered(
-            col("data"), lit(N), theta, lit(0.0), 0.3, 2.0).as("rec"))
+          .select(Kernels.inverseRadon(
+            col("data"), lit(N), theta, lit(0.0), lit(0.3), lit(2.0)).as("rec"))
           .select(posexplode(col("rec")).as(Seq("pos", "out")))
           .select((col("pos") / N).cast("long").as("i"), (col("pos") % N).cast("long").as("j"),
             round(col("out"), 2).as("v"))

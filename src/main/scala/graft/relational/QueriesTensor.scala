@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TensorFunctions._
-import graft.exprs.MorphExpr
+import graft.api.Graft
+import graft.exprs.Kernels
 import graft.operators.Interp1dJoin
 
 /** imops-parity operators over array columns built in-query from the
@@ -279,14 +280,14 @@ object QueriesTensor {
              |  ELSE ((yc-yd)/(xc-xd)) * xq + (yd - ((yc-yd)/(xc-xd)) * xd) END, 4) AS yq
              |FROM q, par""".stripMargin)),
 
-    // the whole-array interp1d hot path (codegen Interp1dExpr — the same
+    // the whole-array interp1d hot path (codegen Kernels.interp1d — the same
     // kernel the UDF wraps, minus the per-element boxing): per-order ys on
     // the integer grid 0..len-1, queried at half-points; out-of-range
     // queries take the fill value. dd is exactly 0.5 so the lerp is
     // ys[m]*0.5 + ys[m+1]*0.5 bit-for-bit on both sides
     Q("q_interp1d_arr",
       (s, dir) => explodePos(arrDf(s, dir).where(size(col("data")) >= 2)
-        .select(col("id"), graft.exprs.Interp1dExpr.interp1dArr(
+        .select(col("id"), Kernels.interp1d(
             transform(sequence(lit(0), size(col("data")) - 1), x => x.cast("double")),
             col("data"),
             array(lit(0.5), lit(1.5), lit(2.5)),
@@ -308,7 +309,7 @@ object QueriesTensor {
     // row proves the kernel's internal sort reproduces it exactly
     Q("q_interp1d_unsorted",
       (s, dir) => explodePos(arrDf(s, dir).where(size(col("data")) >= 2)
-        .select(col("id"), graft.exprs.Interp1dExpr.interp1dArr(
+        .select(col("id"), Kernels.interp1d(
             reverse(transform(sequence(lit(0), size(col("data")) - 1), x => x.cast("double"))),
             reverse(col("data")),
             array(lit(0.5), lit(1.5), lit(2.5)),
@@ -325,7 +326,7 @@ object QueriesTensor {
 
     Q("q_zoom1d_linear",
       (s, dir) => explodePos(arrDf(s, dir).where(size(col("data")) >= 2)
-        .withColumn("z", graft.exprs.ZoomExpr.zoomCol(col("data"), array(size(col("data"))),
+        .withColumn("z", Kernels.zoom(col("data"), array(size(col("data"))),
           array(lit(2.0)), lit(1), lit(0.0)))
         .select(col("id"), transform(col("z").getField("_1"), x => round(x, 4)).as("data"))),
       Some {
@@ -340,7 +341,7 @@ object QueriesTensor {
 
     Q("q_zoom1d_nearest",
       (s, dir) => explodePos(arrDf(s, dir).where(size(col("data")) >= 2)
-        .withColumn("z", graft.exprs.ZoomExpr.zoomCol(col("data"), array(size(col("data"))),
+        .withColumn("z", Kernels.zoom(col("data"), array(size(col("data"))),
           array(lit(2.0)), lit(0), lit(0.0)))
         .select(col("id"), col("z").getField("_1").as("data"))),
       Some {
@@ -354,7 +355,7 @@ object QueriesTensor {
 
     Q("q_zoom_to_shape",
       (s, dir) => explodePos(arrDf(s, dir).where(size(col("data")).between(2, 13))
-        .withColumn("z", zoomToShapeUdf(col("data"), array(size(col("data"))),
+        .withColumn("z", Kernels.zoomToShape(col("data"), array(size(col("data"))),
           array(lit(4)), lit(1)))
         .select(col("id"), transform(col("z").getField("_1"), x => round(x, 4)).as("data"))),
       Some {
@@ -371,7 +372,7 @@ object QueriesTensor {
 
     Q("q_erosion1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        MorphExpr.erode(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        Graft.binaryErosion(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(maskCte,
         """SELECT id, list_transform(range(1, len(mask)+1), i ->
           |(CASE WHEN i = 1 THEN true ELSE mask[i-1] END)
@@ -381,7 +382,7 @@ object QueriesTensor {
 
     Q("q_dilation1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        MorphExpr.dilate(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        Graft.binaryDilation(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(maskCte,
         """SELECT id, list_transform(range(1, len(mask)+1), i ->
           |(CASE WHEN i = 1 THEN false ELSE mask[i-1] END)
@@ -391,7 +392,7 @@ object QueriesTensor {
 
     Q("q_closing1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        MorphExpr.close(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        Graft.binaryClosing(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(
         s"""$maskCte, d AS (SELECT id, list_transform(range(1, len(mask)+1), i ->
            |(CASE WHEN i = 1 THEN false ELSE mask[i-1] END) OR mask[i]
@@ -403,7 +404,7 @@ object QueriesTensor {
 
     Q("q_opening1d",
       (s, dir) => explodePos(maskDf(s, dir).select(col("id"),
-        MorphExpr.open(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
+        Graft.binaryOpening(col("mask"), array(size(col("mask")))).as("data")), asLong = true),
       Some(explodeSql(
         s"""$maskCte, e AS (SELECT id, list_transform(range(1, len(mask)+1), i ->
            |(CASE WHEN i = 1 THEN true ELSE mask[i-1] END) AND mask[i]
@@ -424,7 +425,7 @@ object QueriesTensor {
           .agg(transform(array_sort(collect_list(struct(col("event_id"), (col("value") > 100.0).as("m")))),
             x => when(x.getField("m"), 1.0).otherwise(0.0)).as("data"))
         perUser
-          .withColumn("lab", labelUdf(col("data"), array(size(col("data"))), lit(0.0), lit(1)))
+          .withColumn("lab", Kernels.label(col("data"), array(size(col("data"))), lit(0.0), lit(1)))
           .select(col("user_id"), col("lab").getField("_2").cast("long").as("n_components"),
                   coalesce(array_max(col("lab").getField("_3")), lit(0L)).as("max_size"),
                   coalesce(aggregate(col("lab").getField("_3"), lit(0L), (acc, x) => acc + x),
@@ -453,7 +454,7 @@ object QueriesTensor {
           .agg(transform(array_sort(collect_list(struct(col("event_id"), (col("value") > 100.0).as("m")))),
             x => when(x.getField("m"), 1.0).otherwise(0.0)).as("data"))
         perUser
-          .withColumn("lab", labelUdf(col("data"), array(size(col("data"))), lit(0.0), lit(1)))
+          .withColumn("lab", Kernels.label(col("data"), array(size(col("data"))), lit(0.0), lit(1)))
           .select(col("user_id"), posexplode(col("lab").getField("_3")).as(Seq("idx", "sz")))
           .select(col("user_id"), (col("idx") + 1).cast("long").as("label"),
                   col("sz").cast("long").as("size"))
@@ -477,7 +478,7 @@ object QueriesTensor {
       (s, dir) => explodePos(maskDf(s, dir)
         .where(array_contains(col("mask"), false))
         .select(col("id"),
-          edtUdf(col("mask"), array(size(col("mask"))), array(lit(1.0))).as("data"))),
+          Kernels.edt(col("mask"), array(size(col("mask"))), array(lit(1.0))).as("data"))),
       Some(explodeSql(
         s"""$maskCte, f AS (SELECT id, mask,
            |  list_filter(range(0, len(mask)), j -> NOT mask[j+1]) AS zpos

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.Graft
-import graft.exprs.{InverseRadonExpr, Interp1dExpr, MorphExpr, PointwiseAddExpr, RadonExpr, ZoomExpr}
+import graft.exprs.{Interp1dExpr, KernelCall, Kernels, PointwiseAddExpr}
 
 /** Runs a query once interpreted and once through generated code. */
 object CodegenModes extends AdaptiveSparkPlanHelper {
@@ -139,33 +139,50 @@ class KernelBridgeCodegenSpec extends AnyFunSuite {
     if (dy * dy + dx * dx < (side / 3) * (side / 3)) (i % 7 + r).toDouble * 0.5 else 0.0
   }
   private def mask(r: Int): Seq[Boolean] = Seq.tabulate(side * side)(i => (i * 7 + r) % 5 != 0)
+  /** Support strictly inside the image, as boxed morphology requires. */
+  private def blob(r: Int): Seq[Boolean] = image(r).map(_ > 0)
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("img", ArrayType(DoubleType, containsNull = false), nullable = true),
     StructField("vals", ArrayType(DoubleType, containsNull = true), nullable = true),
-    StructField("mask", ArrayType(BooleanType, containsNull = false), nullable = true)))
+    StructField("mask", ArrayType(BooleanType, containsNull = false), nullable = true),
+    StructField("blob", ArrayType(BooleanType, containsNull = false), nullable = true)))
   private lazy val df = BridgeInputs.frame(spark, schema, Seq.tabulate(6) { r =>
-    if (r == 5) Row(r.toLong, null, null, null)
+    if (r == 5) Row(r.toLong, null, null, null, null)
     else Row(r.toLong, image(r), Seq.tabulate(side)(i => if (r == 3 && i == 2) null else i * 1.5 - r),
-      mask(r))
+      mask(r), blob(r))
   })
 
   private val shape = array(lit(side), lit(side))
   private val theta = typedlit(Array(0.0, 30.0, 60.0, 90.0, 135.0))
   private val outputs: Seq[(String, Column)] = Seq(
-    "zoom_o0" -> ZoomExpr.zoomCol(col("img"), shape, typedlit(Array(1.5, 0.5)), lit(0), lit(0.0)),
-    "zoom_o1" -> ZoomExpr.zoomCol(col("img"), shape, typedlit(Array(1.5, 0.5)), lit(1), lit(-1.0)),
+    "zoom_o0" -> Kernels.zoom(col("img"), shape, typedlit(Array(1.5, 0.5)), lit(0), lit(0.0)),
+    "zoom_o1" -> Kernels.zoom(col("img"), shape, typedlit(Array(1.5, 0.5)), lit(1), lit(-1.0)),
     "interp1d" -> Interp1dExpr.interp1dArr(typedlit(Array.tabulate(side * side)(_.toDouble)),
       col("img"), typedlit(Array(-1.0, 0.5, 17.25, 300.0)), lit(true), lit(0.0)),
-    "erode" -> MorphExpr.erode(col("mask"), shape),
-    "dilate" -> MorphExpr.dilate(col("mask"), shape),
-    "close" -> MorphExpr.close(col("mask"), shape),
-    "open" -> MorphExpr.open(col("mask"), shape),
-    "radon" -> RadonExpr.radon(col("img"), lit(side), theta),
-    "radon_fill" -> RadonExpr.radonWithFill(col("img"), lit(side), theta),
-    "iradon" -> InverseRadonExpr.inverseRadon(
-      RadonExpr.radon(col("img"), lit(side), theta), lit(side), theta, lit(0.0)),
+    "erode" -> Graft.binaryErosion(col("mask"), shape),
+    "dilate" -> Graft.binaryDilation(col("mask"), shape),
+    "close" -> Graft.binaryClosing(col("mask"), shape),
+    "open" -> Graft.binaryOpening(col("mask"), shape),
+    "radon" -> Kernels.radon(col("img"), lit(side), theta),
+    "radon_fill" -> Kernels.radonWithFill(col("img"), lit(side), theta),
+    "iradon" -> Kernels.inverseRadon(Kernels.radon(col("img"), lit(side), theta), lit(side), theta,
+      lit(0.0), lit(0.0), lit(1.0)),
+    "iradon_filtered" -> Kernels.inverseRadon(Kernels.radon(col("img"), lit(side), theta), lit(side),
+      theta, lit(0.0), lit(0.5), lit(2.0)),
+    "zoom_to_shape" -> Graft.zoomToShape(col("img"), shape, Seq(20, 9)),
+    "label" -> Graft.label(col("img"), shape, connectivity = 1),
+    "edt" -> Graft.distanceTransformEdt(col("mask"), shape, Seq(1.0, 2.0)),
+    "edt_feature" -> Kernels.edtFeature(col("mask"), shape, typedlit(Array(1.0, 2.0))),
+    "hull" -> Graft.convexHullImage(col("blob"), shape),
+    "morph_footprint" -> Kernels.morphFootprint(col("mask"), shape,
+      typedlit(Array(true, true, true, false, false, true)), typedlit(Array(3, 2)), lit(true)),
+    "boxed_morph" -> Kernels.boxedMorph(col("blob"), shape, lit(false)),
+    // binary frames print as strings, so rows compare by content
+    "frame_sample" -> Kernels.frameSample(col("img").cast("string").cast("binary"), lit(7), lit(3))
+      .cast("array<string>"),
+    "dt1d" -> Kernels.dt1d(col("img"), lit(1.5)),
     "add_scalar" -> PointwiseAddExpr.add(col("vals"), lit(2.5)),
     "add_array" -> PointwiseAddExpr.add(col("img"), col("img")))
 
@@ -189,9 +206,20 @@ class TensorPlanShapeSpec extends AnyFunSuite {
       array(lit(1.0), col("id").cast("double")).as("data"),
       array(lit(true), col("id") > 0).as("mask"))
     val shape = array(lit(2))
+    val shape2 = array(lit(1), lit(2))
+    // every tensor call of the facade; fill and isin are transform lambdas
     val calls = Seq(
       "pointwiseAdd(scalar)" -> Graft.pointwiseAdd(col("data"), 1.0),
       "pointwiseAdd(array)" -> Graft.pointwiseAdd(col("data"), col("data")),
+      "zoom" -> Graft.zoom(col("data"), shape, 1, Left(2.0)),
+      "zoomToShape" -> Graft.zoomToShape(col("data"), shape, Seq(3)),
+      "label" -> Graft.label(col("data"), shape),
+      "distanceTransformEdt" -> Graft.distanceTransformEdt(col("mask"), shape, Seq(1.0)),
+      "convexHullImage" -> Graft.convexHullImage(col("mask"), shape2),
+      "radon" -> Graft.radon(col("data"), 2, Seq(0.0)),
+      "radonWithFill" -> Graft.radonWithFill(col("data"), 2, Seq(0.0)),
+      "inverseRadon" -> Graft.inverseRadon(col("data"), 2, Seq(0.0)),
+      "inverseRadonFiltered" -> Graft.inverseRadonFiltered(col("data"), 2, Seq(0.0), 0.0, 0.5, 2.0),
       "binaryErosion" -> Graft.binaryErosion(col("mask"), shape),
       "binaryDilation" -> Graft.binaryDilation(col("mask"), shape),
       "binaryClosing" -> Graft.binaryClosing(col("mask"), shape),
@@ -203,7 +231,7 @@ class TensorPlanShapeSpec extends AnyFunSuite {
       val interpreted = exprs.filter(e =>
         e.isInstanceOf[ScalaUDF] || e.isInstanceOf[ArrayTransform] || e.isInstanceOf[ZipWith])
       assert(interpreted.isEmpty, s"$name plans ${interpreted.map(_.prettyName).mkString(", ")}")
-      assert(exprs.exists(e => e.isInstanceOf[PointwiseAddExpr] || e.isInstanceOf[MorphExpr]),
+      assert(exprs.exists(e => e.isInstanceOf[PointwiseAddExpr] || e.isInstanceOf[KernelCall]),
         s"$name: no kernel-bridge expression in\n$plan")
     }
   }

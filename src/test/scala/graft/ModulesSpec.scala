@@ -556,9 +556,9 @@ class Interp1dExprSpec extends AnyFunSuite {
       graft.exprs.Interp1dExpr.interp1dArr(
         typedlit(Array(0.0, 1.0)), typedlit(Array(5.0, 7.0)), typedlit(Array(0.5)),
         lit(false), lit(0.0)).as("y"),
-      graft.exprs.MorphExpr.erode(
+      graft.api.Graft.binaryErosion(
         typedlit(Array(true, true, true)), typedlit(Array(3))).as("m"),
-      graft.exprs.ZoomExpr.zoomCol(typedlit(Array(1.0, 2.0)), typedlit(Array(2)),
+      graft.exprs.Kernels.zoom(typedlit(Array(1.0, 2.0)), typedlit(Array(2)),
         typedlit(Array(2.0)), lit(0), lit(0.0)).getField("_1").as("z"))
     val r = df.collect()
     assert(r.forall(_.getSeq[Double](0) == Seq(6.0)))
@@ -630,6 +630,16 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect()(0).getSeq[Boolean](0)
     assert(m == graft.kernels.StencilKernel.erodeDefault(
       Array(true, true, false), Array(3)).toSeq)
+    val img = Array.tabulate(16)(i => if (i == 5 || i == 6 || i == 9 || i == 10) 1.0 else 0.0)
+    val theta = Array(0.0, 45.0, 90.0)
+    def sqlArray(a: Array[Double]) = a.map(v => s"${v}d").mkString("array(", ", ", ")")
+    val sino = spark.sql(s"SELECT graft_radon(${sqlArray(img)}, 4, ${sqlArray(theta)}) AS s")
+      .collect()(0).getSeq[Double](0)
+    assert(sino == graft.kernels.RadonKernel.radonSlice(img, 4, theta).toSeq)
+    val rec = spark.sql(
+      s"SELECT graft_iradon(${sqlArray(sino.toArray)}, 4, ${sqlArray(theta)}, 0.0d) AS r")
+      .collect()(0).getSeq[Double](0)
+    assert(rec == graft.kernels.RadonKernel.inverseRadonSlice(sino.toArray, 4, theta, 0.0).toSeq)
   }
 }
 
@@ -1143,9 +1153,29 @@ class ExprGuardsSpec extends AnyFunSuite {
     val df = Seq((1L, Seq(Option(true), None, Option(true))))
       .toDF("id", "mask")
     val ex = intercept[Exception] {
-      df.select(graft.exprs.MorphExpr.dilate($"mask", typedlit(Array(3)))).collect()
+      df.select(graft.api.Graft.binaryDilation($"mask", typedlit(Array(3)))).collect()
     }
     assert(rootMessage(ex).contains("null element"), rootMessage(ex))
+  }
+
+  test("label, edt and hull reject null elements and give null for a null array") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("data", ArrayType(DoubleType, containsNull = true)),
+      StructField("mask", ArrayType(BooleanType, containsNull = true))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(0L, Seq(1.0, null, 0.0, 1.0), Seq(true, null, false, true)), Row(1L, null, null)), 2), schema)
+    val shape = typedlit(Array(2, 2))
+    val calls = Seq(
+      "label" -> graft.api.Graft.label($"data", shape),
+      "edt" -> graft.api.Graft.distanceTransformEdt($"mask", shape, Seq(1.0, 1.0)),
+      "hull" -> graft.api.Graft.convexHullImage($"mask", shape))
+    calls.foreach { case (name, c) =>
+      val ex = intercept[Exception](df.where($"id" === 0L).select(c).collect())
+      assert(rootMessage(ex).contains("null element"), s"$name: ${rootMessage(ex)}")
+      assert(df.where($"id" === 1L).select(c).collect()(0).isNullAt(0), s"$name of a null array")
+    }
   }
 
   test("com_partial rejects rows*cols larger than the array") {
@@ -1260,7 +1290,7 @@ class ShardedRadonSpec extends AnyFunSuite {
       })
     }
     val df = imgs.toDF("id", "data")
-    val direct = df.select($"id", graft.exprs.RadonExpr.radon(
+    val direct = df.select($"id", graft.exprs.Kernels.radon(
         $"data", lit(size), typedlit(thetas.toArray)).as("sino"))
       .as[(Long, Array[Double])].collect().toMap
     val sharded = graft.operators.ShardedRadon(df, $"id", $"data", size, thetas, 5)
