@@ -16,23 +16,24 @@ import graft.functions.TensorFunctions
   *    reference's OpenMP prange over slices.
   */
 object Bench {
+  import graft.core.Harness
+  import graft.core.Harness.num
+  import org.json4s._
 
-  /** RAM-backed shuffle dir when the box has headroom: measured on the
-    * striped 512³ zoom, rep times over ext4 /tmp swing 1.6–13.7 s purely
-    * from dirty-page writeback contention between reps (~1.2 GB shuffle
-    * per rep), while /dev/shm holds a flat ~2.5 s — the single-node analog
-    * of provisioning local SSDs for shuffle on a real cluster. Falls back
-    * to the default local dir when shm is absent or under 32 GiB free;
-    * the choice is stamped into the artifact either way. */
-  def shmLocalDir(): Option[String] = graft.core.ScratchDir.shm("graft-shuffle")
-
-  /** `v` as a JSON number with `decimals` places. Locale.ROOT because the
-    * bench lines are parsed as JSON, and a comma-decimal default locale
-    * would print "0,1234"; JSON has no NaN or Infinity, so a non-finite
-    * value is written as null. */
-  private[graft] def jsonNum(v: Double, decimals: Int): String =
-    if (v.isNaN || v.isInfinite) "null"
-    else String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+  /** Synthetic op and soak inputs, deterministic in the row id: `n`
+    * doubles in [0, 0.98] and a mask of `n` cells with 4 in 5 set. */
+  private[graft] def sliceData(id: Long, n: Int): Array[Double] = {
+    val a = new Array[Double](n)
+    var i = 0
+    while (i < n) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
+    a
+  }
+  private[graft] def maskData(id: Long, n: Int): Array[Boolean] = {
+    val a = new Array[Boolean](n)
+    var i = 0
+    while (i < n) { a(i) = ((id * 31 + i * 7) % 5) != 0; i += 1 }
+    a
+  }
 
   /** One timed rep of a declared query. A rep that throws has no time:
     * `sec` is NaN (written as null) and `error` carries its message. */
@@ -44,12 +45,20 @@ object Bench {
       .map(_.getCollectionTime).sum
   }
 
-  private[graft] def timeRep(body: => Any): Rep = {
+  /** Wall seconds and collector milliseconds of one run of `body`. */
+  private def measure(body: => Any): (Double, Long) = {
     val g0 = gcMillis()
     val t0 = System.nanoTime()
-    val error = try { body; None } catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
-    val sec = (System.nanoTime() - t0) / 1e9
-    Rep(if (error.isEmpty) sec else Double.NaN, gcMillis() - g0, error)
+    body
+    ((System.nanoTime() - t0) / 1e9, gcMillis() - g0)
+  }
+
+  private[graft] def timeRep(body: => Any): Rep = {
+    var error: Option[String] = None
+    val (sec, gcMs) = measure {
+      try body catch { case e: Throwable => error = Some(String.valueOf(e.getMessage)) }
+    }
+    Rep(if (error.isEmpty) sec else Double.NaN, gcMs, error)
   }
 
   /** A query's published time: its fastest successful rep, NaN (null)
@@ -59,35 +68,81 @@ object Bench {
 
   /** A query's `query_reps` entry: every rep (null when it failed), per-rep
     * GC, the failed reps' errors and, when probed, the host's eff cores. */
-  private[graft] def repsJson(reps: Seq[Rep], eff: Option[Double]): String = {
-    val errors = reps.flatMap(_.error).map(e => org.json4s.jackson.JsonMethods.compact(org.json4s.JString(e)))
-    "{\"reps\":" + reps.map(r => jsonNum(r.sec, 3)).mkString("[", ",", "]") +
-      ",\"gc_ms\":" + reps.map(_.gcMs).mkString("[", ",", "]") +
-      (if (errors.isEmpty) "" else errors.mkString(",\"errors\":[", ",", "]")) +
-      eff.fold("")(e => ",\"eff\":" + jsonNum(e, 2)) + "}"
+  private[graft] def repsJson(reps: Seq[Rep], eff: Option[Double]): JObject = {
+    val errors = reps.flatMap(_.error)
+    JObject(
+      "reps" -> JArray(reps.map(r => num(r.sec, 3)).toList),
+      "gc_ms" -> JArray(reps.map(r => JLong(r.gcMs)).toList),
+      "errors" -> (if (errors.isEmpty) JNothing else JArray(errors.map(JString(_)).toList)),
+      "eff" -> eff.fold[JValue](JNothing)(num(_, 2)))
+  }
+
+  /** One op bench's published attempt. */
+  private[graft] final case class OpRec(sec: Double, thr: Double, reps: Array[Double], gcReps: Array[Long],
+                                        effPre: Double, effPost: Double, attempts: Int, route: String)
+
+  /** An op's entry in the full record: every rep, per-rep GC and the
+    * attempt's probes. The compact form for the final stdout line (r8
+    * verdict item 3: the artifact of record must distinguish a slow op
+    * from a slow mode) must stay inside the driver's 2000-char tail window
+    * (ADVICE r9: 17 ops x 5 full-precision reps sat right at the limit), so
+    * it carries reps at %.2f and ONLY for ops whose spread exceeds 1.5x (a
+    * tight-rep op's min already tells the whole story). */
+  private[graft] def opJson(rec: OpRec, full: Boolean): JObject = {
+    val head = List("sec" -> num(rec.sec, 4), "cells_per_s" -> num(rec.thr, 0))
+    if (full) JObject(head ++ List(
+      "reps" -> JArray(rec.reps.map(num(_, 4)).toList),
+      "gc_ms_reps" -> JArray(rec.gcReps.map(JLong(_)).toList),
+      "eff_pre" -> num(rec.effPre, 3), "eff_post" -> num(rec.effPost, 3),
+      "attempts" -> JInt(rec.attempts),
+      "route" -> (if (rec.route.nonEmpty) JString(rec.route) else JNothing)))
+    else {
+      val spread = rec.reps.max / math.max(rec.reps.min, 1e-9)
+      JObject(head ++ List(
+        "reps" -> (if (spread > 1.5) JArray(rec.reps.map(num(_, 2)).toList) else JNothing),
+        "att" -> (if (rec.attempts > 1) JInt(rec.attempts) else JNothing)))
+    }
+  }
+
+  /** The full record (bench_full.json and the earlier stdout line) and the
+    * final stdout line, which is the driver contract: metric/value/unit,
+    * the PER-QUERY seconds map, ops, sf. r11 shipped "ops" but no "queries"
+    * in the final line and the driver's per-query and scaling comparison
+    * came back structurally empty (PERF_r11: n_common 0, per_query {}, both
+    * bench_ok flags false) — r11 verdict item 2. The 244-entry map at
+    * 2-decimal seconds (~5.5 KB) cannot fit a ~2 KB display tail TOGETHER
+    * with the per-query reps, so the final line carries queries + compact
+    * ops and the query_reps diagnostics stay in the full record. `host` is
+    * the run's weather and settings, written into both. */
+  private[graft] def records(queries: Seq[(String, Double)], queryReps: Seq[(String, JValue)],
+                             ops: Seq[(String, OpRec)], host: List[JField], sf: String): (JObject, JObject) = {
+    def line(full: Boolean): JObject = JObject(
+      List("metric" -> JString("total"), "value" -> num(queries.map(_._2).sum, 4), "unit" -> JString("sec"),
+        "queries" -> JObject(queries.map { case (k, v) => k -> num(v, if (full) 4 else 2) }.toList),
+        "query_reps" -> (if (full) JObject(queryReps.toList) else JNothing),
+        "ops" -> JObject(ops.map { case (k, rec) => k -> opJson(rec, full) }.toList)) ++
+        host :+ ("sf" -> JString(sf)))
+    (line(full = true), line(full = false))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val localDir = shmLocalDir()
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // op benches time compute over cached in-RAM inputs (the baseline's
-      // numpy-array-in-RAM framing); compressed columnar cache would charge
-      // every timed run a decompression pass that is not part of the op
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      // with shuffle on shm, lean on the ContextCleaner to reap dead
-      // shuffle files promptly so a long sweep can't fill the tmpfs
-      .config("spark.cleaner.periodicGC.interval", "5min")
-    val spark = localDir.fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cores()
+    // RAM-backed shuffle dir when the box has headroom (see ScratchDir.shm);
+    // the choice is stamped into the artifact either way
+    val localDir = graft.core.ScratchDir.shm("graft-shuffle")
+    val spark = Harness.session("graft-bench", cpus,
+      localDir.map("spark.local.dir" -> _).toSeq ++ Seq(
+        // with shuffle on shm, lean on the ContextCleaner to reap dead
+        // shuffle files promptly so a long sweep can't fill the tmpfs
+        "spark.cleaner.periodicGC.interval" -> "5min"): _*)
     import spark.implicits._
+
+    val quietWaits = Harness.quietWaits(6)
+    // mis-set env (0 / negative) must not crash the suite after warmup:
+    // attempts.minBy on an empty buffer threw (ADVICE r10) — clamp to >= 1
+    val maxOpAttempts = math.max(1,
+      sys.env.getOrElse("SPARK_GRAFT_OP_ATTEMPTS", "3").toInt)
 
     // dev hook: SPARK_GRAFT_BENCH_ONLY=op1,op2 runs just those kernel
     // benches and skips the query sweep (fast iteration on one op)
@@ -108,8 +163,7 @@ object Bench {
       case Some(sel) => SparkEntry.all.filter(q => sel(q.name))
       case None => SparkEntry.all
     }
-    val cpusN = cpus.toInt
-    val sweepFloor = cpusN * 0.45
+    val sweepFloor = cpus * 0.45
     // per-query steal defense (r10 verdict item 2): the op benches got
     // eff probes + re-queues in r9/r10 while the query sweep stayed
     // best-of-2 with no weather instrument — and q_lsh_recall promptly
@@ -119,25 +173,19 @@ object Bench {
     // eff probe; if the host reads stolen, wait (bounded) and run one
     // more rep. All reps + per-rep GC + the probe ride in bench_full's
     // `query_reps` so a slow QUERY stays distinguishable from a slow HOST.
-    val qdetail = scala.collection.mutable.LinkedHashMap[String, String]()
+    val qdetail = scala.collection.mutable.ArrayBuffer[(String, JValue)]()
     // explicit BENCH_QUERIES wins over BENCH_ONLY's query-sweep skip, so
     // "just these queries, no ops" is expressible for local iteration
     val results = if (onlyOps.isDefined && onlyQueries.isEmpty) Seq.empty[(String, Double)]
       else queryList.map { q =>
       def once(): Rep = timeRep(q.run(spark, sfDir).count())
       val reps = scala.collection.mutable.ArrayBuffer(once(), once())
-      var eff = -1.0
+      var eff: Option[Double] = None
       if (bestRep(reps.toSeq) > 2.0) {
-        eff = graft.core.HostProbe.effectiveCores(cpusN, 10000000L)._1
-        var w = 0
-        while (eff < sweepFloor && w < 2) {
-          Thread.sleep(15000)
-          eff = graft.core.HostProbe.effectiveCores(cpusN, 10000000L)._1
-          w += 1
-        }
+        eff = Some(Harness.awaitQuiet(cpus, sweepFloor, 2, 15000, 10000000L)._1._1)
         reps += once()
       }
-      qdetail(q.name) = repsJson(reps.toSeq, Some(eff).filter(_ >= 0))
+      qdetail += q.name -> repsJson(reps.toSeq, eff)
       q.name -> bestRep(reps.toSeq)
     }
 
@@ -166,21 +214,8 @@ object Bench {
     // 6x its steady state, purely from sweep garbage.
     System.gc(); Thread.sleep(400); System.gc(); Thread.sleep(400)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val sliceGen = udf { (id: Long, n: Int) =>
-      val a = new Array[Double](n)
-      var i = 0
-      while (i < n) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
-      a
-    }
-    val maskGen = udf { (id: Long, n: Int) =>
-      val a = new Array[Boolean](n)
-      var i = 0
-      while (i < n) { a(i) = ((id * 31 + i * 7) % 5) != 0; i += 1 }
-      a
-    }
+    val sliceGen = udf((id: Long, n: Int) => sliceData(id, n))
+    val maskGen = udf((id: Long, n: Int) => maskData(id, n))
     def slices(rows: Int, cells: Int): DataFrame =
       spark.range(rows).select(col("id"), sliceGen(col("id"), lit(cells)).as("data"))
     def masks(rows: Int, cells: Int): DataFrame =
@@ -210,8 +245,6 @@ object Bench {
       def quiet(floor: Double): Boolean =
         math.min(effPre, effPost) >= floor && validIdx.nonEmpty && steady
     }
-    final case class OpRec(sec: Double, thr: Double, reps: Array[Double], gcReps: Array[Long],
-                           effPre: Double, effPost: Double, attempts: Int, route: String)
     val ops = scala.collection.mutable.LinkedHashMap[String, OpRec]()
     // inputs are cached and forced before timing; one untimed warmup run
     // absorbs JIT/codegen compilation, then the best of five timed runs is
@@ -226,16 +259,12 @@ object Bench {
     // volume_zoom 1.86 s from a run whose own probes read eff_cores 5.96/32
     // (the host stole ~80% of the cores mid-suite). Each op now probes
     // effective cores BEFORE and AFTER its timed reps; when either side of
-    // an attempt reads below `effFloor` the attempt is re-queued (bounded)
-    // instead of published. If no attempt ever ran on a quiet host, the
-    // best-min attempt is published and the per-op eff probes in the
-    // artifact say exactly under what weather it was measured.
-    val effFloor = cpus.toInt * 0.45 // well under the ~0.65 idle ceiling;
-                                     // r9's stolen run read 0.19
-    // mis-set env (0 / negative) must not crash the suite after warmup:
-    // attempts.minBy on an empty buffer threw (ADVICE r10) — clamp to >= 1
-    val maxOpAttempts = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_OP_ATTEMPTS", "3").toInt)
+    // an attempt reads below its floor (`floorMult` x conf, 0.45 by
+    // default: well under the ~0.65 idle ceiling; r9's stolen run read
+    // 0.19) the attempt is re-queued (bounded) instead of published. If no
+    // attempt ever ran on a quiet host, the best-min attempt is published
+    // and the per-op eff probes in the artifact say exactly under what
+    // weather it was measured.
     // `floorMult`/`extraAttempts` (r10 verdict item 1b/1c): the volume-zoom
     // ops raise their publishability floor to ~0.58×conf (vz512's stolen
     // r10 attempt passed the shared 0.45 floor by 0.375 cores) and get
@@ -247,7 +276,7 @@ object Bench {
               route: String = "", floorMult: Double = 0.45,
               extraAttempts: Int = 0)(f: => Unit): Unit = {
       if (onlyOps.exists(!_.contains(name))) return
-      val floor = cpus.toInt * floorMult
+      val floor = cpus * floorMult
       input.foreach { df => df.persist(); df.count() }
       f // warmup
       val attempts = scala.collection.mutable.ArrayBuffer[Attempt]()
@@ -255,14 +284,11 @@ object Bench {
       var done = false
       while (a < maxOpAttempts + extraAttempts && !done) {
         // pre-probe with a bounded wait-for-quiet (suite-level probe logic,
-        // applied per op — minute-3 weather is what the suite probe misses)
-        var pre = effectiveCoresFast(cpus.toInt)
-        var w = 0
-        while (pre < floor && w < 2) {
-          Thread.sleep(15000)
-          pre = effectiveCoresFast(cpus.toInt)
-          w += 1
-        }
+        // applied per op — minute-3 weather is what the suite probe misses).
+        // The ~0.3 s short probe: 17 ops x 2 probes must not dominate the
+        // suite, and a steal big enough to poison a rep reads far below the
+        // floor even at a third of the calibration iterations
+        val pre = Harness.awaitQuiet(cpus, floor, 2, 15000, 10000000L)._1._1
         // best-of-5: the box runs other load and per-run swings of 3-4x were
         // observed between identical builds; min over 5 reps is the
         // steadiest estimator of the op's actual cost. Wall-time bound on
@@ -276,14 +302,14 @@ object Bench {
         var r = 0
         var bail = false
         while (r < nReps && !bail) {
-          val g0 = gcMillis()
-          repsB += time(f)
-          gcB += gcMillis() - g0
+          val (sec, gcMs) = measure(f)
+          repsB += sec
+          gcB += gcMs
           r += 1
           if (r == 2 && repsB.indices.forall(i => gcB(i) > 300.0 * repsB(i)))
             bail = true
         }
-        val post = effectiveCoresFast(cpus.toInt)
+        val post = graft.core.HostProbe.effectiveCores(cpus, 10000000L)._1
         val att = Attempt(repsB.toArray, gcB.toArray, pre, post)
         attempts += att
         done = att.quiet(floor)
@@ -297,48 +323,17 @@ object Bench {
         pub.effPre, pub.effPost, attempts.length, route)
     }
 
-    // effective-core probe (ROUND_NOTES r4: host weather once cut 32
-    // configured cores to ~11 effective and masqueraded as a 4.5x op
-    // regression): measure single-thread FLOP rate, then aggregate rate
-    // with `cpus` burner threads — the ratio is how many cores this run
-    // actually got. Recorded next to `ops` so a loaded host is visible in
-    // the round artifact instead of inferred post-hoc.
-    // NOTE on the ceiling: the single-thread baseline runs at TURBO clocks
-    // while the 32-thread aggregate runs at all-core clocks, so on this
-    // box the ratio tops out at ~21-22/32 even at loadavg <1 (measured
-    // r6: idle 20.7-22.5, under a concurrent sbt test run 15-18). The
-    // quiet-host target below is therefore calibrated to the measured
-    // idle ceiling, not to `cpus`; `agg_rate` (iters/µs, frequency-honest)
-    // is recorded alongside so rounds can normalize per-op numbers
-    // without the turbo-biased ratio.
-    def effectiveCores(threads: Int): (Double, Double, Double) =
-      graft.core.HostProbe.effectiveCores(threads)
-    // the ~0.3 s per-op probe: 17 ops x 2 probes must not dominate the
-    // suite, and a steal big enough to poison a rep reads far below the
-    // floor even at a third of the calibration iterations
-    def effectiveCoresFast(threads: Int): Double =
-      graft.core.HostProbe.effectiveCores(threads, 10000000L)._1
     // quiet-host gate (r5 verdict: kernel dips were host-load artifacts,
     // eff_cores 19.5/32): probe before the op benches and, when the host is
     // visibly loaded, wait-and-reprobe a bounded number of times so the
     // recorded per-op numbers mean something round-over-round. The probe
     // history rides in the artifact either way — a run that never reached a
     // quiet host is visible as eff_cores below target with max waits spent.
-    val quietTarget = cpus.toInt * 0.62 // measured idle ceiling ~0.65-0.70 here
-    val maxWaits = sys.env.getOrElse("SPARK_GRAFT_QUIET_WAITS", "6").toInt
-    var (effCores, singleRate, aggRate) = effectiveCores(cpus.toInt)
-    var waits = 0
-    while (effCores < quietTarget && waits < maxWaits) {
-      Thread.sleep(20000)
-      val p = effectiveCores(cpus.toInt)
-      effCores = p._1; singleRate = p._2; aggRate = p._3
-      waits += 1
-    }
-    // per-section honesty (r6 verdict item 8): a probe that was quiet at
-    // the section start says nothing about minute 3 — re-probe AFTER the
-    // op benches and record both, so a round-over-round kernel-rate delta
-    // can be read against the load the section actually ran under.
-    var effCoresPost = effCores
+    // The target is calibrated to the measured idle ceiling of the turbo-
+    // biased ratio (see HostProbe: r6 read 20.7-22.5/32 idle), not to `cpus`.
+    val quietTarget = cpus * 0.62
+    val ((effCores, singleRate, aggRate), waits) =
+      Harness.awaitQuiet(cpus, quietTarget, quietWaits, 20000, 30000000L)
 
     val c24 = 1 << 24 // BASELINE zoom/pointwise/interp1d workload: 2^24 f64 cells
     val slices256 = slices(256, 65536) // 256 slices of 256x256
@@ -411,13 +406,8 @@ object Bench {
     // scaladoc). The SQL-facing paths (ComPartialSums / CenterOfMassAgg)
     // share its math and are gated by q_com_vectorized / q_com_tensor.
     if (opWanted("center_of_mass")) {
-      val comRdd = spark.sparkContext.range(0, 512, numSlices = 32).map { id =>
-        val n = 262144
-        val a = new Array[Double](n)
-        var i = 0
-        while (i < n) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
-        (id, a)
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      val comRdd = spark.sparkContext.range(0, 512, numSlices = 32).map(id => (id, sliceData(id, 262144)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       comRdd.count()
       bench("center_of_mass", v512.toDouble) {
         graft.operators.VolumeCom.centerOfMass(comRdd, 512, 512)
@@ -445,13 +435,8 @@ object Bench {
     // MEMORY_ONLY arrays + a tight loop is the matched-work analog of the
     // reference's numpy-in-RAM pointwise and measures the op itself.
     if (opWanted("pointwise_add_mem")) {
-      val pwRdd = spark.sparkContext.range(0, 256, numSlices = 32).map { id =>
-        val n = 65536
-        val a = new Array[Double](n)
-        var i = 0
-        while (i < n) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
-        a
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      val pwRdd = spark.sparkContext.range(0, 256, numSlices = 32).map(sliceData(_, 65536))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       pwRdd.count()
       bench("pointwise_add_mem", c24) {
         pwRdd.map { a =>
@@ -528,7 +513,7 @@ object Bench {
     // and routes in whenever rows under-fill the cores.
     bench("radon_sharded", 32.0 * 256 * 180, Some(radonReady),
           route = "router:per-row-kernel") {
-      implicit val sp: org.apache.spark.sql.SparkSession = spark
+      implicit val sp: SparkSession = spark
       graft.operators.ShardedRadon.auto(radonReady, col("id"), col("data"), 256,
           (0 until 180).map(_.toDouble), 6, rowsHint = Some(32L))
         .agg(sum(get(col("sino"), lit(0)))).collect()
@@ -543,13 +528,6 @@ object Bench {
 
     // tiled/distributed path: 256^3 volume as 4x4x4 tiles of 64^3 — the
     // halo-exchange erosion (one shuffle of O(surface) strips)
-    val tile3Gen = udf { (id: Long) =>
-      val n = 64 * 64 * 64
-      val a = new Array[Boolean](n)
-      var i = 0
-      while (i < n) { a(i) = ((id * 31 + i * 7) % 5) != 0; i += 1 }
-      a
-    }
     // slice-distributed trilinear zoom at the reference's true bench shape
     // (256³ ndim=3 scale 2 — BASELINE.md:15-22): the 100 TB path, paying
     // its real O(scale·volume) slice exchange; the matched-work in-RAM
@@ -647,7 +625,7 @@ object Bench {
         ((col("id") % 64) / 16).cast("int").as("ti"),
         (((col("id") % 64) / 4) % 4).cast("int").as("tj"),
         ((col("id") % 64) % 4).cast("int").as("tk"),
-        tile3Gen(col("id")).as("data"))
+        maskGen(col("id"), lit(64 * 64 * 64)).as("data"))
       .as[Tile3]
     val tiles3Df = tiles3.toDF()
     // 32 volume keys into the default 32 shuffle partitions would load
@@ -659,38 +637,13 @@ object Bench {
       graft.operators.TiledStencil.erode3Auto(tiles3Df.as[Tile3], 64, Array(4, 4, 4))(spark)
         .toDF().agg(count(lit(1))).collect()
     }
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
 
-    effCoresPost = effectiveCores(cpus.toInt)._1
-
-    def j(d: Iterable[(String, Double)]) =
-      d.map { case (k, v) => "\"" + k + "\":" + jsonNum(v, 4) }.mkString("{", ",", "}")
-    val qs = j(results)
-    // compact per-op record (r8 verdict item 3: the artifact of record
-    // must distinguish a slow op from a slow mode) — but the final stdout
-    // line must stay inside the driver's 2000-char tail window (ADVICE r9:
-    // 17 ops x 5 full-precision reps sat right at the limit). The compact
-    // line therefore carries reps at %.2f and ONLY for ops whose spread
-    // exceeds 1.5x (a tight-rep op's min already tells the whole story);
-    // the full-precision reps + per-rep GC + per-op eff probes always ride
-    // in bench_full.json and the earlier full stdout line.
-    val opsJson = ops.map { case (k, rec) =>
-      val spread = rec.reps.max / math.max(rec.reps.min, 1e-9)
-      val repsPart = if (spread > 1.5)
-        ",\"reps\":" + rec.reps.map(jsonNum(_, 2)).mkString("[", ",", "]")
-      else ""
-      val attPart = if (rec.attempts > 1) s""",\"att\":${rec.attempts}""" else ""
-      "\"" + k + "\":{\"sec\":" + jsonNum(rec.sec, 4) + ",\"cells_per_s\":" + jsonNum(rec.thr, 0) +
-        repsPart + attPart + "}"
-    }.mkString("{", ",", "}")
-    val opsJsonFull = ops.map { case (k, rec) =>
-      val routePart = if (rec.route.nonEmpty) ",\"route\":\"" + rec.route + "\"" else ""
-      "\"" + k + "\":{\"sec\":" + jsonNum(rec.sec, 4) + ",\"cells_per_s\":" + jsonNum(rec.thr, 0) +
-        ",\"reps\":" + rec.reps.map(jsonNum(_, 4)).mkString("[", ",", "]") +
-        ",\"gc_ms_reps\":" + rec.gcReps.mkString("[", ",", "]") +
-        ",\"eff_pre\":" + jsonNum(rec.effPre, 3) + ",\"eff_post\":" + jsonNum(rec.effPost, 3) +
-        ",\"attempts\":" + rec.attempts + routePart + "}"
-    }.mkString("{", ",", "}")
+    // per-section honesty (r6 verdict item 8): a probe that was quiet at
+    // the section start says nothing about minute 3 — re-probe AFTER the
+    // op benches and record both, so a round-over-round kernel-rate delta
+    // can be read against the load the section actually ran under.
+    val effCoresPost = graft.core.HostProbe.effectiveCores(cpus)._1
     // G1 region size honesty (r8 verdict item 2): the build.sbt fork flag
     // demonstrably does not reach the driver's own bench invocation, so the
     // effective region size rides in the artifact — an 8 MB output slice is
@@ -701,31 +654,14 @@ object Bench {
         .find(_.startsWith("-XX:G1HeapRegionSize="))
         .map(_.stripPrefix("-XX:G1HeapRegionSize=")).getOrElse("default")
     }
-    val total = jsonNum(results.map(_._2).sum, 4)
-    // agg_rate in iters/µs: the frequency-honest all-core throughput probe
-    val eff = s""""eff_cores":${jsonNum(effCores, 4)},"eff_cores_post":${jsonNum(effCoresPost, 4)},""" +
-      s""""conf_cores":$cpus,"quiet_waits":$waits,"g1_region":"$g1Region",""" +
-      s""""local_dir":"${localDir.fold("default")(_ => "shm")}",""" +
-      s""""agg_rate":${jsonNum(aggRate * 1000, 4)},"single_rate":${jsonNum(singleRate * 1000, 4)}"""
-    // per-query reps + GC + (when probed) eff — the sweep-level honesty
-    // instrument (r10 verdict items 2/8); file-only, the stdout tail
-    // window stays compact
-    val qreps = qdetail.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_reps":$qreps,"ops":$opsJsonFull,$eff,"sf":"$sfDir"}"""
-    // The final stdout line is the driver contract: metric/value/unit,
-    // the PER-QUERY seconds map, ops, sf. r11 shipped "ops" but no
-    // "queries" in the final line and the driver's per-query and scaling
-    // comparison came back structurally empty (PERF_r11: n_common 0,
-    // per_query {}, both bench_ok flags false) — r11 verdict item 2. The
-    // 244-entry map at 2-decimal seconds (~5.5 KB) cannot fit a ~2 KB
-    // display tail TOGETHER with the per-query reps, so the final line
-    // carries queries + compact ops and the query_reps diagnostics stay
-    // in the earlier full line and bench_full.json.
-    val qsCompact = results.map { case (k, v) =>
-      "\"" + k + "\":" + jsonNum(v, 2)
-    }.mkString("{", ",", "}")
+    val host = List(
+      "eff_cores" -> num(effCores, 4), "eff_cores_post" -> num(effCoresPost, 4),
+      "conf_cores" -> JInt(cpus), "quiet_waits" -> JInt(waits), "g1_region" -> JString(g1Region),
+      "local_dir" -> JString(localDir.fold("default")(_ => "shm")),
+      // agg_rate in iters/µs: the frequency-honest all-core throughput probe
+      "agg_rate" -> num(aggRate * 1000, 4), "single_rate" -> num(singleRate * 1000, 4))
+    val (full, last) = records(results, qdetail.toSeq, ops.toSeq, host, sfDir)
+    val fullLine = Harness.json(full)
     try {
       // stamped per core count (r11 verdict item 3: the 8-core scaling run
       // used to overwrite the 32-core record); plain bench_full.json stays
@@ -735,7 +671,7 @@ object Bench {
           java.nio.file.Paths.get(p), (fullLine + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     println(fullLine)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsCompact,"ops":$opsJson,$eff,"sf":"$sfDir"}""")
+    println(Harness.json(last))
     spark.stop()
   }
 }

@@ -1,32 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
+import graft.core.Harness
 
 /** Plan inspection harness: prints the formatted physical plan and timed
   * execution for one or more declared queries. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [queryName...]
+  * The timed pass materializes the full result (every row and column)
+  * through the noop sink: `count()` would prune every column it does not
+  * need. The row count is observed in the same pass.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-explain", Harness.cores())
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")
       df.explain("formatted")
+      val rows = Observation()
       val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"===== $name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      df.observe(rows, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"===== $name: ${rows.get("rows")} rows in $sec%.2f s")
     }
     spark.stop()
   }

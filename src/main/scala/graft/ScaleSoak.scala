@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import graft.core.Harness
+import graft.core.Harness.num
 
 /** Scale soak: runs the 100 TB-path pipelines (16 as of r9 — LSH near-dup,
   * prefix-scan packing, halo-exchange erosion, striped volume zoom,
@@ -20,7 +23,7 @@ import org.apache.spark.sql.functions._
   * and a per-copy text suffix (so minhash/banding work is genuinely 10×
   * distinct content, not exact-dup-collapsed back to 1×); the 10× volume is
   * 10× more 64³ tiles along axis 0. Emits ONE JSON line; also written to
-  * SOAK_r6.json for the round artifact.
+  * SPARK_GRAFT_SOAK_OUT (default SOAK_r8.json) for the round artifact.
   */
 object ScaleSoak {
 
@@ -46,27 +49,21 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same RAM-backed shuffle-dir policy as Bench (see Bench.shmLocalDir):
-    // ext4 writeback contention between scale points otherwise rides into
-    // the x10/x30 tail ratios as phantom superlinearity
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // x1000 points on the heap-bound pipelines can stall the whole JVM
-      // in GC for minutes at a time; at the default 120 s heartbeat
-      // timeout the local executor gets "removed" mid-pause and the run
-      // dies in an RPC storm (measured: a 175 s pause killed the r11
-      // gap_fill x1000 sweep). The pause still lands in the rep wall time
-      // and gc_ms — these only keep a single-JVM soak alive through it.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-    val spark = Bench.shmLocalDir().fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cores()
+    val maxWaits = Harness.quietWaits(4)
+    val spark = Harness.session("graft-soak", cpus,
+      // RAM-backed shuffle dir (see ScratchDir.shm): ext4 writeback
+      // contention between scale points otherwise rides into the x10/x30
+      // tail ratios as phantom superlinearity
+      graft.core.ScratchDir.shm("graft-shuffle").map("spark.local.dir" -> _).toSeq ++ Seq(
+        // x1000 points on the heap-bound pipelines can stall the whole JVM
+        // in GC for minutes at a time; at the default 120 s heartbeat
+        // timeout the local executor gets "removed" mid-pause and the run
+        // dies in an RPC storm (measured: a 175 s pause killed the r11
+        // gap_fill x1000 sweep). The pause still lands in the rep wall time
+        // and gc_ms — these only keep a single-JVM soak alive through it.
+        "spark.network.timeout" -> "600s",
+        "spark.executor.heartbeatInterval" -> "60s"): _*)
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -116,18 +113,12 @@ object ScaleSoak {
       val toks = corpus(n)
         .select(col("doc_id"), graft.functions.TextFunctions.tokenCount(col("text"))
           .cast("long").as("n_tokens"))
-      graft.operators.PrefixSum.exclusive(toks, "doc_id", "n_tokens", cpus.toInt)
+      graft.operators.PrefixSum.exclusive(toks, "doc_id", "n_tokens", cpus)
         .select(col("doc_id"), (col("cum") / 512).cast("long").as("seq_id"))
         .groupBy("seq_id").count().count()
     }
 
-    val tileGen = udf { (id: Long) =>
-      val m = 64 * 64 * 64
-      val a = new Array[Boolean](m)
-      var i = 0
-      while (i < m) { a(i) = ((id * 31 + i * 7) % 5) != 0; i += 1 }
-      a
-    }
+    val tileGen = udf((id: Long) => Bench.maskData(id, 64 * 64 * 64))
     def erodeRun(n: Int): Long = {
       import spark.implicits._
       val tiles = spark.range(64L * n).select(
@@ -175,13 +166,7 @@ object ScaleSoak {
       graft.operators.DistributedLabel.apply3(tiles, 64, Array(2 * n, 2, 2))(spark).count()
     }
 
-    val sliceGen = udf { (id: Long) =>
-      val m = 65536
-      val a = new Array[Double](m)
-      var i = 0
-      while (i < m) { a(i) = ((id * 1315423911L + i * 2654435761L) & 0xffff) * 1.5e-5; i += 1 }
-      a
-    }
+    val sliceGen = udf((id: Long) => Bench.sliceData(id, 65536))
     def zoomRun(n: Int): Long = {
       import spark.implicits._
       val slices = spark.range(256L * n).select(
@@ -260,7 +245,7 @@ object ScaleSoak {
           .agg(sum(when(col("cn") > 256, 1L).otherwise(0L)).as("dropped"),
             sum(col("cn")).as("rows")).collect()(0)
         if (agg.getLong(0) > 0)
-          println(s"""{"semdedup_dropped_cells": ${agg.getLong(0)}, "scale": $n}""")
+          println(Harness.json(JObject("semdedup_dropped_cells" -> JLong(agg.getLong(0)), "scale" -> JInt(n))))
         agg.getLong(1)
       } finally {
         sq.set("spark.sql.autoBroadcastJoinThreshold", saved._1)
@@ -433,8 +418,6 @@ object ScaleSoak {
     // self-join to shuffle — a one-time step in shuffle bytes); the
     // 10× → 30× tail ratio is the clean linearity measurement past it.
     // Quadratic behavior would show tail ratios near 9, linear near 3.
-    val out = new StringBuilder
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // SPARK_GRAFT_SOAK_SCALES=1,10,100 overrides the default sweep (e.g.
     // an x100 linearity point on the dedup pipelines); the tail ratio is
     // always computed from the LAST TWO points, with "linear" = the ratio
@@ -465,8 +448,7 @@ object ScaleSoak {
     // pipeline's sweep and stamp it next to the tail ratios, so a
     // superlinear tail can be read against the load it actually ran
     // under. quiet-wait like Bench, bounded.
-    val quietTarget = cpus.toInt * 0.62
-    val maxWaits = sys.env.getOrElse("SPARK_GRAFT_QUIET_WAITS", "4").toInt
+    val quietTarget = cpus * 0.62
     val parts = pipelines.map { case (name, run) =>
       // Inter-pipeline hygiene (the Bench op-section convention): the
       // pipelines persist corpus replicas and operator state that nothing
@@ -479,13 +461,7 @@ object ScaleSoak {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       docs0.persist(); emb0.persist(); ev0.persist()
-      var eff = graft.core.HostProbe.effectiveCores(cpus.toInt)._1
-      var waits = 0
-      while (eff < quietTarget && waits < maxWaits) {
-        Thread.sleep(20000)
-        eff = graft.core.HostProbe.effectiveCores(cpus.toInt)._1
-        waits += 1
-      }
+      val ((eff, _, _), waits) = Harness.awaitQuiet(cpus, quietTarget, maxWaits, 20000, 30000000L)
       // best-of-2 per scale point, BOTH reps recorded: an r9 session
       // measured the SAME x30 zoom at 68 / 18.6 / 15.8 / 4.5 s on
       // consecutive in-session reps (codegen/JIT/heap-growth warm-up
@@ -508,39 +484,42 @@ object ScaleSoak {
         // comparable. Shuffle BYTES are partition-count independent, so
         // the tail ratios still measure the plan, not the conf.
         spark.conf.set("spark.sql.shuffle.partitions",
-          math.min(512, cpus.toInt * math.max(1, n / 100)).toString)
+          math.min(512, cpus * math.max(1, n / 100)).toString)
         val a = timed(run(n)); val b = timed(run(n))
-        val effPt = graft.core.HostProbe.effectiveCores(cpus.toInt, 10000000L)._1
+        val effPt = graft.core.HostProbe.effectiveCores(cpus, 10000000L)._1
         n -> ((if (b._1 < a._1) (b, a._1) else (a, b._1)), effPt)
       }
-      spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      val effPost = graft.core.HostProbe.effectiveCores(cpus.toInt)._1
-      val ptJson = pts.map { case (n, (((sec, r, w, rows, gc, spill), other), effPt)) =>
-        s""""x$n":{"sec":${fmt(sec)},"sec_other_rep":${fmt(other)},"shuffle_read":$r,"shuffle_write":$w,"rows":$rows,"gc_ms":$gc,"spill_bytes":$spill,"eff":${fmt(effPt)}}"""
+      spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
+      val effPost = graft.core.HostProbe.effectiveCores(cpus)._1
+      val ptFields = pts.map { case (n, (((sec, r, w, rows, gc, spill), other), effPt)) =>
+        s"x$n" -> JObject("sec" -> num(sec, 3), "sec_other_rep" -> num(other, 3),
+          "shuffle_read" -> JLong(r), "shuffle_write" -> JLong(w), "rows" -> JLong(rows),
+          "gc_ms" -> JLong(gc), "spill_bytes" -> JLong(spill), "eff" -> num(effPt, 3))
       }
       val (_, (((sA, rA, wA, _, _, _), _), _)) = pts(pts.size - 2)
       val (_, (((sB, rB, wB, _, _, _), _), _)) = pts(pts.size - 1)
-      val tail =
-        s""""tail_time_ratio":${fmt(sB / sA)},"tail_shuffle_ratio":${fmt((rB + wB).toDouble / math.max(1L, rA + wA))},""" +
-        s""""eff_pre":${fmt(eff)},"eff_post":${fmt(effPost)},"quiet_waits":$waits"""
-      val frag = s""""$name":{${(ptJson :+ tail).mkString(",")}}"""
+      val rec = JObject(ptFields.toList ++ List(
+        "tail_time_ratio" -> num(sB / sA, 3),
+        "tail_shuffle_ratio" -> num((rB + wB).toDouble / math.max(1L, rA + wA), 3),
+        "eff_pre" -> num(eff, 3), "eff_post" -> num(effPost, 3), "quiet_waits" -> JInt(waits)))
       // incremental durability: a sweep this long (the x100 shape runs
       // ~1 h) must not lose every completed pipeline to one late failure
       // — the per-pipeline record lands on stderr the moment it exists
-      System.err.println(s"[soak] $frag")
-      frag
+      System.err.println(s"[soak] ${Harness.json(JString(name))}:${Harness.json(rec)}")
+      name -> rec
     }
     // heap in the header (r10 verdict item 5): the heap-bound pipelines'
     // x1000 points are only comparable across rounds when the JVM size
     // they ran under is in the artifact, not in a side note
     val heapG = Runtime.getRuntime.maxMemory >> 30
-    out ++= s"""{"sf":"$sfDir","scales":[${scales.mkString(",")}],"cores":$cpus,"heap_g":$heapG,${parts.mkString(",")}}"""
+    val out = Harness.json(JObject(List(
+      "sf" -> JString(sfDir), "scales" -> JArray(scales.map(JInt(_)).toList),
+      "cores" -> JInt(cpus), "heap_g" -> JLong(heapG)) ++ parts))
     try {
       val soakOut = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_r8.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(soakOut),
-        (out.toString + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(soakOut), (out + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
-    println(out.toString)
+    println(out)
     spark.stop()
   }
 }

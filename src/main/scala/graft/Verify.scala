@@ -1,26 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import graft.core.Harness
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** oracle_sql.json: query name to oracle SQL. Builder-authored SQL may
+    * hold tabs, CRs and quotes; each is escaped so the driver's json.load
+    * never fails and silently zeroes the round's correctness. */
+  private[graft] def oracleJson(sql: Iterable[(String, String)]): String =
+    Harness.json(JObject(sql.map { case (k, v) => k -> JString(v) }.toList))
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd+ args: run only the named queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Compatibility shim for NANOS-era testdata only: surfaces
-      // TIMESTAMP(NANOS) parquet as ns-longs. The current testdata writes
-      // TIMESTAMP(MICROS); T.normTs handles that era, so nothing relies on
-      // this conf — it just keeps both encodings readable.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify", Harness.cores())
     new java.io.File(outDir).mkdirs()
     // A query that throws must STILL surface in the driver's artifact — a
     // gate you can silently fall out of is not a gate. On failure we write a
@@ -59,27 +54,13 @@ object Verify {
     }
     if (failed.nonEmpty)
       Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
-        failed.sorted.map(n => "\"" + n + "\"").mkString("[", ",", "]"))
+        Harness.json(JArray(failed.sorted.map(JString(_)).toList)))
     else Files.deleteIfExists(Paths.get(s"$outDir/verify_errors.json"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // subset runs dump only the selected oracles too — otherwise
     // check_oracle.py over a partial output dir reports every skipped
     // query as "spark output missing"
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter { case (k, _) => only.isEmpty || only(k) }))
     spark.stop()
   }
 }

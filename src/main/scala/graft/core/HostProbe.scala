@@ -8,7 +8,9 @@ package graft.core
   * turbo clocks while the aggregate runs at all-core clocks, so the idle
   * ceiling here is ~0.65-0.70 of configured, not 1.0; `aggRate`
   * (iters/ns, frequency-honest) rides alongside so artifacts can
-  * normalize without the turbo-biased ratio. */
+  * normalize without the turbo-biased ratio. Harnesses that wait for a
+  * quiet host do so through the one probe/sleep/re-probe loop,
+  * [[Harness.awaitQuiet]]. */
 object HostProbe {
   def effectiveCores(threads: Int): (Double, Double, Double) =
     effectiveCores(threads, 30000000L)

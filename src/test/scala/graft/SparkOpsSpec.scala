@@ -11,15 +11,7 @@ object SharedSpark {
     // the session lives until the test JVM exits, and so does its warehouse
     val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
     sys.addShutdownHook(graft.core.ScratchDir.delete(warehouse))
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .getOrCreate()
+    graft.core.Harness.session("graft-test", 4, "spark.sql.warehouse.dir" -> warehouse.toString)
   }
 }
 
